@@ -1,7 +1,7 @@
-"""Managed-table lifecycle helper shared by the persisted-store
-operators (the bucketed corpus MinHash bands store; the partitioned
-corpus semantic-cells store uses these drops plus its own
-view-pointer lifecycle in operators/similarity.py).
+"""Managed-table lifecycle helpers for the one metastore-backed store:
+the bucketed corpus MinHash bands store (operators/dedup.py). The
+path-based stores (IVF-PQ index, corpus cells) publish through
+operators/_publish.py instead and never touch the metastore.
 
 A managed-table directory can outlive the metastore that created it
 (each session gets a fresh local metastore); ``saveAsTable`` refuses to
@@ -15,21 +15,17 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+    delete_path,
+    hadoop_fs,
+)
+
 __all__ = ["drop_managed_table", "compact_bucketed_store", "store_file_stats"]
 
 
 def drop_managed_table(spark: SparkSession, table_name: str) -> None:
     """Drop ``table_name`` if present and delete its directory ONLY when
     the table is (or defaults to) MANAGED — see module docstring."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _delete_dir(path_str: str) -> None:
-        p = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = p.getFileSystem(hconf)
-        if fs.exists(p):
-            fs.delete(p, True)
-
     if spark.catalog.tableExists(table_name):
         # Known to THIS metastore: resolve real location/type from the
         # catalog (correct for qualified names and non-default
@@ -41,14 +37,14 @@ def drop_managed_table(spark: SparkSession, table_name: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
         if managed:
             for loc in locs:
-                _delete_dir(loc)
+                delete_path(spark, loc)
     elif table_name.isidentifier():
         # Not in the metastore: the only dir we may own is the default
         # managed location of an UNQUALIFIED simple name directly under
         # the warehouse root — for qualified/exotic names no path is
         # derivable, so nothing is deleted.
         warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-        _delete_dir(f"{warehouse}/{table_name.lower()}")
+        delete_path(spark, f"{warehouse}/{table_name.lower()}")
 
 
 def _table_location(spark: SparkSession, table_name: str) -> str:
@@ -65,10 +61,7 @@ def store_file_stats(spark: SparkSession, table_name: str) -> dict:
     watches. Every ``insertInto`` append adds one file per bucket per
     task, so a continuously-appended store trends toward many tiny
     files until compacted."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(_table_location(spark, table_name))
-    fs = root.getFileSystem(hconf)
+    _, fs, root = hadoop_fs(spark, _table_location(spark, table_name))
     n_files, n_bytes = 0, 0
     it = fs.listFiles(root, True)
     while it.hasNext():
@@ -83,9 +76,8 @@ def store_file_stats(spark: SparkSession, table_name: str) -> dict:
 def compact_bucketed_store(spark: SparkSession, table_name: str) -> dict:
     """Rewrite a bucketed store in place, collapsing the per-append
     small files down to ONE file per bucket — the maintenance twin of
-    the landing table's ``compact_partition``, for the corpus-bands /
-    corpus-cells stores whose O(batch) appends each add a file per
-    bucket.
+    the landing table's ``compact_partition``, for the corpus-bands
+    store whose O(batch) appends each add a file per bucket.
 
     The bucket spec (count, columns, sort columns) is read back from
     the catalog so the compacted layout is bit-compatible with the

@@ -412,7 +412,7 @@ def incremental_dedup_batch(
     # frame at 100 TB costs more than two column-pruned parquet passes
     # collision-safe internal name: a caller's own "_sha" column must
     # pass through unchanged (deterministic, not uuid-suffixed, so
-    # scoped_persist's plan-identity cache still hits across calls)
+    # repeated calls build identical plans)
     # compare case-INSENSITIVELY: Spark column resolution is
     # case-insensitive by default, so a caller's "_SHA" would collide
     # with our "_sha" even though the strings differ

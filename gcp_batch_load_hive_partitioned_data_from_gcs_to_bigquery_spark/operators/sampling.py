@@ -155,10 +155,7 @@ def temperature_weights(
     1-row totals: nothing here scales with corpus volume. The per-domain
     aggregate is PERSISTED (bounded, domain-count-sized): its two
     consumers (the totals aggregate, the threshold projection) would
-    each re-scan the corpus otherwise — and because scoped_persist
-    serves identical plans from the live cache, a caller that derives
-    weights twice (e.g. :func:`temperature_mix` after an explicit
-    weights audit) still pays ONE corpus scan.
+    each re-scan the corpus otherwise.
     """
     from ._cache import scoped_persist
 

@@ -17,13 +17,26 @@ corpus is never collected.
 from __future__ import annotations
 
 import json
-import re
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.snapshots import _fs
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+    copy_tree,
+    data_file_count,
+    delete_path,
+    entry_sweep,
+    live_root,
+    next_version,
+    numbered_dirs,
+    path_exists,
+    publish,
+    read_small_file,
+    vacuum,
+    write_small_file,
+)
 
 
 def _dot(a, b):
@@ -595,35 +608,24 @@ def _pq_encode_kernel(
     return _kernel, out_schema
 
 
-def _load_pq_meta(spark: SparkSession, index_path: str) -> dict | None:
-    """The index's layout metadata (`_quantizer/meta.json`, stamped by
-    :func:`build_ivf_pq_index`) via one metadata-only stat + one small
-    read — never a data-directory listing. ``None`` for an index built
-    before the stamp existed. The stat is an EXACT-path ``fs.exists``
-    (not globStatus — an index_path containing glob metacharacters
-    must probe literally, r15 ADVICE), and unparseable JSON (a torn
-    stamp from a pre-atomic-write crash) degrades to ``None`` — the
-    callers' root-schema fallback — instead of failing every
-    subsequent read forever."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.snapshots import _read_small_file
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import _path_exists
-
-    # resolve the live snapshot first (idempotent when the caller
-    # already pinned one — internal callers do, keeping quantizer and
-    # cells on the same version; external callers may pass the root)
-    meta_path = f"{_live_index_root(spark, index_path)}/_quantizer/meta.json"
-    if not _path_exists(spark, meta_path):
-        return None
+def _load_pq_meta(spark: SparkSession, index_path: str) -> dict:
+    """The snapshot's layout metadata (``_quantizer/meta.json``) via one
+    small read — never a data-directory listing. Resolves the live
+    snapshot (idempotent on a pinned one). The stamp is written once
+    per snapshot, atomically, by build or retrain, and compact copies
+    it verbatim — nothing rewrites it in place — so a missing or
+    unparseable stamp is external damage and raises a repair-oriented
+    error instead of degrading to a guess."""
+    meta_path = f"{live_root(spark, index_path)}/_quantizer/meta.json"
     try:
-        return json.loads(_read_small_file(spark, meta_path))
-    except Exception:
-        # ANY failure to read or parse degrades to None (the callers'
-        # root-schema fallback), not just torn JSON: a reader racing an
-        # append's atomic re-stamp can pass the fs.exists probe and then
-        # lose the delete→rename window — fs.open raises
-        # FileNotFoundException through py4j, which is a transient
-        # "not stamped right now", not an index error (r16 ADVICE).
-        return None
+        return json.loads(read_small_file(spark, meta_path))
+    except (Py4JJavaError, ValueError) as e:
+        raise ValueError(
+            f"missing or corrupt IVF-PQ meta stamp {meta_path} "
+            f"({type(e).__name__}) — restore it to the build's "
+            '{"store_vectors", "nlist", "m", "n_rows"} JSON, or rebuild '
+            "the index with build_ivf_pq_index"
+        ) from None
 
 
 def _load_pq_quantizer(spark: SparkSession, index_path: str):
@@ -632,7 +634,7 @@ def _load_pq_quantizer(spark: SparkSession, index_path: str):
     Resolves the live snapshot (idempotent on a pinned root)."""
     import numpy as np
 
-    qroot = f"{_live_index_root(spark, index_path)}/_quantizer"
+    qroot = f"{live_root(spark, index_path)}/_quantizer"
     cent_rows = spark.read.parquet(f"{qroot}/centroids").orderBy("cell").collect()
     cents = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
     book_rows = spark.read.parquet(f"{qroot}/codebooks").orderBy("s", "code").collect()
@@ -668,38 +670,13 @@ def append_ivf_pq_index(
     maintenance family: an append racing a compact/retrain publish
     would land rows in the snapshot the publish is about to supersede
     and lose them at the pointer flip — same contract as every
-    file-level table maintenance protocol (and why the r17 rename-aside
-    predecessor's append-vs-crashed-swap hazard is structurally gone:
-    appends never recreate directories a recovery pass could mistake
-    for a completed swap; there are no recovery renames at all)."""
+    file-level table maintenance protocol."""
     spark = new_vectors.sparkSession
-    root = index_path
-    index_path = _live_index_root(spark, index_path)  # resolve ONCE
-    cents, books, m, sub = _load_pq_quantizer(spark, index_path)
-    # match the live index's layout: a refine-store index (c_vec column,
-    # build_ivf_pq_index store_vectors=True) appends vectors too. The
-    # build stamps store_vectors into _quantizer/meta.json so this is
-    # one stat+read; for a pre-meta index the fallback root-schema read
-    # (O(nlist) listing) runs ONCE and stamps the meta it learned, so
-    # only the first append of an old index pays it.
-    meta = _load_pq_meta(spark, index_path)
-    if meta is not None:
-        keep_vec = bool(meta.get("store_vectors"))
-    else:
-        keep_vec = "c_vec" in spark.read.parquet(index_path).columns
-        from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.snapshots import _write_small_file
-
-        # stamp the SAME schema the build stamps (store_vectors, nlist,
-        # m) — nlist/m recovered from the already-loaded quantizer — so
-        # a reader of meta["nlist"]/meta["m"] never KeyErrors on a
-        # pre-meta index that has been appended once (r15 ADVICE)
-        _write_small_file(
-            spark,
-            f"{index_path.rstrip('/')}/_quantizer/meta.json",
-            json.dumps(
-                {"store_vectors": keep_vec, "nlist": int(cents.shape[0]), "m": int(m)}
-            ),
-        )
+    live = live_root(spark, index_path)  # resolve ONCE
+    cents, books, m, sub = _load_pq_quantizer(spark, live)
+    # a refine-store index (c_vec column, build_ivf_pq_index
+    # store_vectors=True) appends vectors too
+    keep_vec = bool(_load_pq_meta(spark, live)["store_vectors"])
     kernel, out_schema = _pq_encode_kernel(
         cents, books, m, sub, id_col, vec_col, keep_vec=keep_vec
     )
@@ -718,35 +695,28 @@ def append_ivf_pq_index(
         # sort above the vec_id order
         .write.partitionBy("cell")
         .mode("append")
-        .parquet(index_path)
+        .parquet(live)
     )
-    return root
+    return index_path
 
 
-def _list_cell_dirs(spark: SparkSession, index_path: str) -> list[str]:
-    """The index's ``cell=N`` partition directories via ONE exact-path
-    ``listStatus`` of the root (no glob interpretation of a
-    user-supplied index_path; ``_quantizer/`` and dot/underscore files
-    are skipped). O(nlist) driver-side metadata — a MAINTENANCE-time
-    listing (build/compact/audit), never on the query path, which
-    stays directory-enumerated via :func:`_read_index_cells`."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(index_path.rstrip("/"))
-    fs = root.getFileSystem(conf)
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        # STRICT cell=<int> match: anything else under the root
-        # (foreign dirs, partial partition names) is ignored instead
-        # of crashing the int sort below
-        if st.isDirectory() and name.startswith("cell="):
-            try:
-                int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            out.append(f"{index_path.rstrip('/')}/{name}")
-    return sorted(out, key=lambda p: int(p.rsplit("=", 1)[1]))
+def _list_cell_dirs(spark: SparkSession, live: str) -> list[str]:
+    """A resolved snapshot's ``cell=N`` partition directories, by cell —
+    one exact-path listing, O(nlist) driver-side metadata. A
+    MAINTENANCE-time listing (build/compact/audit), never on the query
+    path, which stays directory-enumerated via :func:`_read_index_cells`."""
+    return [p for _, p in sorted(numbered_dirs(spark, live, "cell=").items())]
+
+
+def _cell_file_stats(spark: SparkSession, live: str) -> dict:
+    """{n_cells, n_files, max_files_per_cell} of a resolved snapshot of
+    either cell-partitioned store — metadata-only."""
+    counts = [data_file_count(spark, d) for d in _list_cell_dirs(spark, live)]
+    return {
+        "n_cells": len(counts),
+        "n_files": sum(counts),
+        "max_files_per_cell": max(counts, default=0),
+    }
 
 
 def ivf_pq_index_file_stats(spark: SparkSession, index_path: str) -> dict:
@@ -759,336 +729,15 @@ def ivf_pq_index_file_stats(spark: SparkSession, index_path: str) -> dict:
     cover the LIVE snapshot only (retained grace copies and crashed
     stages are retention concerns, not file health). Returns
     {n_cells, n_files, max_files_per_cell}."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    n_files, max_per_cell = 0, 0
-    cell_dirs = _list_cell_dirs(spark, _live_index_root(spark, index_path))
-    for d in cell_dirs:
-        p = jvm.org.apache.hadoop.fs.Path(d)
-        fs = p.getFileSystem(conf)
-        n = sum(
-            1
-            for st in fs.listStatus(p)
-            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-        )
-        n_files += n
-        max_per_cell = max(max_per_cell, n)
-    return {
-        "n_cells": len(cell_dirs),
-        "n_files": n_files,
-        "max_files_per_cell": max_per_cell,
-    }
-
-
-_VERSION_POINTER = "_VERSION"
-
-
-def _index_version(spark: SparkSession, index_path: str) -> int | None:
-    """The committed snapshot version from ``{root}/_VERSION`` — the
-    index's single source of truth (r17 verdict task 1: the publish
-    pattern the semantic-cells store already used, applied to the
-    index layout). ``None`` when the pointer is absent: a brand-new
-    path, a pre-versioned legacy tree, or an ALREADY-RESOLVED
-    ``v=N`` directory (no pointer lives inside a version). A torn
-    pointer cannot exist — :func:`snapshots._write_small_file` stages
-    to a temp name and renames, so a reader sees the old content, the
-    new content, or (inside the delete→rename microwindow) no file;
-    the caller retries the missing case once."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.snapshots import _read_small_file
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import _path_exists
-
-    ptr = f"{index_path.rstrip('/')}/{_VERSION_POINTER}"
-    if not _path_exists(spark, ptr):
-        return None
-    try:
-        content = _read_small_file(spark, ptr)
-    except Exception:
-        # the open itself can lose the delete→rename microwindow after
-        # the exists probe passed — same "missing right now" semantics
-        return None
-    try:
-        return int(json.loads(content)["v"])
-    except Exception:
-        # content READ fine but does not parse: external corruption, not
-        # a publish race (_write_small_file is atomic — torn content
-        # cannot come from this code). Coercing this to "missing" would
-        # route callers to "re-run build", whose first publish sweeps
-        # every committed snapshot (prev=None) — destroying intact data
-        # over an 8-byte pointer. Raise the repairable truth instead.
-        raise ValueError(
-            f"corrupt {_VERSION_POINTER} pointer at {ptr}: {content!r} — "
-            'restore it to {"v": N} naming the live snapshot directory; '
-            "the v=N snapshots themselves are untouched (do NOT rebuild)"
-        )
-
-
-def _index_version_dirs(spark: SparkSession, index_path: str) -> dict:
-    """{version: path} for the ``v=N`` snapshot directories under the
-    index root — one exact-path ``listStatus`` (no glob interpretation
-    of a user-supplied path), O(#versions) = O(2) in steady state.
-    Empty when the root itself does not exist."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    base = index_path.rstrip("/")
-    root = jvm.org.apache.hadoop.fs.Path(base)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return {}
-    out = {}
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v="):
-            try:
-                out[int(name.split("=", 1)[1])] = f"{base}/{name}"
-            except ValueError:
-                continue  # foreign dir; ignore rather than crash
-    return out
-
-
-def _live_index_root(spark: SparkSession, index_path: str) -> str:
-    """Resolve the index path to its LIVE snapshot directory
-    (``{root}/v=P`` per the ``_VERSION`` pointer). Resolution is the
-    reader-side half of the publish protocol: every operation resolves
-    ONCE at entry and uses the resolved root for the quantizer AND the
-    cells, so a publish landing mid-operation can never mix two
-    versions' artifacts. Idempotent — a path with no pointer and no
-    ``v=N`` children (an already-resolved snapshot dir, or a
-    pre-versioned legacy tree) resolves to itself, so internal helpers
-    may re-resolve a resolved root at the cost of one stat. A missing
-    pointer OVER version directories is re-probed once (the atomic
-    pointer rewrite's delete→rename microwindow can only surface as
-    "missing"), then raised — it means a crashed initial build, which
-    a re-run of :func:`build_ivf_pq_index` repairs."""
-    base = index_path.rstrip("/")
-    v = _index_version(spark, base)
-    if v is not None:
-        return f"{base}/v={v}"
-    # no pointer: an already-resolved ``v=N`` snapshot dir re-resolves
-    # to itself by NAME alone — ONE stat, and never a listing, which
-    # would put an O(nlist) listStatus on the query path every helper
-    # re-resolution (nlist ∝ corpus; the corpus-independent-listing
-    # contract of _read_index_cells). A root the user literally named
-    # ``v=<int>`` without a pointer inside is indistinguishable and
-    # also resolves to itself, failing later with a clear
-    # missing-quantizer error.
-    tail = base.rsplit("/", 1)[-1]
-    if tail.startswith("v=") and tail[2:].isdigit():
-        return base
-    # a pre-versioned LEGACY tree (or a snapshot dir under an odd name)
-    # carries its quantizer at the root: one more stat resolves it with
-    # no listing — and it wins over any stray v=N garbage beside it (a
-    # crashed first migrate must not brick reads of the intact legacy
-    # tree)
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import _path_exists
-
-    if _path_exists(spark, f"{base}/_quantizer"):
-        return base
-    if _index_version_dirs(spark, base):
-        # version dirs, no pointer, no legacy tree: either the atomic
-        # pointer rewrite's delete→rename microwindow (the spaced
-        # retries see it land) or a crash before the first publish
-        # (raise — build_ivf_pq_index repairs it)
-        import time as _time
-
-        for backoff in (0.05, 0.2):
-            _time.sleep(backoff)
-            v = _index_version(spark, base)
-            if v is not None:
-                return f"{base}/v={v}"
-        raise ValueError(
-            f"{base} has v=N snapshot directories but no committed "
-            f"{_VERSION_POINTER} pointer (crashed before its first "
-            "publish) — re-run build_ivf_pq_index"
-        )
-    return base
-
-
-def _stamp_index_version(spark: SparkSession, index_path: str, v: int) -> None:
-    """Atomically point ``{root}/_VERSION`` at snapshot ``v`` — THE
-    publish step: one small-file rename, after which every new
-    resolution sees the new snapshot. Nothing else moves."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.snapshots import _write_small_file
-
-    _write_small_file(
-        spark, f"{index_path.rstrip('/')}/{_VERSION_POINTER}", json.dumps({"v": int(v)})
-    )
-
-
-def _next_index_version(spark: SparkSession, index_path: str) -> int:
-    """The next unused snapshot number: above every on-disk ``v=N``
-    (committed or crashed-stage garbage) and the committed pointer."""
-    cur = _index_version(spark, index_path)
-    dirs = _index_version_dirs(spark, index_path)
-    return max(list(dirs) + [cur or 0]) + 1
-
-
-def _entry_sweep(spark: SparkSession, index_path: str, cur) -> list:
-    """Maintenance-entry reclamation: keep the live snapshot and the
-    ACTUAL previous on-disk version (the reader grace copy), delete
-    everything else — crashed stages above the pointer and versions
-    aged past the grace. "Previous" is the highest on-disk version
-    below the pointer, NOT ``cur-1`` by arithmetic: version numbers
-    skip past crashed stages (``_next_index_version``), so a numeric
-    guess could delete the real grace copy out from under an in-flight
-    reader while leaving nothing it meant to keep."""
-    if cur is None:
-        return []
-    prevs = [v for v in _index_version_dirs(spark, index_path) if v < cur]
-    keep = {cur} | ({max(prevs)} if prevs else set())
-    return _sweep_index_versions(spark, index_path, keep)
-
-
-def _sweep_index_versions(spark: SparkSession, index_path: str, keep: set) -> list:
-    """Delete every ``v=N`` snapshot directory whose version is not in
-    ``keep`` — the ONE reclamation path for the whole maintenance
-    family (r17 verdict task 1: `_reclaim_cell_swaps` and
-    `_recover_root_swap` collapse into this sweep). Uncommitted
-    versions above the pointer are crashed staged builds; versions
-    below ``pointer-1`` have aged past the one-publish reader grace.
-    Returns the versions removed."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    removed = []
-    for v, path in sorted(_index_version_dirs(spark, index_path).items()):
-        if v in keep:
-            continue
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(conf).delete(p, True)
-        removed.append(v)
-    return removed
-
-
-def _publish_index_version(spark: SparkSession, index_path: str, new_v: int):
-    """Commit snapshot ``new_v``: flip the pointer (atomic rename),
-    then sweep every version except {new, previous}. Keeping the
-    PREVIOUS snapshot one more generation is the reader grace the
-    cells store's `_reclaim_old_versions` established: a reader that
-    resolved the old pointer keeps a complete, immutable tree under
-    its feet across this publish (snapshot isolation — the
-    manifest-protocol answer to the r17 ADVICE probe-to-scan TOCTOU).
-    Only a reader slower than TWO consecutive publishes can lose its
-    snapshot — the same retention contract as Delta/Iceberg vacuum.
-    Returns the previous version (None for a first publish)."""
-    prev = _index_version(spark, index_path)
-    _stamp_index_version(spark, index_path, new_v)
-    keep = {new_v} if prev is None else {new_v, prev}
-    _sweep_index_versions(spark, index_path, keep)
-    return prev
+    return _cell_file_stats(spark, live_root(spark, index_path))
 
 
 def vacuum_ivf_pq_index(spark: SparkSession, index_path: str) -> dict:
     """Owner-invoked retention: drop every snapshot except the live
-    one (the grace copy :func:`_publish_index_version` retains is for
-    in-flight readers; once the owner knows readers have drained —
-    e.g. a maintenance-cron tick later — this reclaims the disk).
-    Returns {version, removed}."""
-    base = index_path.rstrip("/")
-    cur = _index_version(spark, base)
-    if cur is None:
-        raise ValueError(f"no committed {_VERSION_POINTER} pointer under {base}")
-    removed = _sweep_index_versions(spark, base, {cur})
-    return {"version": cur, "removed": removed}
-
-
-def migrate_ivf_pq_index(spark: SparkSession, index_path: str) -> dict:
-    """One-time in-place migration of a pre-versioned (r17-layout)
-    index — cells and ``_quantizer`` directly under the root — onto the
-    version-pointer snapshot layout. The ONE publish in the protocol
-    without a retained previous snapshot: the legacy tree is deleted
-    after the pointer flip (it cannot be retained — it lives at the
-    names the root itself owns), so the caller must DRAIN CONCURRENT
-    READERS first; every subsequent publish restores the one-generation
-    grace contract. Steps:
-
-    1. reconcile any r17 rename-aside crash state: a cell parked under
-       ``{root}/.__old/`` whose live dir is missing is restored (the
-       r17 protocol's guarantee, honored across the upgrade); a parked
-       cell whose live dir exists is a stale aside and is dropped;
-    2. stage snapshot v=N from the legacy cells (the compactor's
-       clustering write — the migrated index also comes out at one
-       sorted file per cell) and copy the quantizer verbatim;
-    3. publish by pointer flip, then delete the legacy cell dirs and
-       ``{root}/_quantizer``.
-
-    Idempotent: re-run after a crash at any step and it resumes —
-    before the flip the legacy tree is still the (only) live index and
-    the dead stage is swept; after the flip the pointer wins and only
-    the leftover legacy cleanup re-runs. Returns {version, migrated,
-    n_rows|None, legacy_dirs_removed}."""
-    from pyspark.sql import Observation
-
-    base = index_path.rstrip("/")
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _delete(path_str: str) -> bool:
-        pth = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = pth.getFileSystem(conf)
-        if fs.exists(pth):
-            fs.delete(pth, True)
-            return True
-        return False
-
-    cur = _index_version(spark, base)
-    if cur is not None:
-        # already versioned: resume a crashed post-flip cleanup
-        removed = sum(_delete(d) for d in _list_cell_dirs(spark, base))
-        removed += _delete(f"{base}/_quantizer")
-        removed += _delete(f"{base}/.__old")
-        return {
-            "version": cur,
-            "migrated": False,
-            "n_rows": None,
-            "legacy_dirs_removed": int(removed),
-        }
-
-    # 1. r17 crash reconciliation (the removed _reclaim_cell_swaps
-    # contract, honored one last time across the layout upgrade)
-    aside = f"{base}/.__old"
-    japath = jvm.org.apache.hadoop.fs.Path(aside)
-    fs = japath.getFileSystem(conf)
-    if fs.exists(japath):
-        for d in _list_cell_dirs(spark, aside):
-            name = d.rsplit("/", 1)[1]
-            live_p = jvm.org.apache.hadoop.fs.Path(f"{base}/{name}")
-            parked = jvm.org.apache.hadoop.fs.Path(d)
-            if fs.exists(live_p):
-                fs.delete(parked, True)  # swap had completed; aside stale
-            elif not fs.rename(parked, live_p):
-                raise IOError(f"restore {parked} -> {live_p} failed")
-        fs.delete(japath, True)
-
-    legacy_dirs = _list_cell_dirs(spark, base)
-    if not legacy_dirs:
-        raise ValueError(f"no legacy cell directories under {base}")
-
-    # 2. stage the first snapshot (clustering write, quantizer verbatim)
-    new_v = _next_index_version(spark, base)
-    target = f"{base}/v={new_v}"
-    obs = Observation("migrate_rows")
-    (
-        spark.read.option("basePath", base)
-        .parquet(*legacy_dirs)
-        .observe(obs, F.count(F.lit(1)).alias("n_rows"))
-        .repartition(F.col("cell"))
-        .sortWithinPartitions("cell", "vec_id")
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(target)
-    )
-    n_rows = int(obs.get["n_rows"])
-    _copy_quantizer(spark, base, target)
-
-    # 3. publish, then drop the legacy tree (readers drained per contract)
-    _publish_index_version(spark, base, new_v)
-    removed = sum(_delete(d) for d in legacy_dirs)
-    _delete(f"{base}/_quantizer")
-    return {
-        "version": new_v,
-        "migrated": True,
-        "n_rows": n_rows,
-        "legacy_dirs_removed": int(removed),
-    }
+    one (the grace copy a publish retains is for in-flight readers;
+    once the owner knows readers have drained — e.g. a maintenance-cron
+    tick later — this reclaims the disk). Returns {version, removed}."""
+    return vacuum(spark, index_path)
 
 
 def read_ivf_pq_index(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1097,27 +746,13 @@ def read_ivf_pq_index(spark: SparkSession, index_path: str) -> DataFrame:
     the ROOT would see every retained snapshot at once). One pointer
     read + one partitioned scan of ``{root}/v=P``; ``_quantizer`` is
     underscore-hidden from the partition discovery."""
-    return spark.read.parquet(_live_index_root(spark, index_path))
-
-
-def _copy_quantizer(spark: SparkSession, src_root: str, dst_root: str) -> None:
-    """Bit-exact filesystem copy of ``{src}/_quantizer`` into the next
-    snapshot (centroids + codebooks + meta.json — metadata-sized).
-    Compaction must carry the quantizer VERBATIM: it is a pure
-    re-layout, and a re-serialisation could perturb nothing yet still
-    invalidate the "bit-identical before/after" contract the
-    ann_ivf_pq_compact oracle pins."""
-    jvm, fs, jsrc = _fs(spark, f"{src_root.rstrip('/')}/_quantizer")
-    jdst = jvm.org.apache.hadoop.fs.Path(f"{dst_root.rstrip('/')}/_quantizer")
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    if not jvm.org.apache.hadoop.fs.FileUtil.copy(fs, jsrc, fs, jdst, False, conf):
-        raise IOError(f"copy {jsrc} -> {jdst} failed")
+    return spark.read.parquet(live_root(spark, index_path))
 
 
 def compact_ivf_pq_index(spark: SparkSession, index_path: str) -> dict:
     """Collapse each cell of a live IVF-PQ index back to ONE
     vec_id-sorted file — the maintenance twin of
-    ``_tables.compact_bucketed_store`` for the inverted-file layout.
+    :func:`compact_corpus_cells` for the inverted-file layout.
 
     Why it exists: :func:`build_ivf_pq_index` establishes a
     one-sorted-file-per-cell contract (probed reads open O(nprobe × Q)
@@ -1132,12 +767,10 @@ def compact_ivf_pq_index(spark: SparkSession, index_path: str) -> dict:
     catalog key ann_ivf_pq_compact pins hash-equality against the
     from-scratch-build oracle).
 
-    Mechanics (r17 verdict task 1 — staged-build + pointer flip, the
-    same publish pattern as the cells store and the reference's
-    WRITE_TRUNCATE partition-decorator swap,
-    ingestion/bigquery_interaction.py:20, applied to index snapshots):
-    after sweeping any crashed prior stage, read the live snapshot's
-    ``cell=N`` dirs (basePath keeps the partition column), re-cluster
+    Mechanics (the versioned publish of operators/_publish.py, shared
+    with the cells store): after sweeping any crashed prior stage, read
+    the live snapshot's ``cell=N`` dirs (basePath keeps the partition
+    column), re-cluster
     with the build's own repartition(cell) +
     sortWithinPartitions(cell, vec_id) — one shuffle of the
     codes(+refine) table, the standard clustering-write cost — writing
@@ -1149,12 +782,12 @@ def compact_ivf_pq_index(spark: SparkSession, index_path: str) -> dict:
 
     * a CRASH at any point leaves the pointer naming a complete
       snapshot — an unfinished v=P+1 is garbage the next maintenance
-      entry sweeps (:func:`_sweep_index_versions`), never something a
+      entry sweeps (``_publish.entry_sweep``), never something a
       reader can resolve;
     * a CONCURRENT reader holds snapshot isolation: it resolved the
       pointer once and reads an immutable tree; the publish retains
       the previous snapshot one more generation
-      (:func:`_publish_index_version`), so even a reader that resolved
+      (``_publish.publish``), so even a reader that resolved
       just before the flip scans to completion. Identical content
       either way — compaction is a pure re-layout.
 
@@ -1175,22 +808,14 @@ def compact_ivf_pq_index(spark: SparkSession, index_path: str) -> dict:
     from pyspark.sql import Observation
 
     base = index_path.rstrip("/")
-    cur = _index_version(spark, base)
-    if cur is None:
-        raise ValueError(
-            f"{base} is not a versioned IVF-PQ index — a pre-versioned "
-            "tree must be migrated first: migrate_ivf_pq_index (its one "
-            "publish has no retained previous snapshot, so drain "
-            "readers before running it)"
-        )
-    live = _live_index_root(spark, base)
+    live = live_root(spark, base)
     # entry sweep: crashed stages (v > pointer) and aged grace copies
-    swept = _entry_sweep(spark, base, cur)
-    before = ivf_pq_index_file_stats(spark, base)
+    swept = entry_sweep(spark, base)
+    before = _cell_file_stats(spark, live)
     cell_dirs = _list_cell_dirs(spark, live)
     if not cell_dirs:
         raise ValueError(f"no cell directories under {live}")
-    new_v = _next_index_version(spark, base)
+    new_v = next_version(spark, base)
     target = f"{base}/v={new_v}"
 
     df = spark.read.option("basePath", live).parquet(*cell_dirs)
@@ -1207,9 +832,11 @@ def compact_ivf_pq_index(spark: SparkSession, index_path: str) -> dict:
         .parquet(target)
     )
     n_rows = int(obs.get["n_rows"])  # measured BY the write job itself
-    _copy_quantizer(spark, live, target)
-    _publish_index_version(spark, base, new_v)
-    after = ivf_pq_index_file_stats(spark, base)
+    # the quantizer (centroids + codebooks + meta.json) is carried
+    # bit-exact: compaction is a pure re-layout
+    copy_tree(spark, f"{live}/_quantizer", f"{target}/_quantizer")
+    publish(spark, base, new_v)
+    after = _cell_file_stats(spark, target)
     return {
         "files_before": before["n_files"],
         "files_after": after["n_files"],
@@ -1236,37 +863,31 @@ def profile_cell_skew(
     BALANCED-CELL budget total/nlist (the FAISS imbalance-factor
     denominator): the max row's skew is the factor by which the
     hottest probed cell exceeds the cost the nlist sizing assumed.
-    nlist comes from the meta stamp (one stat+read); EMPTY cells count
+    nlist comes from the meta stamp (one small read); EMPTY cells count
     in the denominator — r17 fix: a mean over non-empty cells only
     read a fully-degenerate quantizer (every vector in ONE cell, the
     other nlist−1 cells empty → no dirs on disk) as skew 1.0,
     blinding the gauge to exactly the pathology it exists to catch.
-    A pre-meta index (no stamp) falls back to the non-empty count —
-    the old, weaker denominator — rather than failing. A maintenance
+    A maintenance
     loop triggers :func:`retrain_ivf_pq_index` when max skew crosses
     its threshold — see ``ivf_rebalance_needed``. Returns
     (cell, n_vectors, share, skew) ordered hottest-first (ties → cell
     asc)."""
-    live = _live_index_root(spark, index_path)  # resolve ONCE: the scan
+    live = live_root(spark, index_path)  # resolve ONCE: the scan
     # and the meta stamp must come from the same snapshot
     counts = (
         spark.read.parquet(live)
         .groupBy(F.col("cell").cast("int").alias("cell"))
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
-    meta = _load_pq_meta(spark, live)
-    nlist = meta.get("nlist") if meta else None
+    nlist = int(_load_pq_meta(spark, live)["nlist"])
     # global window over the nlist-row aggregate: ONE index scan in the
     # plan (a crossJoin-with-total twin re-derives the counts lineage
     # and scans twice — verified via executedPlan FileScan count); the
     # single-task window is fine because its input is already reduced
     # to one row per non-empty cell
     w_all = W.partitionBy()
-    budget = (
-        F.sum("n_vectors").over(w_all) / F.lit(int(nlist))
-        if nlist
-        else F.avg("n_vectors").over(w_all)
-    )
+    budget = F.sum("n_vectors").over(w_all) / F.lit(nlist)
     cols = [
         F.col("cell"),
         F.col("n_vectors"),
@@ -1321,7 +942,7 @@ def maintain_ivf_pq_index(
     append/compact/skew pieces compose into (the semantic-cells store's
     compact/retrain lifecycle, mapped onto the index layout):
 
-    0. entry sweep (:func:`_sweep_index_versions`, metadata-only):
+    0. entry sweep (``_publish.entry_sweep``, metadata-only):
        crashed staged snapshots (v > pointer) and grace copies older
        than one publish are reclaimed — the single recovery path of
        the version-pointer protocol, so the tick's gauges never see
@@ -1351,16 +972,8 @@ def maintain_ivf_pq_index(
     {compacted: bool, compact_stats: dict|None, retrain_needed: bool,
     retrained: bool, retrain_stats: dict|None, skew: dict, files: dict,
     versions_swept: list}."""
-    base = index_path.rstrip("/")
-    cur = _index_version(spark, base)
-    if cur is None:
-        raise ValueError(
-            f"{base} is not a versioned IVF-PQ index — run "
-            "migrate_ivf_pq_index first (drain readers; its one publish "
-            "retains no previous snapshot)"
-        )
-    swept = _entry_sweep(spark, base, cur)
-    files = ivf_pq_index_file_stats(spark, index_path)
+    swept = entry_sweep(spark, index_path)
+    files = ivf_pq_index_file_stats(spark, index_path)  # raises if unpublished
     compact_stats = None
     if files["max_files_per_cell"] > max_files_per_cell:
         compact_stats = compact_ivf_pq_index(spark, index_path)
@@ -1458,7 +1071,7 @@ def retrain_ivf_pq_index(
       carried-over codebooks, and a re-stamped meta recording the new
       nlist and row count) is written DIRECTLY to the next snapshot
       ``{root}/v=P+1`` — invisible until the one-file ``_VERSION``
-      pointer flip publishes it (r17 verdict task 1). There is no
+      pointer flip publishes it. There is no
       moment without a live root: a reader that resolved v=P keeps a
       complete immutable tree (retained one more generation) and one
       that resolves after the flip gets v=P+1 — full pre-retrain or
@@ -1512,22 +1125,11 @@ def retrain_ivf_pq_index(
     import numpy as np
 
     base = index_path.rstrip("/")
-    cur = _index_version(spark, base)
-    if cur is None:
-        raise ValueError(
-            f"{base} is not a versioned IVF-PQ index — run "
-            "migrate_ivf_pq_index first (drain readers; see its "
-            "docstring for the one-publish-without-grace contract)"
-        )
-    live = _live_index_root(spark, base)
-    _entry_sweep(spark, base, cur)
+    live = live_root(spark, base)
+    entry_sweep(spark, base)
     meta = _load_pq_meta(spark, live)
     cents_old, books, m, sub = _load_pq_quantizer(spark, live)
-    if meta is not None:
-        store_vectors = bool(meta.get("store_vectors"))
-    else:
-        store_vectors = "c_vec" in spark.read.parquet(live).columns
-    if not store_vectors:
+    if not meta["store_vectors"]:
         raise ValueError(
             "retrain_ivf_pq_index needs a refine-store index (c_vec) — "
             "codes are lossy; rebuild from the source corpus with "
@@ -1541,7 +1143,7 @@ def retrain_ivf_pq_index(
         nlist = int(nlist)
     else:
         nlist = derive_ivf_nlist(
-            n_now, nlist_before, (meta or {}).get("n_rows")
+            n_now, nlist_before, meta.get("n_rows")
         )
 
     cell_dirs = _list_cell_dirs(spark, live)
@@ -1563,7 +1165,7 @@ def retrain_ivf_pq_index(
     )
     cents_new = np.array([v for _, v in centroid_rows], dtype=np.float64)
 
-    new_v = _next_index_version(spark, base)
+    new_v = next_version(spark, base)
     target = f"{base}/v={new_v}"
     from pyspark.sql import Observation
 
@@ -1589,7 +1191,7 @@ def retrain_ivf_pq_index(
         {"store_vectors": True, "nlist": int(nlist), "m": int(m), "n_rows": n_rows},
     )
     # staged snapshot is a COMPLETE index — publish by pointer flip
-    _publish_index_version(spark, base, new_v)
+    publish(spark, base, new_v)
     skew_after = ivf_rebalance_needed(spark, index_path, max_skew=max_skew)
     return {
         "nlist_before": nlist_before,
@@ -1623,9 +1225,7 @@ def _write_quantizer(
         ],
         "s int, code int, subvector array<double>",
     ).write.mode("overwrite").parquet(f"{qroot}/codebooks")
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.snapshots import _write_small_file
-
-    _write_small_file(spark, f"{qroot}/meta.json", json.dumps(meta))
+    write_small_file(spark, f"{qroot}/meta.json", json.dumps(meta))
 
 
 def build_ivf_pq_index(
@@ -1654,9 +1254,9 @@ def build_ivf_pq_index(
       ``_quantizer/`` inside the snapshot — underscore-hidden from
       the partitioned scan, self-describing for search;
     * the whole tree lives in a SNAPSHOT directory ``{root}/v=N``
-      named by the one ``{root}/_VERSION`` pointer file (r17 verdict
-      task 1 — the cells store's version-pointer publish applied to
-      the index): build, compact and retrain all stage the next
+      named by the one ``{root}/_VERSION`` pointer file (the versioned
+      publish of operators/_publish.py, shared with the cells store):
+      build, compact and retrain all stage the next
       snapshot invisibly and commit it with one atomic pointer
       rewrite, readers resolve the pointer once per operation and
       hold snapshot isolation across any concurrent publish, and
@@ -1692,7 +1292,7 @@ def build_ivf_pq_index(
     cents = C[:nlist]
 
     base = index_path.rstrip("/")
-    new_v = _next_index_version(spark, base)
+    new_v = next_version(spark, base)
     target = f"{base}/v={new_v}"
     kernel, out_schema = _pq_encode_kernel(
         cents, books, m, sub, id_col, vec_col, keep_vec=store_vectors
@@ -1738,7 +1338,7 @@ def build_ivf_pq_index(
             "n_rows": int(obs.get["n_rows"]),
         },
     )
-    _publish_index_version(spark, base, new_v)
+    publish(spark, base, new_v)
     return index_path
 
 
@@ -1761,7 +1361,7 @@ def ivf_pq_search(
     column-pruned to (vec_id, codes, cell), so a refine-store index's
     c_vec pages are never decoded here). Returns
     (query_id, vec_id, adc_dist, rank) under (adc asc, vec_id asc)."""
-    live = _live_index_root(spark, index_path)  # pin ONE snapshot for
+    live = live_root(spark, index_path)  # pin ONE snapshot for
     # the quantizer load and the cell scans — a publish landing mid-
     # search can never mix two versions' artifacts
     scored = _ivf_pq_adc_scored(
@@ -1799,7 +1399,7 @@ def _ivf_pq_adc_scored(
     import pandas as pd
     from pyspark.sql import types as T
 
-    index_path = _live_index_root(spark, index_path)
+    index_path = live_root(spark, index_path)
     cents, books, m, sub = _load_pq_quantizer(spark, index_path)
 
     q_rows = (
@@ -1889,30 +1489,25 @@ def _read_index_cells(spark: SparkSession, index_path: str, cells: list) -> Data
     A probed cell can be EMPTY (a centroid no corpus vector maps to
     writes no ``cell=N`` dir), so each candidate dir is existence-
     probed first with a metadata-only EXACT-path ``fs.exists``
-    (sources/probe.py ``_path_exists`` — any Hadoop FS, not just
+    (``_publish.path_exists`` — any Hadoop FS, not just
     local; not globStatus, which would interpret ``[{*?`` in a
     user-supplied index_path as glob syntax and silently return
     "missing" → empty search results, r15 ADVICE): O(len(cells)) stat
     calls, still corpus-independent.
 
-    PUBLISH-WINDOW SAFETY (r17 verdict task 1): resolution pins ONE
-    snapshot (``_live_index_root``), and snapshots are immutable once
+    PUBLISH-WINDOW SAFETY: resolution pins ONE snapshot
+    (``_publish.live_root``), and snapshots are immutable once
     published — a compaction or retrain landing between this probe and
     the Spark scan writes a NEW ``v=N`` directory and flips the
     pointer, never touching the resolved one, which the publish
-    retains a full extra generation for exactly this reader
-    (:func:`_publish_index_version`). The r17 rename-aside protocol
-    needed a parked-name fallback plus a re-probe and still had a
-    probe-to-scan TOCTOU (r17 ADVICE); the snapshot read needs
-    neither. Callers that already hold a resolved root pay one no-op
-    stat (resolution is idempotent)."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import _path_exists
-
-    base = _live_index_root(spark, index_path)
+    retains a full extra generation for exactly this reader. Callers
+    that already hold a resolved root pay no I/O for the re-resolve
+    (resolution is idempotent by name)."""
+    base = live_root(spark, index_path)
     paths = []
     for c in cells:
         p = f"{base}/cell={int(c)}"
-        if _path_exists(spark, p):
+        if path_exists(spark, p):
             paths.append(p)
     if not paths:
         return None  # every probed cell empty — caller picks its semantics
@@ -1961,15 +1556,12 @@ def ivf_pq_rescore_topk(
     value-checkable. Returns (query_id, vec_id, cosine, rank) under
     (cosine desc, vec_id asc)."""
     shortlist = max(shortlist, k)
-    live = _live_index_root(spark, index_path)  # pin ONE snapshot: the
+    live = live_root(spark, index_path)  # pin ONE snapshot: the
     # meta check, stage-1 scan and stage-2 refine GET must all read the
-    # same immutable tree even if a publish lands between the stages
-    # fail-fast BEFORE paying the stage-1 scan: the build stamps
-    # store_vectors into _quantizer/meta.json, so this is one stat+read
-    # (never the O(nlist)-listing root-schema read). Pre-meta indexes
-    # skip the fast check; _refine_rescore's pruned read still raises.
-    meta = _load_pq_meta(spark, live)
-    if meta is not None and not meta.get("store_vectors"):
+    # same immutable tree even if a publish lands between the stages.
+    # Fail fast BEFORE paying the stage-1 scan: the build stamps
+    # store_vectors into _quantizer/meta.json (one small read)
+    if not _load_pq_meta(spark, live)["store_vectors"]:
         raise ValueError(
             "ivf_pq_rescore_topk needs a refine-store index — rebuild with "
             "build_ivf_pq_index(..., store_vectors=True)"
@@ -2023,11 +1615,6 @@ def _refine_rescore(
     store = _read_index_cells(spark, index_path, cells)
     if store is None:  # unreachable: shortlist rows came from these cells
         raise ValueError(f"shortlist cells missing under {index_path}")
-    if "c_vec" not in store.columns:
-        raise ValueError(
-            "ivf_pq_rescore_topk needs a refine-store index — rebuild with "
-            "build_ivf_pq_index(..., store_vectors=True)"
-        )
     vecs = store.filter(F.col("vec_id").isin(ids)).select("vec_id", "c_vec")
     q = with_double_embedding(queries, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
@@ -2432,8 +2019,8 @@ def _trained_centroid_rows(
     (:func:`_train_sample`, capped ~256·nlist vectors) — the PRODUCTION
     quantizer the seed-vector path (:func:`_seed_centroid_rows`) stands
     in for in the oracle-checked twins. Same return shape
-    ``[(cell, [float, ...])]`` so every consumer (freeze into the store
-    companion table, :func:`_assign_cells_blas` broadcast) is shared.
+    ``[(cell, [float, ...])]`` so every consumer (freeze into the store's
+    ``_centroids/``, :func:`_assign_cells_blas` broadcast) is shared.
     Sampling the fit is the 100-TB contract: with ``nlist ∝ N`` a
     full-corpus fit re-scans the corpus every k-means iteration; the
     sample keeps train cost O(nlist·d) per iteration regardless of
@@ -2698,13 +2285,8 @@ def semdedup_incremental(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
     )
     centroid_rows = _seed_centroid_rows(c, nlist)
-    corp = _assign_cells_blas(c, centroid_rows).withColumn(
-        "c_norm", _norm(F.col("c_vec"))
-    ).select(
-        F.col("vec_id").alias("b_vec_id"),
-        F.col("cell").alias("b_cell"),
-        F.col("c_vec").alias("b_vec"),
-        F.col("c_norm").alias("b_norm"),
+    corp = _corpus_side(
+        _assign_cells_blas(c, centroid_rows).withColumn("c_norm", _norm(F.col("c_vec")))
     )
     # batch assignment persisted (bounded): _screen_batch consumes it in
     # two branches (screen join + final verdict join), which would each
@@ -2722,143 +2304,62 @@ def semdedup_incremental(
     return _screen_batch(ba, corp, min_cosine)
 
 
-def _centroids_table(table_name: str) -> str:
-    return f"{table_name}__centroids"
+def _corpus_side(stored: DataFrame) -> DataFrame:
+    """Stored/assigned rows renamed to :func:`_screen_batch`'s corpus side."""
+    return stored.select(
+        F.col("vec_id").alias("b_vec_id"),
+        F.col("cell").alias("b_cell"),
+        F.col("c_vec").alias("b_vec"),
+        F.col("c_norm").alias("b_norm"),
+    )
 
 
-def _versioned(table_name: str, version: int) -> str:
-    return f"{table_name}__v{version}"
+# -- corpus-cells store -------------------------------------------------------
+# A cells store is a root path published through operators/_publish.py:
+# ``{root}/v=N/cell=K/`` holds the (vec_id, c_vec, c_norm) rows partitioned
+# by cell, and ``{root}/v=N/_centroids/`` the quantizer frozen with that
+# snapshot (the same shape as the IVF-PQ index's ``_quantizer/``).
 
 
-def _live_version(spark, table_name: str) -> int:
-    """Resolve the live store version from the pointer VIEW's text.
-
-    A cells store's public name is a view ``SELECT * FROM
-    <name>__v{N}``; ``CREATE OR REPLACE VIEW`` is a single metastore
-    operation, so flipping ``N`` is the store's atomic commit point —
-    a reader resolving the public name NEVER observes a missing table
-    (the gap the earlier drop→rename swap left open between the DROP
-    of the live store and the RENAME of its staging copy). Raises
-    ``ValueError`` when the name is not a cells-store pointer view."""
-    ddl = " ".join(r[0] for r in spark.sql(f"SHOW CREATE TABLE {table_name}").collect())
-    m = re.search(rf"{re.escape(table_name)}__v(\d+)", ddl)
-    if m is None:
-        raise ValueError(f"{table_name} is not a corpus-cells store pointer view")
-    return int(m.group(1))
+def _read_centroids(spark, live: str):
+    """The centroids FROZEN with a resolved snapshot, by cell — never
+    re-derived from the store's current lowest ids, which would silently
+    re-seed the quantizer (and orphan every stored cell assignment) the
+    moment an append carries an id below the original seeds."""
+    rows = spark.read.parquet(f"{live}/_centroids").orderBy("cell").collect()
+    return [(int(r["cell"]), list(r["c_vec"])) for r in rows]
 
 
-def _store_versions(spark, table_name: str) -> list[int]:
-    """Physical data versions present in the metastore (live + any
-    orphans a crashed build left behind)."""
-    rows = spark.sql(f"SHOW TABLES LIKE '{table_name}__v*'").collect()
-    out = []
-    for r in rows:
-        m = re.fullmatch(rf"{re.escape(table_name)}__v(\d+)", r["tableName"])
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+def read_corpus_cells(spark, cells_root: str) -> DataFrame:
+    """The live snapshot's rows (vec_id, c_vec, c_norm, cell) — the
+    supported way to scan a cells store: one pointer read + one
+    partitioned scan of ``{root}/v=N`` (``_centroids`` is
+    underscore-hidden from partition discovery)."""
+    return spark.read.parquet(live_root(spark, cells_root))
 
 
-def _live_tables(spark, cells_table: str) -> tuple[str, str]:
-    """Resolve (data table, centroids table) of the live version ONCE —
-    callers must pair reads from one resolution so a concurrent retrain
-    flip cannot hand them data from one quantizer and centroids from
-    another."""
-    data_t = _versioned(cells_table, _live_version(spark, cells_table))
-    return data_t, _centroids_table(data_t)
+def drop_corpus_cells(spark, cells_root: str) -> None:
+    """Remove a cells store entirely: pointer and every snapshot."""
+    delete_path(spark, cells_root)
 
 
-# Frozen-centroid memo, keyed by the VERSIONED companion-table name: a
-# committed version is immutable (every rebuild writes a new version and
-# flips the pointer view), so the collect can be paid once per version
-# instead of twice per micro-batch in the steady-state screen+append
-# loop. Builders evict the key they are about to (re)build — required
-# because a full drop resets the version counter, so "v1" can be reborn
-# with different centroids within one process. Each entry additionally
-# carries the table's metastore CREATION TIME and is honored only while
-# it matches: a version number reborn by ANOTHER session against a
-# shared metastore (drop + re-persist outside this process, which the
-# name-keyed eviction cannot see) gets a different creation timestamp,
-# so the stale entry self-invalidates instead of serving old centroids.
-_CENTROID_CACHE: dict = {}
-
-
-def _table_created_at(spark, table: str) -> str:
-    """The metastore 'Created Time' of a table — one catalog roundtrip,
-    no executor job; '' when the row is absent (never matches a cached
-    stamp, so the cache degrades to re-reading)."""
-    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
-        if r["col_name"] == "Created Time":
-            return r["data_type"]
-    return ""
-
-
-def _read_centroids(spark, centroids_table: str):
-    created = _table_created_at(spark, centroids_table)
-    hit = _CENTROID_CACHE.get(centroids_table)
-    if hit is not None and hit[0] == created and created:
-        return hit[1]
-    rows = spark.table(centroids_table).orderBy("cell").collect()
-    got = [(int(r["cell"]), list(r["c_vec"])) for r in rows]
-    _CENTROID_CACHE[centroids_table] = (created, got)
-    return got
-
-
-def _stored_centroid_rows(spark, cells_table: str):
-    """Centroids FROZEN at persist time, read back from the live
-    version's companion table — NOT re-derived from the store's current
-    lowest ids, which would silently re-seed the quantizer (and orphan
-    every stored cell assignment) the moment an append carries an id
-    below the original seeds."""
-    return _read_centroids(spark, _live_tables(spark, cells_table)[1])
-
-
-def drop_corpus_cells(spark, cells_table: str) -> None:
-    """Remove a cells store entirely: pointer view, every physical
-    version (live or orphaned), and any legacy single-table layout
-    under the same name."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._tables import drop_managed_table
-
-    if spark.catalog.tableExists(cells_table):
-        try:
-            _live_version(spark, cells_table)
-            spark.sql(f"DROP VIEW IF EXISTS {cells_table}")
-        except ValueError:  # legacy physical table under the store name
-            drop_managed_table(spark, cells_table)
-    for v in _store_versions(spark, cells_table):
-        _CENTROID_CACHE.pop(_centroids_table(_versioned(cells_table, v)), None)
-        drop_managed_table(spark, _versioned(cells_table, v))
-        drop_managed_table(spark, _centroids_table(_versioned(cells_table, v)))
-    drop_managed_table(spark, _centroids_table(cells_table))  # legacy companion
-
-
-def _build_store_version(
+def _write_cells_snapshot(
     corpus: DataFrame,
-    cells_table: str,
-    version: int,
+    target: str,
     nlist: int,
-    id_col: str,
-    vec_col: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
     trained: bool = False,
     seed: int = 42,
-) -> str:
-    """Fully materialize one store version under its versioned physical
-    names: frozen centroids first, then the data table PARTITIONED BY
+) -> None:
+    """Stage one complete snapshot at ``target``: the data PARTITIONED BY
     ``cell`` with one file per cell (the ``repartition(cell)`` ahead of
-    the dynamic-partition write puts each cell in exactly one task).
-    ``trained=True`` freezes sampled-fit k-means centroids
-    (:func:`_trained_centroid_rows`) instead of the deterministic seed
-    vectors — every downstream consumer (append, screen, retrain,
-    compact) reads the companion table and is quantizer-agnostic.
-    Reclaims same-version orphans from a crashed prior build; never
-    touches the live version."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._tables import drop_managed_table
-
+    the dynamic-partition write puts each cell in exactly one task),
+    then the centroids it was assigned with. ``trained=True`` freezes
+    sampled-fit k-means centroids (:func:`_trained_centroid_rows`)
+    instead of the deterministic seed vectors — every consumer reads
+    ``_centroids`` and is quantizer-agnostic."""
     spark = corpus.sparkSession
-    data_t = _versioned(cells_table, version)
-    _CENTROID_CACHE.pop(_centroids_table(data_t), None)
-    drop_managed_table(spark, data_t)
-    drop_managed_table(spark, _centroids_table(data_t))
     c = with_double_embedding(corpus, vec_col).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
     )
@@ -2867,24 +2368,21 @@ def _build_store_version(
         if trained
         else _seed_centroid_rows(c, nlist)
     )
-    spark.createDataFrame(
-        [(cell, vec) for cell, vec in centroid_rows],
-        "cell int, c_vec array<double>",
-    ).coalesce(1).write.format("parquet").saveAsTable(_centroids_table(data_t))
-    assigned = _assign_cells_blas(c, centroid_rows).withColumn(
-        "c_norm", _norm(F.col("c_vec"))
-    )
     (
-        assigned.repartition(F.col("cell"))
+        _assign_cells_blas(c, centroid_rows)
+        .withColumn("c_norm", _norm(F.col("c_vec")))
+        .repartition(F.col("cell"))
         .write.partitionBy("cell")
-        .format("parquet")
         .mode("overwrite")
-        .saveAsTable(data_t)
+        .parquet(target)
     )
-    return data_t
+    # after the data: an overwrite-mode write clears its target directory
+    spark.createDataFrame(
+        centroid_rows, "cell int, c_vec array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{target}/_centroids")
 
 
-def _audit_store_ids(stored: DataFrame, cells_table: str) -> int:
+def _audit_store_ids(stored: DataFrame, cells_root: str) -> int:
     """Enforce :func:`append_corpus_cells`'s id-immutability contract at
     the maintenance steps that already scan the whole store: a
     redelivered id with a DIFFERENT embedding assigns to a different
@@ -2903,13 +2401,13 @@ def _audit_store_ids(stored: DataFrame, cells_table: str) -> int:
     ).collect()[0]
     if row["n_null"]:
         raise ValueError(
-            f"cells store {cells_table} holds {row['n_null']} NULL vec_id "
+            f"cells store {cells_root} holds {row['n_null']} NULL vec_id "
             "row(s) — ids are the append/dedup key and must be non-null; "
             "repair the source and rebuild via retrain_corpus_cells"
         )
     if row["n"] != row["n_ids"]:
         raise ValueError(
-            f"cells store {cells_table} violates the append id-immutability "
+            f"cells store {cells_root} violates the append id-immutability "
             f"contract: {row['n']} rows but {row['n_ids']} distinct vec_ids "
             f"({row['n'] - row['n_ids']} duplicate-id rows — an id was "
             "re-sent with a different embedding; route corrections through "
@@ -2918,28 +2416,9 @@ def _audit_store_ids(stored: DataFrame, cells_table: str) -> int:
     return row["n"]
 
 
-def _reclaim_old_versions(spark, cells_table: str, keep: set) -> None:
-    """The ONE reclamation rule every rebuild path (persist / retrain /
-    compact) routes through: after a view flip, drop every physical
-    version except ``keep`` = {the new live version, the version it
-    just superseded}. Keeping the just-superseded version one more
-    generation lets an in-flight reader that resolved the old tables
-    right before the flip finish its scan; sweeping everything older
-    here is what BOUNDS the litter — the version the PREVIOUS rebuild
-    kept, plus any crashed-build orphans (never live, so no reader can
-    hold them), all go now. Net invariant: at most two physical
-    versions exist between maintenance steps."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._tables import drop_managed_table
-
-    for v in set(_store_versions(spark, cells_table)) - keep:
-        _CENTROID_CACHE.pop(_centroids_table(_versioned(cells_table, v)), None)
-        drop_managed_table(spark, _versioned(cells_table, v))
-        drop_managed_table(spark, _centroids_table(_versioned(cells_table, v)))
-
-
 def persist_corpus_cells(
     corpus: DataFrame,
-    table_name: str,
+    cells_root: str,
     nlist: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -2947,29 +2426,23 @@ def persist_corpus_cells(
     seed: int = 42,
 ) -> str:
     """Materialize the corpus's cell assignments (+ precomputed norms)
-    as a table PARTITIONED BY the cell key — the amortization step for
-    continuous semantic dedup, mirroring ``dedup.persist_corpus_bands``:
-    a continuously-ingesting pipeline assigns the corpus ONCE, then
-    every micro-batch screens against ONLY its touched cell partitions
+    PARTITIONED BY the cell key — the amortization step for continuous
+    semantic dedup, mirroring ``dedup.persist_corpus_bands``: a
+    continuously-ingesting pipeline assigns the corpus ONCE, then every
+    micro-batch screens against ONLY its touched cell partitions
     (static partition pruning — the batch assigns to ≤ min(|batch|,
     nlist) cells, so the per-batch corpus READ is bounded by the batch,
     not the corpus; the bands store keeps bucketing instead because its
     (band, value) key is high-cardinality, while ``cell`` has exactly
     ``nlist`` values — the hive-partitionable case).
 
-    The store's public name is a pointer VIEW over a versioned physical
-    table (``<name>__v{N}``); rebuilds (retrain/compact/re-persist)
-    construct version N+1 fully, then commit with one atomic
-    ``CREATE OR REPLACE VIEW`` — readers never observe a missing table.
-    Reclamation of the superseded version is DEFERRED one generation
-    (version N survives until the N+2 build): a reader that resolved
-    the live tables — or holds an unscanned DataFrame — just before the
-    flip can still finish its scan against version N. The guarantee is
-    one-deep by design: a reader slower than TWO full rebuild cycles
-    re-resolves the public view instead. Crashed-build orphans (never
-    live, so no reader can hold them) are reclaimed immediately.
-    The centroids are FROZEN into a per-version companion table
-    (``<name>__v{N}__centroids``) — the quantizer is part of the
+    ``cells_root`` is a versioned-publish root (operators/_publish.py):
+    the next snapshot ``v=N+1`` is staged in full, then committed by
+    one atomic ``_VERSION`` pointer rewrite — readers never observe a
+    missing or half-built store. The superseded snapshot survives one
+    more generation for in-flight readers; crashed-build stages and
+    older snapshots are swept at the publish. The centroids are FROZEN
+    into the snapshot's ``_centroids/`` — the quantizer is part of the
     store's state, never re-derived from the data (an append with a low
     id must not re-seed it). ``trained=False`` (default) freezes the
     deterministic seed vectors — the quantizer every value-exact SQL
@@ -2977,33 +2450,53 @@ def persist_corpus_cells(
     centroids (:func:`_trained_centroid_rows` — fit on the
     deterministic ~256·nlist hash-sample, NEVER the full corpus) — the
     production quantizer, identical store shape, so append / screen /
-    retrain / compact work unchanged on either. Data rows:
-    (vec_id, c_vec, c_norm) partitioned by ``cell``."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._tables import drop_managed_table
-
+    retrain / compact work unchanged on either."""
     spark = corpus.sparkSession
-    live = None
-    if spark.catalog.tableExists(table_name):
-        try:
-            live = _live_version(spark, table_name)
-        except ValueError:  # legacy single-table layout: clear it
-            drop_managed_table(spark, table_name)
-            drop_managed_table(spark, _centroids_table(table_name))
-    orphans = _store_versions(spark, table_name)
-    new_v = max(orphans + ([live] if live is not None else []) + [0]) + 1
-    data_t = _build_store_version(
-        corpus, table_name, new_v, nlist, id_col, vec_col, trained=trained, seed=seed
+    new_v = next_version(spark, cells_root)
+    _write_cells_snapshot(
+        corpus, f"{cells_root.rstrip('/')}/v={new_v}", nlist,
+        id_col, vec_col, trained=trained, seed=seed,
     )
-    spark.sql(f"CREATE OR REPLACE VIEW {table_name} AS SELECT * FROM {data_t}")
-    _reclaim_old_versions(
-        spark, table_name, {new_v} | ({live} if live is not None else set())
+    publish(spark, cells_root, new_v)
+    return cells_root
+
+
+def _assign_batch(spark, live: str, batch: DataFrame, id_col: str, vec_col: str):
+    """Assign a batch against a resolved snapshot's frozen centroids
+    ONCE (localCheckpoint: the GEMM output feeds several branches) and
+    read the store PRUNED to the batch's touched cells — a bounded
+    collect (≤ min(|batch|, nlist) cell ids) pushed into the scan as a
+    static IN filter, so the plan carries PartitionFilters on ``cell``
+    and per-batch store I/O is bounded by the batch, never O(corpus).
+    Returns (assigned batch, pruned store rows)."""
+    b = with_double_embedding(batch, vec_col).select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
     )
-    return table_name
+    ba = _assign_cells_blas(b, _read_centroids(spark, live)).withColumn(
+        "c_norm", _norm(F.col("c_vec"))
+    ).localCheckpoint(eager=True)
+    cells = [r["cell"] for r in ba.select("cell").distinct().collect()]
+    stored = spark.read.parquet(live)
+    pruned = stored.filter(F.col("cell").isin(cells)) if cells else stored.filter(F.lit(False))
+    return ba, pruned
+
+
+def _append_fresh(rows: DataFrame, pruned: DataFrame, live: str) -> None:
+    """Append ``rows`` whose ids the pruned store read does not already
+    hold (retry idempotence) into the live snapshot IN PLACE — new
+    files in its ``cell=K`` dirs, cast to the stored schema."""
+    fresh = rows.join(pruned.select("vec_id"), "vec_id", "left_anti")
+    (
+        fresh.select(*[F.col(f.name).cast(f.dataType) for f in pruned.schema])
+        .write.partitionBy("cell")
+        .mode("append")
+        .parquet(live)
+    )
 
 
 def append_corpus_cells(
     spark,
-    cells_table: str,
+    cells_root: str,
     new_vectors: DataFrame,
     nlist: int = 8,
     id_col: str = "vec_id",
@@ -3011,49 +2504,34 @@ def append_corpus_cells(
 ) -> None:
     """O(batch) append of newly-accepted vectors into a
     :func:`persist_corpus_cells` store: the new rows assign against the
-    FROZEN centroids of the live version and ``insertInto`` its
-    partitioned layout — the corpus is never rewritten or re-shuffled,
-    so the steady-state ingest loop (screen via
+    FROZEN centroids of the live snapshot and append into its
+    partitioned layout in place — the corpus is never rewritten or
+    re-shuffled, so the steady-state ingest loop (screen via
     :func:`semdedup_batch_vs_table` → append survivors) costs only the
-    batch at every step. Ids already present are skipped for retry
-    idempotence via an anti-join whose store read is PRUNED to the
-    batch's touched cell partitions — sound because the frozen
-    centroids make assignment deterministic: a previously-appended copy
-    of any batch id lives in exactly the cell that id re-assigns to.
-    Corollary contract: an id is IMMUTABLE once stored — re-sending an
-    id with a DIFFERENT embedding is a mutation, not an append retry
-    (it would assign to a different cell, evade the pruned check, and
-    duplicate the id); route corrections through a rebuild
-    (:func:`retrain_corpus_cells` on corrected vectors). ENFORCED at
-    the next full-store pass: retrain and compact run an id-uniqueness
-    audit (:func:`_audit_store_ids`) inside the scan they already pay
-    for and raise instead of carrying duplicates forward.
-    Column order follows the table schema (insertInto is positional).
+    batch at every step. Like :func:`append_ivf_pq_index`, the append
+    belongs to the single-writer maintenance family. Ids already
+    present are skipped for retry idempotence via an anti-join whose
+    store read is PRUNED to the batch's touched cell partitions — sound
+    because the frozen centroids make assignment deterministic: a
+    previously-appended copy of any batch id lives in exactly the cell
+    that id re-assigns to. Corollary contract: an id is IMMUTABLE once
+    stored — re-sending an id with a DIFFERENT embedding is a mutation,
+    not an append retry (it would assign to a different cell, evade the
+    pruned check, and duplicate the id); route corrections through a
+    rebuild (:func:`retrain_corpus_cells` on corrected vectors).
+    ENFORCED at the next full-store pass: retrain and compact run an
+    id-uniqueness audit (:func:`_audit_store_ids`) inside the scan they
+    already pay for and raise instead of carrying duplicates forward.
     ``nlist`` is retained for interface symmetry; the quantizer
-    geometry comes entirely from the frozen companion table."""
-    data_t, cent_t = _live_tables(spark, cells_table)
-    stored = spark.table(data_t)
-    centroid_rows = _read_centroids(spark, cent_t)
-    b = with_double_embedding(new_vectors, vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-    )
-    assigned = _assign_cells_blas(b, centroid_rows).withColumn(
-        "c_norm", _norm(F.col("c_vec"))
-    ).localCheckpoint(eager=True)  # one assignment GEMM, reused below
-    # bounded collect: the batch assigns to <= min(|batch|, nlist)
-    # distinct cells — cell-id metadata, pushed into the store scan
-    # as a static partition filter, never corpus-sized
-    cells = [r["cell"] for r in assigned.select("cell").distinct().collect()]
-    if not cells:
-        return
-    present = stored.filter(F.col("cell").isin(cells)).select("vec_id")
-    fresh = assigned.join(present, "vec_id", "left_anti")
-    fresh.select(*stored.columns).write.insertInto(data_t)
+    geometry comes entirely from the frozen centroids."""
+    live = live_root(spark, cells_root)
+    ba, pruned = _assign_batch(spark, live, new_vectors, id_col, vec_col)
+    _append_fresh(ba, pruned, live)
 
 
 def retrain_corpus_cells(
     spark,
-    cells_table: str,
+    cells_root: str,
     nlist: int,
     trained: bool = False,
     seed: int = 42,
@@ -3063,81 +2541,63 @@ def retrain_corpus_cells(
     corpus grows, cells fatten and the O(Σ cell²) screen degrades, so a
     periodic retrain (e.g. each time the corpus doubles) re-seeds with
     a larger ``nlist``, reassigns every stored vector, and freezes the
-    new centroids in the new version's companion table. With
-    ``trained=True`` the refit is a sampled k-means
-    (:func:`_trained_centroid_rows` — ~256·nlist hash-sampled vectors,
-    never a per-iteration full-store scan), so retrain stays one
-    assignment pass + one partition shuffle at any store size.
+    new centroids in the new snapshot. With ``trained=True`` the refit
+    is a sampled k-means (:func:`_trained_centroid_rows` — ~256·nlist
+    hash-sampled vectors, never a per-iteration full-store scan), so
+    retrain stays one assignment pass + one partition shuffle at any
+    store size.
 
-    Built entirely through :func:`persist_corpus_cells`: version N+1 is
-    fully materialized (reading version N lazily — the originals stay
-    intact throughout the build), then the pointer view flips in one
-    atomic metastore operation and version N is dropped. A crash
-    mid-build leaves the live store untouched plus reclaimable
-    orphans; a reader resolving the public name never finds it missing.
-    Cost is one full pass over the store (the assignment GEMM + one
-    partition shuffle) — amortized across the many O(batch) appends it
-    enables. Returns {n_rows, nlist}.
+    Built entirely through :func:`persist_corpus_cells`: snapshot N+1
+    is staged in full (reading snapshot N lazily — it stays intact
+    throughout), then published by the pointer flip. A crash mid-build
+    leaves the live store untouched plus a stage the next publish
+    sweeps. Cost is one full pass over the store (the assignment GEMM +
+    one partition shuffle) — amortized across the many O(batch)
+    appends it enables. Returns {n_rows, nlist}.
     """
-    stored = spark.table(cells_table)
-    n_rows = _audit_store_ids(stored, cells_table)  # doubles as the count
+    stored = read_corpus_cells(spark, cells_root)
+    n_rows = _audit_store_ids(stored, cells_root)  # doubles as the count
     vectors = stored.select("vec_id", F.col("c_vec").alias("embedding"))
-    persist_corpus_cells(vectors, cells_table, nlist=nlist, trained=trained, seed=seed)
+    persist_corpus_cells(vectors, cells_root, nlist=nlist, trained=trained, seed=seed)
     return {"n_rows": n_rows, "nlist": nlist}
 
 
-def compact_corpus_cells(spark, cells_table: str) -> dict:
+def compact_corpus_cells(spark, cells_root: str) -> dict:
     """Collapse the per-append small files of a cells store back to one
     file per cell — the partitioned-store twin of
-    ``_tables.compact_bucketed_store`` (which serves the bucketed bands
-    store). Assignments and centroids are preserved verbatim (no
-    re-seed — this is compaction, not retrain): the new version is the
-    live data repartitioned on ``cell`` plus a copy of the frozen
-    centroids, committed by the same atomic view flip, with the SAME
-    deferred reclamation as every other rebuild (the just-compacted
-    version survives one generation for in-flight readers; anything
-    older is swept via :func:`_reclaim_old_versions`). Returns
+    :func:`compact_ivf_pq_index`. Assignments and centroids are
+    preserved verbatim (no re-seed — this is compaction, not retrain):
+    the next snapshot is the live data repartitioned on ``cell`` plus a
+    bit-exact copy of the frozen centroids, committed by the same
+    pointer flip and grace-generation sweep as every other publish.
+    The id-immutability audit runs BEFORE anything is staged, so a
+    violating store fails with its pointer untouched. Returns
     {files_before, files_after, n_rows}."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._tables import (
-        drop_managed_table,
-        store_file_stats,
-    )
-
-    v = _live_version(spark, cells_table)  # resolve ONCE; derive both names
-    data_t = _versioned(cells_table, v)
-    cent_t = _centroids_table(data_t)
-    # id-immutability audit BEFORE any mutation: a violating store fails
-    # here with versions and pointer untouched
-    n_rows = _audit_store_ids(spark.table(data_t), cells_table)
-    before = store_file_stats(spark, data_t)["n_files"]
-    new_v = max(_store_versions(spark, cells_table) + [v]) + 1
-    new_data = _versioned(cells_table, new_v)
-    _CENTROID_CACHE.pop(_centroids_table(new_data), None)
-    drop_managed_table(spark, new_data)
-    drop_managed_table(spark, _centroids_table(new_data))
-    spark.table(cent_t).coalesce(1).write.format("parquet").saveAsTable(
-        _centroids_table(new_data)
-    )
+    base = cells_root.rstrip("/")
+    live = live_root(spark, base)
+    stored = spark.read.parquet(live)
+    n_rows = _audit_store_ids(stored, base)
+    before = _cell_file_stats(spark, live)["n_files"]
+    new_v = next_version(spark, base)
+    target = f"{base}/v={new_v}"
     (
-        spark.table(data_t)
-        .repartition(F.col("cell"))
+        stored.repartition(F.col("cell"))
         .write.partitionBy("cell")
-        .format("parquet")
         .mode("overwrite")
-        .saveAsTable(new_data)
+        .parquet(target)
     )
-    spark.sql(f"CREATE OR REPLACE VIEW {cells_table} AS SELECT * FROM {new_data}")
-    _reclaim_old_versions(spark, cells_table, {new_v, v})
+    copy_tree(spark, f"{live}/_centroids", f"{target}/_centroids")
+    publish(spark, base, new_v)
     return {
         "files_before": before,
-        "files_after": store_file_stats(spark, new_data)["n_files"],
+        "files_after": _cell_file_stats(spark, target)["n_files"],
         "n_rows": n_rows,
     }
 
 
 def semdedup_batch_vs_table(
     spark,
-    cells_table: str,
+    cells_root: str,
     batch: DataFrame,
     nlist: int = 8,
     min_cosine: float = 0.3,
@@ -3145,49 +2605,23 @@ def semdedup_batch_vs_table(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """:func:`semdedup_incremental` against a persisted
-    :func:`persist_corpus_cells` table: only the BATCH runs the
-    assignment kernel (against the FROZEN companion centroids — bounded
+    :func:`persist_corpus_cells` store: only the BATCH runs the
+    assignment kernel (against the FROZEN centroids — bounded
     metadata), and the corpus read is PRUNED to the batch's touched
-    cell partitions — a bounded collect (≤ min(|batch|, nlist) cell
-    ids) pushed into the scan as a static IN filter, so the physical
-    plan carries PartitionFilters on ``cell`` and the per-batch corpus
-    I/O is bounded by the batch, never O(corpus) (the scale gap the
-    earlier bucketed layout left open: bucketing killed the corpus
-    SHUFFLE but still read every stored byte each micro-batch). Same
-    screening join (and retry-safe self-exclusion) as the direct
-    operator via :func:`_screen_batch`. Data and centroids resolve
-    from ONE live version (see :func:`_live_tables`). ``nlist`` is
-    retained for interface symmetry; the quantizer geometry comes
-    entirely from the frozen companion table. Returns one row per
-    batch vector: ``(vec_id, cell, keep)``."""
-    data_t, cent_t = _live_tables(spark, cells_table)
-    centroid_rows = _read_centroids(spark, cent_t)
-    b = with_double_embedding(batch, vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-    )
-    ba = _assign_cells_blas(b, centroid_rows).withColumn(
-        "c_norm", _norm(F.col("c_vec"))
-    ).localCheckpoint(eager=True)  # one assignment GEMM, reused below
-    # bounded collect: the batch assigns to <= min(|batch|, nlist)
-    # distinct cells — cell-id metadata, pushed into the store scan
-    # as a static partition filter, never corpus-sized
-    cells = [r["cell"] for r in ba.select("cell").distinct().collect()]
-    stored = spark.table(data_t)
-    pruned = (
-        stored.filter(F.col("cell").isin(cells)) if cells else stored.filter(F.lit(False))
-    )
-    corp = pruned.select(
-        F.col("vec_id").alias("b_vec_id"),
-        F.col("cell").alias("b_cell"),
-        F.col("c_vec").alias("b_vec"),
-        F.col("c_norm").alias("b_norm"),
-    )
-    return _screen_batch(ba, corp, min_cosine)
+    cell partitions (:func:`_assign_batch`) — the per-batch corpus I/O
+    is bounded by the batch, never O(corpus). Same screening join (and
+    retry-safe self-exclusion) as the direct operator via
+    :func:`_screen_batch`. Data and centroids come from ONE resolved
+    snapshot. ``nlist`` is retained for interface symmetry. Returns
+    one row per batch vector: ``(vec_id, cell, keep)``."""
+    live = live_root(spark, cells_root)
+    ba, pruned = _assign_batch(spark, live, batch, id_col, vec_col)
+    return _screen_batch(ba, _corpus_side(pruned), min_cosine)
 
 
 def semdedup_ingest_batch(
     spark,
-    cells_table: str,
+    cells_root: str,
     batch: DataFrame,
     nlist: int = 8,
     min_cosine: float = 0.3,
@@ -3206,7 +2640,7 @@ def semdedup_ingest_batch(
 
     Retry semantics are IDENTICAL to the two-call form (same per-pair
     same-id exclusion in :func:`_screen_batch`, same pruned
-    already-present anti-join before the insert), so the verdicts stay
+    already-present anti-join before the append), so the verdicts stay
     value-equal to :func:`semdedup_batch_vs_table` — the property the
     stream/batch equivalence oracle checks. The store CONVERGES under
     replay; only the audit can gain rows (a replay after the append
@@ -3218,34 +2652,13 @@ def semdedup_ingest_batch(
     appears elsewhere in the batch — so an at-least-once source that
     redelivers an old id alongside a genuinely new near-duplicate
     still gets the duplicate caught."""
-    data_t, cent_t = _live_tables(spark, cells_table)
-    centroid_rows = _read_centroids(spark, cent_t)
-    b = with_double_embedding(batch, vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-    )
-    ba = _assign_cells_blas(b, centroid_rows).withColumn(
-        "c_norm", _norm(F.col("c_vec"))
-    ).localCheckpoint(eager=True)
-    # bounded collect: the batch assigns to <= min(|batch|, nlist)
-    # distinct cells — cell-id metadata, pushed into the store scan
-    # as a static partition filter, never corpus-sized
-    cells = [r["cell"] for r in ba.select("cell").distinct().collect()]
-    stored = spark.table(data_t)
-    pruned = (
-        stored.filter(F.col("cell").isin(cells)) if cells else stored.filter(F.lit(False))
-    )
-    corp = pruned.select(
-        F.col("vec_id").alias("b_vec_id"),
-        F.col("cell").alias("b_cell"),
-        F.col("c_vec").alias("b_vec"),
-        F.col("c_norm").alias("b_norm"),
-    )
-    flags = _screen_batch(ba, corp, min_cosine).localCheckpoint(eager=True)
+    live = live_root(spark, cells_root)
+    ba, pruned = _assign_batch(spark, live, batch, id_col, vec_col)
+    flags = _screen_batch(ba, _corpus_side(pruned), min_cosine).localCheckpoint(eager=True)
     survivors = ba.join(
         flags.filter(F.col("keep")).select("vec_id"), "vec_id", "left_semi"
     )
-    fresh = survivors.join(pruned.select("vec_id"), "vec_id", "left_anti")
-    fresh.select(*stored.columns).write.insertInto(data_t)
+    _append_fresh(survivors, pruned, live)
     return flags
 
 

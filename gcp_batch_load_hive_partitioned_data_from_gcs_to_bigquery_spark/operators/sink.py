@@ -37,6 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import partition_columns
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+    delete_path,
+    glob_status,
+    hadoop_fs,
+    path_exists,
+)
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.plans.jobs import JobState
 
 PARTITION_COLS = ("year", "month", "day", "hour")
@@ -56,20 +62,9 @@ def create_partitioned_table(spark: SparkSession, table_root: str) -> None:
     table property, so it attaches at create time."""
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.plans.guard import register_landing_root
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(table_root)
-    fs = path.getFileSystem(conf)
+    _, fs, path = hadoop_fs(spark, table_root)
     fs.mkdirs(path)
     register_landing_root(table_root)
-
-
-def _table_exists(spark: SparkSession, table_root: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(table_root)
-    fs = path.getFileSystem(conf)
-    return bool(fs.exists(path))
 
 
 def with_partition_columns(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -120,7 +115,7 @@ def write_partition_overwrite(
     callers (the JobRegistry) fold exceptions to ``FAILURE``.
     """
     spark = df.sparkSession
-    if create_never and not _table_exists(spark, table_root):
+    if create_never and not path_exists(spark, table_root):
         raise TableNotFoundError(
             f"table root {table_root!r} does not exist and create_never is set "
             "(reference parity: create_disposition=CREATE_NEVER)"
@@ -238,10 +233,7 @@ def compact_partition(
     )
 
     part_dir = f"{table_root.rstrip('/')}/{hive_path_from_bq_partition(partition)}"
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(part_dir)
-    fs = path.getFileSystem(conf)
+    _, fs, path = hadoop_fs(spark, part_dir)
     size = fs.getContentSummary(path).getLength()
     n_files = max(1, math.ceil(size / target_file_bytes))
 
@@ -335,7 +327,7 @@ def repair_rollup(
     Returns the list of repaired partitions.
     """
     landing = set(list_table_partitions(spark, table_root))
-    have = set(list_table_partitions(spark, rollup_root)) if _table_exists(
+    have = set(list_table_partitions(spark, rollup_root)) if path_exists(
         spark, rollup_root
     ) else set()
     missing = sorted(landing - have)
@@ -380,7 +372,7 @@ def merge_upsert_partition(
     case degenerates to insert."""
     from ..sources.probe import partition_file_count
 
-    if not _table_exists(spark, table_root):
+    if not path_exists(spark, table_root):
         raise TableNotFoundError(
             f"merge_upsert_partition: table root does not exist: {table_root} "
             "(create it with create_partitioned_table first; MERGE never "
@@ -439,11 +431,9 @@ def list_table_partitions(spark: SparkSession, table_root: str) -> list[str]:
     """Enumerate the table's hourly partitions as compact YYYYMMDDHH
     strings — one metadata LIST over the Hive layout (no Spark job), the
     same cost shape as the existence probe."""
-    from ..sources.probe import _glob_status
-
     pattern = f"{table_root}/year=*/month=*/day=*/hour=*"
     parts = []
-    for st in _glob_status(spark, pattern):
+    for st in glob_status(spark, pattern):
         p = st.getPath()
         hour = p.getName().split("=")[1]
         day = p.getParent().getName().split("=")[1]
@@ -468,15 +458,10 @@ def vacuum_partitions(
     """
     from ..functions.partition import hive_path_from_bq_partition
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     dropped, kept = [], []
     for part in list_table_partitions(spark, table_root):
         if part < retain_from:
-            path = jvm.org.apache.hadoop.fs.Path(
-                f"{table_root}/{hive_path_from_bq_partition(part)}"
-            )
-            path.getFileSystem(conf).delete(path, True)
+            delete_path(spark, f"{table_root}/{hive_path_from_bq_partition(part)}")
             dropped.append(part)
         else:
             kept.append(part)

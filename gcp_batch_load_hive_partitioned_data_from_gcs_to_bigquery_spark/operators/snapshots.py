@@ -40,6 +40,12 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+    hadoop_fs,
+    read_small_file,
+    write_small_file,
+)
+
 __all__ = [
     "write_snapshot",
     "read_snapshot",
@@ -53,54 +59,10 @@ _MANIFEST_DIR = "_manifest"
 _DATA_DIR = "data"
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(conf), jpath
-
-
-def _read_small_file(spark: SparkSession, path: str) -> str:
-    jvm, fs, jpath = _fs(spark, path)
-    stream = fs.open(jpath)
-    try:
-        # FSDataInputStream inherits java.io.InputStream (Java 11+):
-        # readAllBytes() comes back to py4j as Python bytes
-        return bytes(stream.readAllBytes()).decode("utf-8")
-    finally:
-        stream.close()
-
-
-def _write_small_file(spark: SparkSession, path: str, content: str) -> None:
-    """Write a small metadata file ATOMICALLY: stage to a dot-temp
-    sibling, then rename into place. An in-place ``fs.create`` that
-    crashes mid-write leaves a TRUNCATED file every later reader
-    chokes on (e.g. a half-stamped meta.json raising JSONDecodeError
-    forever); with staging, a crash leaves either the old content, no
-    file, or the new content — never a torn read. The delete→rename
-    window can only surface as a MISSING file, which every caller
-    already treats as "not stamped yet" (manifests additionally never
-    overwrite: each version path is written once)."""
-    jvm, fs, jpath = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        jpath.getParent(), f".{jpath.getName()}.tmp"
-    )
-    stream = fs.create(tmp, True)
-    try:
-        # py4j auto-converts Python bytes to byte[]
-        stream.write(content.encode("utf-8"))
-    finally:
-        stream.close()
-    if fs.exists(jpath):
-        fs.delete(jpath, False)
-    if not fs.rename(tmp, jpath):
-        raise IOError(f"rename {tmp} -> {jpath} failed")
-
-
 def snapshot_versions(spark: SparkSession, root: str) -> list[int]:
     """Committed versions, ascending — resolved from manifests ONLY
     (a data directory without its manifest is not a version)."""
-    jvm, fs, _ = _fs(spark, root)
+    jvm, fs, _ = hadoop_fs(spark, root)
     pattern = jvm.org.apache.hadoop.fs.Path(
         f"{root}/{_MANIFEST_DIR}/v*.json"
     )
@@ -119,7 +81,7 @@ def _manifest_path(root: str, version: int) -> str:
 
 
 def _read_manifest(spark: SparkSession, root: str, version: int) -> dict:
-    return json.loads(_read_small_file(spark, _manifest_path(root, version)))
+    return json.loads(read_small_file(spark, _manifest_path(root, version)))
 
 
 def write_snapshot(
@@ -145,7 +107,7 @@ def write_snapshot(
     data_dir = f"{root}/{_DATA_DIR}/v{version:08d}"
     df.write.mode("error").parquet(data_dir)
 
-    jvm, fs, _ = _fs(spark, root)
+    jvm, fs, _ = hadoop_fs(spark, root)
     pattern = jvm.org.apache.hadoop.fs.Path(f"{data_dir}/*.parquet")
     statuses = fs.globStatus(pattern) or []
     new_files = sorted(str(st.getPath().toString()) for st in statuses)
@@ -161,7 +123,7 @@ def write_snapshot(
         "files": files,
         "n_files": len(files),
     }
-    _write_small_file(
+    write_small_file(
         spark, _manifest_path(root, version), json.dumps(manifest)
     )
     return version
@@ -262,7 +224,7 @@ def vacuum_snapshots(
     reachable: set[str] = set()
     for v in kept:
         reachable.update(_read_manifest(spark, root, v)["files"])
-    jvm, fs, _ = _fs(spark, root)
+    jvm, fs, _ = hadoop_fs(spark, root)
     deleted = 0
     for v in dropped:
         for f in _read_manifest(spark, root, v)["files"]:

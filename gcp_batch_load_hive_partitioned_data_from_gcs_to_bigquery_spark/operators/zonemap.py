@@ -37,6 +37,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+    hadoop_fs,
+    path_exists,
+)
+
 #: Store directory for the persisted zone map, INSIDE the table root.
 #: The leading underscore makes Spark's file listing treat it as hidden
 #: (the ``_delta_log`` / ``_spark_metadata`` convention), so data scans
@@ -135,16 +140,9 @@ def partition_zone_map(
     return df.groupBy(part).agg(*aggs)
 
 
-def _store_exists(spark: SparkSession, store: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(store)
-    return path.getFileSystem(conf).exists(path)
-
-
 def has_zone_map(spark: SparkSession, table_root: str) -> bool:
     """Whether a persisted zone-map store exists for ``table_root``."""
-    return _store_exists(spark, zone_map_path(table_root))
+    return path_exists(spark, zone_map_path(table_root))
 
 
 #: Driver-side snapshot of each persisted store's rows (the Delta-snapshot
@@ -179,10 +177,7 @@ def _store_fingerprint(spark: SparkSession, store: str) -> frozenset:
                 st = os.stat(p)
                 out.add((p, st.st_mtime_ns, st.st_size))
         return frozenset(out)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(store)
-    fs = root.getFileSystem(conf)
+    _, fs, root = hadoop_fs(spark, store)
     out = set()
     it = fs.listFiles(root, True)
     while it.hasNext():
@@ -196,7 +191,7 @@ def _cached_store_rows(spark: SparkSession, table_root: str) -> list | None:
     served from the driver cache while the store's on-disk fingerprint is
     unchanged; re-collected (and re-cached) after any refresh."""
     store = zone_map_path(table_root)
-    if not _store_exists(spark, store):
+    if not path_exists(spark, store):
         _STORE_CACHE.pop(store, None)
         return None
     fp = _store_fingerprint(spark, store)
@@ -218,7 +213,7 @@ def _cached_store_rows(spark: SparkSession, table_root: str) -> list | None:
 def load_zone_map(spark: SparkSession, table_root: str) -> DataFrame | None:
     """The persisted per-file stats table, or ``None`` if never built."""
     store = zone_map_path(table_root)
-    if not _store_exists(spark, store):
+    if not path_exists(spark, store):
         return None
     zm = spark.read.parquet(store)
     # partition-column type inference reads part_key back as an integer;
@@ -320,10 +315,7 @@ def _data_file_paths(spark: SparkSession, table_root: str) -> set[str]:
                 if not f.startswith(("_", ".")):
                     out.add(os.path.join(dirpath, f))
         return out
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(table_root)
-    fs = root.getFileSystem(conf)
+    _, fs, root = hadoop_fs(spark, table_root)
     root_path = _norm_file_path(root.toUri().getPath())
     out = set()
     it = fs.listFiles(root, True)

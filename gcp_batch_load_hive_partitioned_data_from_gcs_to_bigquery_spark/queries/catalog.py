@@ -3655,25 +3655,23 @@ FROM bassigned s LEFT JOIN dropped d ON s.vec_id = d.vec_id
 
 def q_dedup_semantic_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The amortized corpus side of incremental semantic dedup: corpus
-    cell assignments + norms persisted ONCE as a table PARTITIONED by
-    the cell key behind a pointer view (operators/similarity.py
+    cell assignments + norms persisted ONCE as a versioned store
+    PARTITIONED by the cell key (operators/similarity.py
     persist_corpus_cells), then the batch assigns against the frozen
-    companion centroids and screens a store scan PRUNED to its touched
+    snapshot centroids and screens a store scan PRUNED to its touched
     cells — the static IN filter reaches the scan as PartitionFilters
     (pinned by tests/test_plan_audit.py), so per-batch corpus I/O is
     bounded by the batch, never O(corpus). Same seed quantizer, split,
     and threshold as dedup_semantic_incremental, so the verdicts are
     value-exact against the same SQL oracle."""
-    import hashlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 4 != 0)
     batch = emb.filter(F.col("vec_id") % 4 == 0)
     key = ("corpus_cells", sf_dir)
     if key not in _FIXTURES:
-        name = "corpus_cells_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        SIM.persist_corpus_cells(corpus, name, nlist=64)
-        _FIXTURES[key] = name
+        root = _tmp("corpus_cells")
+        SIM.persist_corpus_cells(corpus, root, nlist=64)
+        _FIXTURES[key] = root
     out = SIM.semdedup_batch_vs_table(
         spark, _FIXTURES[key], batch, nlist=64, min_cosine=0.3
     )
@@ -3685,7 +3683,7 @@ def q_ann_store_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist_corpus_cells trained=True): the coarse quantizer is a real
     k-means fit — on the deterministic ~256·nlist hash-sample
     (_train_sample), never the full corpus, so index build stays linear
-    at 100 TB even with nlist ∝ N — frozen into the same companion-table
+    at 100 TB even with nlist ∝ N — frozen into the same ``_centroids/``
     shape the seed-vector twin uses, so append/screen/retrain/compact
     are quantizer-agnostic. Trained centroid VALUES are Spark-MLlib-
     specific (no external engine replays the fit), so the value-exact
@@ -3696,16 +3694,14 @@ def q_ann_store_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior is pinned engine-side by tests/test_operators.py
     (trained-store screen == semdedup_incremental on the same frozen
     centroids; append prunes to touched partitions)."""
-    import hashlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 4 != 0)
     key = ("corpus_cells_trained", sf_dir)
     if key not in _FIXTURES:
-        name = "corpus_cells_tr_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        SIM.persist_corpus_cells(corpus, name, nlist=16, trained=True)
-        _FIXTURES[key] = name
-    stored = spark.table(_FIXTURES[key])
+        root = _tmp("corpus_cells_tr")
+        SIM.persist_corpus_cells(corpus, root, nlist=16, trained=True)
+        _FIXTURES[key] = root
+    stored = SIM.read_corpus_cells(spark, _FIXTURES[key])
     return stored.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("vec_id").alias("n_ids"),
@@ -3741,34 +3737,31 @@ def q_ann_store_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle (count / distinct / exact id-sum over corpus+batch = the
     full table), every cell id inside the retrained [0, 16) range, the
     live pointer at version 3 (persist → retrain → compact, each one
-    atomic view flip), and the compacted layout at exactly one data
+    atomic pointer flip), and the compacted layout at exactly one data
     file per populated cell. The quantizer-dependent behavior is pinned
-    engine-side by tests/test_maintenance.py."""
-    import hashlib
-
-    from ..operators.similarity import _live_version
+    engine-side by tests/test_operators.py."""
+    from ..operators._publish import live_version
 
     emb = load_table(spark, sf_dir, "embeddings")
     key = ("corpus_cells_retrain", sf_dir)
     if key not in _FIXTURES:
-        name = "corpus_cells_mt_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        # clean slate: the version number is part of the pinned values
-        SIM.drop_corpus_cells(spark, name)
+        # fresh root: the version number is part of the pinned values
+        root = _tmp("corpus_cells_mt")
         SIM.persist_corpus_cells(
-            emb.filter(F.col("vec_id") % 4 != 0), name, nlist=8
+            emb.filter(F.col("vec_id") % 4 != 0), root, nlist=8
         )
-        SIM.append_corpus_cells(spark, name, emb.filter(F.col("vec_id") % 4 == 0))
-        SIM.retrain_corpus_cells(spark, name, nlist=16, trained=True)
-        stats = SIM.compact_corpus_cells(spark, name)
-        _FIXTURES[key] = (name, stats["files_after"])
-    name, files_after = _FIXTURES[key]
-    stored = spark.table(name)
+        SIM.append_corpus_cells(spark, root, emb.filter(F.col("vec_id") % 4 == 0))
+        SIM.retrain_corpus_cells(spark, root, nlist=16, trained=True)
+        stats = SIM.compact_corpus_cells(spark, root)
+        _FIXTURES[key] = (root, stats["files_after"])
+    root, files_after = _FIXTURES[key]
+    stored = SIM.read_corpus_cells(spark, root)
     return stored.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("vec_id").alias("n_ids"),
         F.sum("vec_id").alias("id_sum"),
         F.every((F.col("cell") >= 0) & (F.col("cell") < 16)).alias("cells_bounded"),
-        F.lit(_live_version(spark, name)).cast("int").alias("live_version"),
+        F.lit(live_version(spark, root)).cast("int").alias("live_version"),
         (F.lit(files_after) == F.countDistinct("cell")).alias("one_file_per_cell"),
     )
 
@@ -3928,16 +3921,13 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "stream_sem_src", sf_dir,
         (emb.filter(F.col("vec_id") % 4 != 0), emb.filter(F.col("vec_id") % 4 == 0)),
     )
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import drop_corpus_cells
-
     audit_root, ckpt = _tmp("sem_audit"), _tmp("sem_ckpt")
     for d in (audit_root, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     # fresh store per invocation: the corpus append is stateful by design
-    corpus_table = "stream_sem_corpus_cells"
-    drop_corpus_cells(spark, corpus_table)
+    corpus_root = _tmp("sem_cells")
     q = stream_semantic_dedup(
-        spark, src, corpus_table, audit_root, emb.schema,
+        spark, src, corpus_root, audit_root, emb.schema,
         nlist=64, min_cosine=0.3, checkpoint=ckpt,
     )
     q.awaitTermination()
@@ -3975,12 +3965,20 @@ def seed_amortized_store(spark: SparkSession, sf_dir: str) -> None:
     timed figure then isolates the per-trigger data work (one assignment
     GEMM + one partition-pruned store read + one append), which is what
     the key exists to measure."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import drop_corpus_cells
-
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 4 != 0)
-    drop_corpus_cells(spark, "stream_sem_amort_cells")
-    SIM.persist_corpus_cells(corpus, "stream_sem_amort_cells", nlist=64)
+    root = _amort_cells_root(sf_dir)
+    SIM.drop_corpus_cells(spark, root)
+    SIM.persist_corpus_cells(corpus, root, nlist=64)
+
+
+def _amort_cells_root(sf_dir: str) -> str:
+    """The amortized twin's cells-store root, shared by the seed and the
+    query within a process."""
+    key = ("stream_sem_amort_cells", sf_dir)
+    if key not in _FIXTURES:
+        _FIXTURES[key] = _tmp("sem_amort_cells")
+    return _FIXTURES[key]
 
 
 def q_stream_semantic_dedup_amortized(
@@ -4027,11 +4025,10 @@ def q_stream_semantic_dedup_amortized(
     # stateful by design, so re-runs start from the corpus-only store.
     # bench.py passes pre_seeded=True after calling seed_amortized_store
     # outside its timer, so the timed figure excludes the O(corpus) seed
-    corpus_table = "stream_sem_amort_cells"
     if not pre_seeded:
         seed_amortized_store(spark, sf_dir)
     q = stream_semantic_dedup(
-        spark, src, corpus_table, audit_root, emb.schema,
+        spark, src, _amort_cells_root(sf_dir), audit_root, emb.schema,
         nlist=64, min_cosine=0.3, checkpoint=ckpt, max_files_per_trigger=16,
     )
     q.awaitTermination()
@@ -5597,48 +5594,44 @@ ORACLES.update(BEHAVIOR_ORACLES)
 # their deterministic md5-family/fixed-quantizer forms this round) sort to
 # the front of the stale pool on their own.
 #
-# Round-18 queue — new keys and keys whose implementation changed in
-# r18 (each entry commented with what changed), per the changed-kernel
-# discipline: a green row from an earlier round attests the OLD code
-# and must not satisfy the queue.
+# Round-19 queue — keys whose implementation changed since their last
+# green correctness row, per the changed-kernel discipline: a green row from
+# an earlier round attests the OLD code and must not satisfy the queue.
 # _ROUND_QUEUE_ROUND pins the round this queue demands evidence FROM:
-# the queue retires only when CORRECTNESS_r18 lands (rotation.py).
-# Behind the queue, the evidence-driven rotation automatically fronts
-# the r12 evidence tail (r17 verdict task 5 — the 24 keys last green
-# r12).
+# a queued key retires once it is green in that round or later
+# (rotation.py). Behind the queue, the evidence-driven rotation fronts
+# the stalest keys.
 # Gate (per project discipline): every queued key verified with
-# scripts/check_correctness.py at sf0.01 AND sf0.1 this round before the
-# rotation landed; the whole 50-key window swept in one process at both
-# SFs before freezing.
-_ROUND_QUEUE_ROUND = 18
+# scripts/check_correctness.py at sf0.01 AND sf0.1 before the rotation
+# landed.
+_ROUND_QUEUE_ROUND = 19
 _ROUND_QUEUE = [
-    # r18 REWRITE (r17 verdict task 1): the whole IVF-PQ index family
-    # moved to the version-pointer snapshot layout ({root}/v=N +
-    # atomic _VERSION flip — build/compact/retrain stage invisibly and
-    # publish by one pointer rewrite; readers resolve once and hold
-    # snapshot isolation; recovery is a single version sweep). Every
-    # key below reads/writes through the new layout — re-evidence all.
-    "ann_ivf_pq_retrain",  # + r17 task 2: nlist now DERIVED from corpus
-    # growth (build on quarter, append 4x, retrain sizes 8->32; the
-    # oracle replays the integer ceil arithmetic from count(*) alone)
+    # the IVF-PQ index family: publish protocol moved to
+    # operators/_publish.py, legacy-layout fallbacks removed, strict
+    # meta.json read; retrain also carries the capped fit default
+    # (64 samples per cell, 10 k-means iterations)
+    "ann_ivf_pq_retrain",
     "ann_ivf_pq_maintain",
     "ann_ivf_pq_compact",
     "ann_ivf_pq_rescore",
     "ann_ivf_pq_oracle",
     "ann_ivf_pq_append",
     "ann_ivf_cell_skew",
-    # r18 decimal-context fixes (r17 ADVICE): writer widens precision
-    # before to_integral_exact (wide-but-exact values no longer falsely
-    # rejected); reader decodes context-free (no 28-digit rounding)
-    "source_avro",
-    # r18 OPTIMIZATION-round plan restructures (OPTIMIZATION_r18.md —
-    # value-identical by construction, every key re-verified at both
-    # SFs, but the changed-kernel discipline demands fresh driver rows):
-    "classify_naive_bayes",  # consts sourced from persisted wc/docs
-    "approx_cms_counts",  # exact count carried through countmin_query
-    "text_bpe_encode",  # train+encode share one persisted token frame
-    "text_bpe_coverage",  # same shared token frame
-    "window_sliding_quantile",  # hourly KMV sample persisted (one scan)
+    # the corpus-cells store moved off managed tables + a pointer view
+    # onto a versioned root published through operators/_publish.py
+    "dedup_semantic_bucketed",
+    "ann_store_trained",
+    "ann_store_retrain",
+    "stream_semantic_dedup",
+    "stream_semantic_dedup_amortized",
+    # plan rewrites not yet re-attested (one derivation of each shared
+    # parent; Bloom screen moved into the JVM; persisted exploded spans)
+    "profile_corpus_report",
+    "agg_pareto_share",
+    "approx_hll_set_ops",
+    "agg_bitmap_distinct",
+    "dedup_spans",
+    "text_contamination_bloom",
 ]
 
 _missing = [k for k in _ROUND_QUEUE if k not in QUERIES]

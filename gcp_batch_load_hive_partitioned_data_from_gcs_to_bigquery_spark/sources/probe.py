@@ -18,40 +18,13 @@ from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.p
     glob_path_all,
     hive_path_from_bq_partition,
 )
-
-
-def _glob_status(spark: SparkSession, pattern: str) -> list:
-    """Hadoop globStatus via py4j — metadata-only, no job. The pattern
-    IS interpreted as a glob (``* ? [ ] { }`` are metacharacters) —
-    that is the point for the hourly-partition probes whose paths this
-    module builds itself. For probing a path that may contain such
-    characters literally (user-supplied index roots), use
-    :func:`_path_exists`, which never glob-expands."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = path.getFileSystem(conf)
-    statuses = fs.globStatus(path)
-    return list(statuses) if statuses is not None else []
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Exact-path existence probe (``fs.exists``) — metadata-only, no
-    job, and NO glob interpretation: a path containing ``[``/``{``/
-    ``*``/``?`` literally is checked as-is, where ``_glob_status``
-    would silently match nothing and read as "missing"."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
-    return bool(fs.exists(jpath))
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import glob_status
 
 
 def partition_file_count(spark: SparkSession, root: str, partition: str) -> int:
     """Number of files under one hourly partition (0 if missing)."""
     pattern = glob_path_all(root, hive_path_from_bq_partition(partition))
-    return len(_glob_status(spark, pattern))
+    return len(glob_status(spark, pattern))
 
 
 def partition_exists(spark: SparkSession, root: str, partition: str) -> int:

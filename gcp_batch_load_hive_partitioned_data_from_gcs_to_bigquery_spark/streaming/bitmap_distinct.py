@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import path_exists
+
 __all__ = [
     "stream_bitmap_distinct",
     "read_distinct_counts",
@@ -103,15 +105,11 @@ def stream_bitmap_distinct(
             # partition count grows without bound in a long-lived
             # stream (at hour grain a single glob/partition-discovery
             # of the root is already 24x the day-grain metadata cost).
-            jvm = sess._jvm
-            hconf = sess._jsc.hadoopConfiguration()
             root = store_root.rstrip("/")
-            fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(hconf)
-            hit = []
-            for key in keys:
-                p = f"{root}/{kname}={key}"
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(p)):
-                    hit.append(p)
+            hit = [
+                p for p in (f"{root}/{kname}={key}" for key in keys)
+                if path_exists(sess, p)
+            ]
             if hit:
                 old = (
                     sess.read.option("basePath", root)

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import path_exists
+
 
 def stream_incremental_dedup(
     spark: SparkSession,
@@ -69,9 +71,7 @@ def stream_incremental_dedup(
         # survives"; corrupt files / permission / transient FS failures
         # propagate and fail the micro-batch rather than silently skipping
         # dedup and appending duplicates.
-        jpath = sess._jvm.org.apache.hadoop.fs.Path(corpus_root)
-        fs = jpath.getFileSystem(sess._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
+        if path_exists(sess, corpus_root):
             corpus = sess.read.schema(schema).parquet(corpus_root)
             has_corpus = len(corpus.take(1)) > 0
         else:

@@ -4,13 +4,13 @@ incremental-dedup triple (exact sha / MinHash bands / embedding cosine)
 for a continuously-ingesting corpus.
 
 The accumulated corpus lives in a :func:`persist_corpus_cells` store
-(PARTITIONED by the cell key, centroids FROZEN in its per-version
-companion table, public name a pointer view), so each micro-batch costs
+(a versioned root PARTITIONED by the cell key, centroids FROZEN in each
+snapshot's ``_centroids/``), so each micro-batch costs
 O(batch) in BOTH compute and I/O: the batch assigns against the frozen
 centroids, screens against a store scan PRUNED to its touched cell
 partitions (static IN filter → PartitionFilters; never a corpus
 re-assignment, corpus shuffle, or full-store read) — survivors append
-through the O(batch) ``insertInto`` path, and dropped vectors land in an audit
+in place through the O(batch) append path, and dropped vectors land in an audit
 table with their cell. The FIRST non-empty batch seeds the store (and
 its centroids) and survives wholesale — the same degrade-to-accept
 stance as ``dedup_stream``'s cold corpus.
@@ -39,7 +39,7 @@ __all__ = ["stream_semantic_dedup"]
 def stream_semantic_dedup(
     spark: SparkSession,
     source_root: str,
-    corpus_table: str,
+    corpus_root: str,
     audit_root: str,
     schema: T.StructType,
     nlist: int = 8,
@@ -50,10 +50,11 @@ def stream_semantic_dedup(
     max_files_per_trigger: int = 1,
 ):
     """File-source stream → per-micro-batch incremental semantic dedup
-    against the ``corpus_table`` cells store → survivors appended to the
+    against the ``corpus_root`` cells store → survivors appended to the
     store, dropped vectors (vec_id, cell, batch_id) to ``audit_root``.
     Trigger.AvailableNow drains the backlog file-by-file; returns the
     started StreamingQuery."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         persist_corpus_cells,
         semdedup_ingest_batch,
@@ -67,13 +68,13 @@ def stream_semantic_dedup(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        if not sess.catalog.tableExists(corpus_table):
+        if live_version(sess, corpus_root) is None:
             if len(batch_df.take(1)) == 0:
                 return
             # cold start: the first drop seeds the store AND freezes the
             # quantizer centroids; everything survives
             persist_corpus_cells(
-                batch_df, corpus_table, nlist=nlist,
+                batch_df, corpus_root, nlist=nlist,
                 id_col=id_col, vec_col=vec_col,
             )
             return
@@ -85,7 +86,7 @@ def stream_semantic_dedup(
         # idempotent and the audit consumer dedupes by key — the same
         # better-than-effectively-once contract as before.
         flags = semdedup_ingest_batch(
-            sess, corpus_table, batch_df,
+            sess, corpus_root, batch_df,
             nlist=nlist, min_cosine=min_cosine,
             id_col=id_col, vec_col=vec_col,
         )

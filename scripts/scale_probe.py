@@ -334,10 +334,10 @@ def main() -> None:
     batch = tbl(base, "embeddings").limit(100).localCheckpoint(eager=True)
 
     def screen_time(sf, kk):
-        name = f"scale_probe_cells_{kk}x"
-        persist_corpus_cells(tbl(sf, "embeddings"), name, nlist=64 * kk)
+        root = f"{DERIVED}_cells_{kk}x"
+        persist_corpus_cells(tbl(sf, "embeddings"), root, nlist=64 * kk)
         return timed(
-            semdedup_batch_vs_table(spark, name, batch, nlist=64 * kk, min_cosine=0.3)
+            semdedup_batch_vs_table(spark, root, batch, nlist=64 * kk, min_cosine=0.3)
         )
 
     t1 = screen_time(base, 1)
@@ -575,10 +575,10 @@ def main() -> None:
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import drop_corpus_cells
 
     def amort_trigger_time(sf, kk) -> float:
-        name = f"scale_probe_amort_{kk}x"
+        root = f"{DERIVED}_amort_cells_{kk}x"
         best = None
         for r in range(3):
-            drop_corpus_cells(spark, name)
+            drop_corpus_cells(spark, root)
             # seed EXCLUDING the batch's ids AND their Kx replicas
             # (pmod strips the +rep*10M replica offset): the trigger's
             # already-present anti-join must find the batch absent so
@@ -593,7 +593,7 @@ def main() -> None:
                 tbl(sf, "embeddings").filter(
                     F.pmod(F.col("vec_id"), F.lit(10_000_000)) >= 96
                 ),
-                name,
+                root,
                 nlist=64 * kk,
             )
             ckpt = f"{DERIVED}_amort_ckpt_{kk}_{r}"
@@ -607,7 +607,7 @@ def main() -> None:
             # 0.9 lets ~the whole batch through so the timed append
             # writes a meaningful, scale-symmetric number of rows
             q = stream_semantic_dedup(
-                spark, amort_src, name, audit, emb_schema,
+                spark, amort_src, root, audit, emb_schema,
                 nlist=64 * kk, min_cosine=0.9, checkpoint=ckpt,
                 max_files_per_trigger=16,
             )
@@ -616,7 +616,7 @@ def main() -> None:
             if r == 0:
                 continue
             best = t if best is None else min(best, t)
-        drop_corpus_cells(spark, name)
+        drop_corpus_cells(spark, root)
         return round(best, 3)
 
     ta1, tak = amort_trigger_time(base, 1), amort_trigger_time(derived, k)
@@ -626,13 +626,11 @@ def main() -> None:
         "corpus_growth_ratio": round(tak / ta1, 3),
     }
 
-    # success: drop the probe's stores (r11 verdict task 7 — a stale
-    # same-named store in a long-lived driver session is the one
-    # state-leak vector the versioned-store design has); the derived
-    # parquet corpora under /tmp stay cached for re-runs by design
+    # success: drop the probe's stores; the derived parquet corpora
+    # under /tmp stay cached for re-runs by design
     for kk in (1, k):
-        drop_corpus_cells(spark, f"scale_probe_cells_{kk}x")
-        drop_corpus_cells(spark, f"scale_probe_amort_{kk}x")
+        drop_corpus_cells(spark, f"{DERIVED}_cells_{kk}x")
+        drop_corpus_cells(spark, f"{DERIVED}_amort_cells_{kk}x")
 
     print(json.dumps({"metric": "scale_probe", "k": k, "operators": results}))
 

@@ -64,28 +64,31 @@ def main() -> None:
             os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
         open(os.path.join(src, "_READY"), "w").close()
 
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import persist_corpus_cells
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
+        persist_corpus_cells,
+        read_corpus_cells,
+    )
 
     n_seed = seed.count()
     n_batch = emb.count() - n_seed
     rows = []
     for mft in (1, 4, 16):
-        table = f"trigger_probe_cells_{mft}"
+        cells_root = os.path.join(ROOT, f"cells_{mft}")
         audit = os.path.join(ROOT, f"audit_{mft}")
         ckpt = os.path.join(ROOT, f"ckpt_{mft}")
         for d in (audit, ckpt):
             shutil.rmtree(d, ignore_errors=True)
-        drop_corpus_cells(spark, table)
-        persist_corpus_cells(seed, table, nlist=64)  # outside the clock
+        drop_corpus_cells(spark, cells_root)
+        persist_corpus_cells(seed, cells_root, nlist=64)  # outside the clock
         t0 = time.time()
         q = stream_semantic_dedup(
-            spark, src, table, audit, emb.schema,
+            spark, src, cells_root, audit, emb.schema,
             nlist=64, min_cosine=0.3, checkpoint=ckpt,
             max_files_per_trigger=mft,
         )
         q.awaitTermination()
         elapsed = round(time.time() - t0, 3)
-        n_store = spark.table(table).count()
+        n_store = read_corpus_cells(spark, cells_root).count()
         n_audit = spark.read.parquet(audit).count()
         rows.append(
             {
@@ -97,7 +100,7 @@ def main() -> None:
                 "audit_rows": n_audit,
             }
         )
-        drop_corpus_cells(spark, table)
+        drop_corpus_cells(spark, cells_root)
         # every batch vector is either appended or audited, exactly once
         assert (n_store - n_seed) + n_audit == n_batch, rows
     print(json.dumps({"rows": rows}))

@@ -3,23 +3,15 @@
 ``spark-warehouse/`` — everything else is a leak (a crashed probe, an
 un-swept test store, an orphaned versioned-store stage).
 
-Allowed residents (all process-cached catalog fixtures, re-persisted
-per process by design — see queries/catalog.py ``_FIXTURES``):
-
-* ``corpus_bands_<md5-8>``          — persisted corpus MinHash bands
-* ``corpus_cells_<md5-8>``          — seed-quantizer semantic cells store
-* ``corpus_cells_tr_<md5-8>``       — trained-quantizer store
-* ``corpus_cells_mt_<md5-8>``       — maintenance-lifecycle store
-* ``stream_sem_corpus_cells``       — streaming semantic dedup store
-* ``stream_sem_amort_cells``        — its amortized-trigger twin
-
-each optionally suffixed ``__v<N>`` / ``__v<N>__centroids`` (versioned
-store layout, operators/similarity.py) or holding a ``.parquet`` dir.
+Allowed residents: the one metastore-backed store, the process-cached
+catalog fixture ``corpus_bands_<md5-8>`` (persisted corpus MinHash
+bands, re-persisted per process by design — see queries/catalog.py
+``_FIXTURES``). The IVF-PQ index and the corpus-cells store are
+path-based versioned roots (operators/_publish.py) and never live here.
 
 Anything else — ``t_*`` / ``test_*`` (pytest stores the conftest sweep
-should have dropped), ``scale_probe_*`` (probe stores the drop-on-
-success path should have dropped), or an unrecognized name — fails the
-audit loudly with the listing.
+should have dropped), a leftover cells-store table from an older layout,
+or an unrecognized name — fails the audit loudly with the listing.
 
 Usage: python scripts/warehouse_audit.py [warehouse_dir]
 Exit 0 = clean; exit 1 = leaks found (printed).
@@ -31,14 +23,7 @@ import os
 import re
 import sys
 
-ALLOWED = re.compile(
-    r"^(?:"
-    r"corpus_bands_[0-9a-f]{8}"
-    r"|corpus_cells_(?:tr_|mt_)?[0-9a-f]{8}"
-    r"|stream_sem_corpus_cells"
-    r"|stream_sem_amort_cells"
-    r")(?:__v\d+(?:__centroids)?)?$"
-)
+ALLOWED = re.compile(r"^corpus_bands_[0-9a-f]{8}$")
 
 
 def audit(warehouse: str) -> list[str]:

@@ -447,20 +447,18 @@ def test_warehouse_audit_classifier(tmp_path):
 
     ok = [
         "corpus_bands_a1e8d12c",
-        "corpus_cells_a1e8d12c__v1",
-        "corpus_cells_a1e8d12c__v1__centroids",
-        "corpus_cells_tr_cfc1c0f8__v2",
-        "corpus_cells_mt_ddbe1476__v3__centroids",
-        "stream_sem_corpus_cells__v1",
-        "stream_sem_amort_cells__v2__centroids",
-        "stream_sem_amort_cells",
+        "corpus_bands_cfc1c0f8",
     ]
+    # cells stores are path-based versioned roots now: any cells table
+    # left in the warehouse is a leftover of the retired managed layout
     leaks = [
         "t_retrain_store__v1",
         "test_bands_ext_collision",
-        "scale_probe_cells_10x__v1",
-        "scale_probe_amort_1x__v1__centroids",
-        "corpus_cells_nothex99",
+        "corpus_bands_a1e8d12c__compacting",
+        "corpus_cells_a1e8d12c__v1",
+        "corpus_cells_a1e8d12c__v1__centroids",
+        "stream_sem_amort_cells",
+        "corpus_bands_nothex99",
         "random_table",
     ]
     for d in ok + leaks:

@@ -531,6 +531,7 @@ def test_ivf_pq_index_prunes_unprobed_cells(spark, emb, tmp_path):
     to nprobe cells must plan a partition-FILTERED scan of the codes
     table (unprobed cells' files never read), and its results must agree
     with the probed-cell ADC math recomputed directly."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_root
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         build_ivf_pq_index,
         ivf_pq_search,
@@ -547,9 +548,7 @@ def test_ivf_pq_index_prunes_unprobed_cells(spark, emb, tmp_path):
     # nprobe=2 over nlist=8: the scan must touch a strict subset of cells
     import os
 
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import _live_index_root
-
-    live = _live_index_root(spark, root)
+    live = live_root(spark, root)
     all_cells = {d for d in os.listdir(live) if d.startswith("cell=")}
     assert len(all_cells) == 8
     rows = out.collect()
@@ -1154,18 +1153,18 @@ def test_semdedup_vs_table_matches_incremental_and_prunes_store_scan(spark, emb,
 
     corpus = emb.filter(F.col("vec_id") % 3 != 0)
     batch = emb.filter(F.col("vec_id") % 3 == 0)
-    name = "t_corpus_cells_eq"
-    persist_corpus_cells(corpus, name, nlist=8)
+    root = str(tmp_path / "cells_eq")
+    persist_corpus_cells(corpus, root, nlist=8)
     direct = {
         r.vec_id: (r.cell, r.keep)
         for r in semdedup_incremental(corpus, batch, nlist=8, min_cosine=0.3).collect()
     }
-    via_table = semdedup_batch_vs_table(spark, name, batch, nlist=8, min_cosine=0.3)
+    via_table = semdedup_batch_vs_table(spark, root, batch, nlist=8, min_cosine=0.3)
     got = {r.vec_id: (r.cell, r.keep) for r in via_table.collect()}
     assert got == direct
     plan = via_table._jdf.queryExecution().executedPlan().toString()
-    store_scans = [
-        ln for ln in plan.splitlines() if "FileScan" in ln and name in ln
+    store_scans = [  # only the store carries norms (the batch is checkpointed)
+        ln for ln in plan.splitlines() if "FileScan" in ln and "c_norm" in ln
     ]
     assert store_scans, "expected a FileScan of the persisted store"
     for ln in store_scans:
@@ -1175,27 +1174,28 @@ def test_semdedup_vs_table_matches_incremental_and_prunes_store_scan(spark, emb,
         assert "cell" in ln.split("PartitionFilters:")[1][:200]
 
 
-def test_append_corpus_cells_is_incremental_and_flags_new_dups(spark, emb):
+def test_append_corpus_cells_is_incremental_and_flags_new_dups(spark, emb, tmp_path):
     """Appending survivors into the cells store must preserve the
     partitioned layout (no rewrite) and make them visible to the next
     batch's screen: a vector identical to an appended one is dropped."""
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         append_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         semdedup_batch_vs_table,
     )
 
     corpus = emb.filter((F.col("vec_id") % 3 != 0) & (F.col("vec_id") < 400))
-    name = "t_corpus_cells_append"
+    name = str(tmp_path / "cells_append")
     persist_corpus_cells(corpus, name, nlist=8)
-    n0 = spark.table(name).count()
+    n0 = read_corpus_cells(spark, name).count()
 
     # accept a fresh vector (corpus vec 401's embedding under a new id)
     newcomer = emb.filter(F.col("vec_id") == 401).select(
         F.lit(900001).alias("vec_id"), F.col("embedding")
     )
     append_corpus_cells(spark, name, newcomer, nlist=8)
-    assert spark.table(name).count() == n0 + 1
+    assert read_corpus_cells(spark, name).count() == n0 + 1
 
     # next batch: an exact copy of the appended vector must now drop
     echo = emb.filter(F.col("vec_id") == 401).select(
@@ -1210,22 +1210,23 @@ def test_append_corpus_cells_is_incremental_and_flags_new_dups(spark, emb):
     assert out == {900002: False}
 
 
-def test_compact_corpus_cells_collapses_append_files(spark, emb):
+def test_compact_corpus_cells_collapses_append_files(spark, emb, tmp_path):
     """Three O(batch) appends leave one file per touched cell per
     append; compaction rebuilds to ONE file per cell with identical
     rows and identical vs-table dedup verdicts (the join contract
-    survives), committed by the atomic pointer-view flip."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._tables import store_file_stats
+    survives), committed by the atomic pointer flip."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_root
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _live_tables,
+        _cell_file_stats,
         append_corpus_cells,
         compact_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         semdedup_batch_vs_table,
     )
 
     corpus = emb.filter((F.col("vec_id") % 3 != 0) & (F.col("vec_id") < 300))
-    name = "t_corpus_cells_compact"
+    name = str(tmp_path / "cells_compact")
     persist_corpus_cells(corpus, name, nlist=8)
     for i in range(3):
         extra = emb.filter(F.col("vec_id") == 301 + i).select(
@@ -1233,13 +1234,14 @@ def test_compact_corpus_cells_collapses_append_files(spark, emb):
         )
         append_corpus_cells(spark, name, extra, nlist=8)
     rows_before = sorted(
-        (r.vec_id, r.cell) for r in spark.table(name).select("vec_id", "cell").collect()
+        (r.vec_id, r.cell)
+        for r in read_corpus_cells(spark, name).select("vec_id", "cell").collect()
     )
     batch = emb.filter(F.col("vec_id") % 3 == 0).limit(50)
     verdict_before = sorted(
         tuple(r) for r in semdedup_batch_vs_table(spark, name, batch, nlist=8).collect()
     )
-    assert store_file_stats(spark, _live_tables(spark, name)[0])["n_files"] > 8
+    assert _cell_file_stats(spark, live_root(spark, name))["n_files"] > 8
 
     stats = compact_corpus_cells(spark, name)
     # at most one file per cell (empty cells write no file)
@@ -1247,7 +1249,8 @@ def test_compact_corpus_cells_collapses_append_files(spark, emb):
     assert stats["files_after"] < stats["files_before"]
     assert stats["n_rows"] == len(rows_before)
     rows_after = sorted(
-        (r.vec_id, r.cell) for r in spark.table(name).select("vec_id", "cell").collect()
+        (r.vec_id, r.cell)
+        for r in read_corpus_cells(spark, name).select("vec_id", "cell").collect()
     )
     assert rows_after == rows_before
     verdict_after = sorted(
@@ -1315,7 +1318,7 @@ def test_new_round6_operators_tolerate_empty_input(spark):
     assert semdedup_incremental(corpus, empty_emb, nlist=4).count() == 0
 
 
-def test_append_low_id_does_not_reseed_centroids(spark, emb):
+def test_append_low_id_does_not_reseed_centroids(spark, emb, tmp_path):
     """A survivor appended with an id BELOW the original seed ids must
     not re-seed the quantizer: stored cell assignments stay valid, and
     an exact copy of an existing corpus vector is still caught on the
@@ -1324,13 +1327,14 @@ def test_append_low_id_does_not_reseed_centroids(spark, emb):
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         append_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         semdedup_batch_vs_table,
     )
 
     corpus = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 400)).select(
         "vec_id", "embedding"
     )
-    name = "t_corpus_cells_lowid"
+    name = str(tmp_path / "cells_lowid")
     persist_corpus_cells(corpus, name, nlist=8)
     # append a fresh vector under id 5 — far below every original seed
     low = emb.filter(F.col("vec_id") == 450).select(
@@ -1349,20 +1353,22 @@ def test_append_low_id_does_not_reseed_centroids(spark, emb):
     }
     assert out == {888888: False}
     # retried append of the same low-id row is a no-op (idempotent)
-    n = spark.table(name).count()
+    n = read_corpus_cells(spark, name).count()
     append_corpus_cells(spark, name, low, nlist=8)
-    assert spark.table(name).count() == n
+    assert read_corpus_cells(spark, name).count() == n
 
 
-def test_retrain_corpus_cells_reseeds_and_preserves_content(spark, emb):
+def test_retrain_corpus_cells_reseeds_and_preserves_content(spark, emb, tmp_path):
     """Retraining with a larger nlist must preserve every stored vector,
-    freeze exactly nlist new companion centroids, and keep the screen
+    freeze exactly nlist new snapshot centroids, and keep the screen
     working (an exact copy of a stored vector still drops) — the
     maintenance step behind the nlist-grows-with-the-corpus rule."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_root
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _live_tables,
+        _read_centroids,
         append_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         retrain_corpus_cells,
         semdedup_batch_vs_table,
     )
@@ -1370,20 +1376,20 @@ def test_retrain_corpus_cells_reseeds_and_preserves_content(spark, emb):
     corpus = emb.filter((F.col("vec_id") % 2 != 0) & (F.col("vec_id") < 300)).select(
         "vec_id", "embedding"
     )
-    name = "t_corpus_cells_retrain"
+    name = str(tmp_path / "cells_retrain")
     persist_corpus_cells(corpus, name, nlist=4)
     extra = emb.filter(F.col("vec_id") == 302).select(
         F.lit(600001).alias("vec_id"), F.col("embedding")
     )
     append_corpus_cells(spark, name, extra, nlist=4)
-    n_before = spark.table(name).count()
+    n_before = read_corpus_cells(spark, name).count()
 
     stats = retrain_corpus_cells(spark, name, nlist=16)
     assert stats == {"n_rows": n_before, "nlist": 16}
-    assert spark.table(name).count() == n_before
-    assert spark.table(_live_tables(spark, name)[1]).count() == 16
+    assert read_corpus_cells(spark, name).count() == n_before
+    assert len(_read_centroids(spark, live_root(spark, name))) == 16
     # ids preserved exactly
-    ids = sorted(r.vec_id for r in spark.table(name).select("vec_id").collect())
+    ids = sorted(r.vec_id for r in read_corpus_cells(spark, name).select("vec_id").collect())
     assert len(ids) == n_before and ids[-1] == 600001
     # the screen still catches an exact copy under the new quantizer
     echo = corpus.filter(F.col("vec_id") == 101).select(
@@ -1398,32 +1404,34 @@ def test_retrain_corpus_cells_reseeds_and_preserves_content(spark, emb):
     assert out == {777777: False}
 
 
-def test_cells_store_pointer_never_missing_across_lifecycle(spark, emb):
-    """The store's public name must resolve at EVERY point of the
-    lifecycle (persist → append → retrain → compact → re-persist): the
-    commit point is one atomic CREATE OR REPLACE VIEW, so a reader
-    interleaved between any two maintenance steps never observes
-    'table not found' — the gap the old drop→rename swap left open."""
+def test_cells_store_pointer_never_missing_across_lifecycle(spark, emb, tmp_path):
+    """The store root must resolve at EVERY point of the lifecycle
+    (persist → append → retrain → compact → re-persist): the commit
+    point is one atomic _VERSION pointer rewrite, so a reader
+    interleaved between any two maintenance steps never observes a
+    missing store — and at most two snapshots (live + one grace
+    generation) exist between steps."""
+    import os
+
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _live_version,
         append_corpus_cells,
         compact_corpus_cells,
         drop_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         retrain_corpus_cells,
     )
 
     corpus = emb.filter((F.col("vec_id") % 5 == 0) & (F.col("vec_id") < 500))
-    name = "t_corpus_cells_ptr"
-    drop_corpus_cells(spark, name)
+    name = str(tmp_path / "cells_ptr")
 
     def readable():
-        # a concurrent reader's two ops: resolve the name, scan it
-        assert spark.catalog.tableExists(name)
-        return spark.table(name).count()
+        # a concurrent reader's two ops: resolve the pointer, scan it
+        return read_corpus_cells(spark, name).count()
 
     persist_corpus_cells(corpus, name, nlist=4)
-    n0, v0 = readable(), _live_version(spark, name)
+    n0, v0 = readable(), live_version(spark, name)
     extra = emb.filter(F.col("vec_id") == 497).select(
         F.lit(910001).alias("vec_id"), F.col("embedding")
     )
@@ -1433,35 +1441,29 @@ def test_cells_store_pointer_never_missing_across_lifecycle(spark, emb):
     assert readable() == n0 + 1
     compact_corpus_cells(spark, name)
     assert readable() == n0 + 1
-    v3 = _live_version(spark, name)
+    v3 = live_version(spark, name)
     assert v3 > v0
 
-    def physical_tables():
-        return {
-            r.tableName for r in spark.sql(f"SHOW TABLES LIKE '{name}*'").collect()
-        } - {name}
-
-    def tables_for(version):
-        return {f"{name}__v{version}", f"{name}__v{version}__centroids"}
+    def snapshots():
+        return {d for d in os.listdir(name) if d.startswith("v=")}
 
     # deferred reclamation: EXACTLY the live version plus the one it
     # just superseded survive each maintenance step (one-generation
     # retention for in-flight readers, everything older swept — bounded
     # litter, never unbounded version accumulation)
-    assert physical_tables() == tables_for(v3) | tables_for(v3 - 1)
+    assert snapshots() == {f"v={v3}", f"v={v3 - 1}"}
     # re-persist over the live store also flips cleanly AND retires the
-    # oldest kept version: v3-1 (v1 here) must be gone two steps after
-    # it was superseded
+    # oldest kept version two steps after it was superseded
     persist_corpus_cells(corpus, name, nlist=4)
     assert readable() == n0
-    v4 = _live_version(spark, name)
+    v4 = live_version(spark, name)
     assert v4 > v3
-    assert physical_tables() == tables_for(v4) | tables_for(v3)
+    assert snapshots() == {f"v={v4}", f"v={v3}"}
     drop_corpus_cells(spark, name)
-    assert not spark.catalog.tableExists(name)
+    assert not os.path.exists(name)
 
 
-def test_store_maintenance_rejects_mutated_redelivery(spark, emb):
+def test_store_maintenance_rejects_mutated_redelivery(spark, emb, tmp_path):
     """The append id-immutability contract is ENFORCED, not just
     documented: re-sending a stored id with a different embedding slips
     past append's cell-pruned presence check (by design — it assigns to
@@ -1470,18 +1472,18 @@ def test_store_maintenance_rejects_mutated_redelivery(spark, emb):
     untouched. A clean store still retrains/compacts fine."""
     import pytest
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _live_version,
         append_corpus_cells,
         compact_corpus_cells,
         drop_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         retrain_corpus_cells,
     )
 
-    name = "t_corpus_cells_mut"
+    name = str(tmp_path / "cells_mut")
     corpus = emb.filter((F.col("vec_id") % 5 == 0) & (F.col("vec_id") < 400))
-    drop_corpus_cells(spark, name)
     persist_corpus_cells(corpus, name, nlist=4)
     # redeliver id 10 with a DIFFERENT embedding (vec 497's) — negated to
     # guarantee it assigns away from the stored copy's cell
@@ -1490,18 +1492,18 @@ def test_store_maintenance_rejects_mutated_redelivery(spark, emb):
         F.transform("embedding", lambda x: -x).alias("embedding"),
     )
     append_corpus_cells(spark, name, mutated, nlist=4)
-    dup = spark.table(name).filter(F.col("vec_id") == 10).count()
+    dup = read_corpus_cells(spark, name).filter(F.col("vec_id") == 10).count()
     assert dup == 2, "mutated redelivery should evade the pruned check"
-    v_before = _live_version(spark, name)
+    v_before = live_version(spark, name)
     with pytest.raises(ValueError, match="id-immutability"):
         compact_corpus_cells(spark, name)
     with pytest.raises(ValueError, match="id-immutability"):
         retrain_corpus_cells(spark, name, nlist=8)
-    assert _live_version(spark, name) == v_before  # store untouched
+    assert live_version(spark, name) == v_before  # store untouched
     drop_corpus_cells(spark, name)
     # clean store: both maintenance steps still run
     persist_corpus_cells(corpus, name, nlist=4)
-    n = spark.table(name).count()
+    n = read_corpus_cells(spark, name).count()
     assert compact_corpus_cells(spark, name)["n_rows"] == n
     assert retrain_corpus_cells(spark, name, nlist=8)["n_rows"] == n
     drop_corpus_cells(spark, name)
@@ -1646,36 +1648,36 @@ def test_window_sliding_quantile_merge_equals_direct(spark):
     }
 
 
-def test_cells_store_reclaims_crashed_build_orphans(spark, emb):
-    """A crash between a version build and its pointer flip leaves
-    orphan physical tables. The next persist must (a) never point the
-    view at the orphan, (b) build a HIGHER version than any orphan so
-    a stale orphan can't shadow fresh data, and (c) reclaim the
-    orphans afterwards."""
+def test_cells_store_reclaims_crashed_build_orphans(spark, emb, tmp_path):
+    """A crash between a snapshot build and its pointer flip leaves an
+    orphan ``v=N`` directory. The next persist must (a) never point at
+    the orphan, (b) build a HIGHER version than any orphan so a stale
+    orphan can't shadow fresh data, and (c) reclaim the orphan at its
+    publish."""
+    import os
+
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _build_store_version,
-        _live_version,
+        _write_cells_snapshot,
         drop_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         semdedup_batch_vs_table,
     )
 
-    name = "t_corpus_cells_orphan"
-    drop_corpus_cells(spark, name)
+    name = str(tmp_path / "cells_orphan")
     corpus = emb.filter((F.col("vec_id") % 7 == 0) & (F.col("vec_id") < 350))
-    # simulate a crashed build: version 3 physicals exist, no view
-    _build_store_version(corpus.limit(5), name, 3, 2, "vec_id", "embedding")
-    assert not any(
-        r.tableName == name
-        for r in spark.sql(f"SHOW TABLES LIKE '{name}'").collect()
-    )
+    # simulate a crashed build: snapshot v=3 staged, no pointer
+    _write_cells_snapshot(corpus.limit(5), f"{name}/v=3", 2)
+    assert live_version(spark, name) is None
 
     persist_corpus_cells(corpus, name, nlist=4)
-    v = _live_version(spark, name)
+    v = live_version(spark, name)
     assert v == 4  # above the orphan, so the orphan can't shadow it
-    assert spark.table(name).count() == corpus.count()
-    tables = {r.tableName for r in spark.sql(f"SHOW TABLES LIKE '{name}*'").collect()}
-    assert tables == {name, f"{name}__v4", f"{name}__v4__centroids"}
+    assert read_corpus_cells(spark, name).count() == corpus.count()
+    assert sorted(d for d in os.listdir(name) if not d.startswith(".")) == [
+        "_VERSION", "v=4",
+    ]
     # the store still screens correctly after recovery
     echo = corpus.limit(1).select(F.lit(999999).alias("vec_id"), "embedding")
     out = {
@@ -1813,9 +1815,9 @@ def test_ivf_train_sample_deterministic_and_partition_independent(spark, emb):
     assert per_q == {0: 3, 1: 3, 2: 3}
 
 
-def test_trained_corpus_cells_store_lifecycle(spark, emb):
+def test_trained_corpus_cells_store_lifecycle(spark, emb, tmp_path):
     """persist_corpus_cells(trained=True) freezes SAMPLED-FIT k-means
-    centroids into the same companion shape the seed twin uses, so
+    centroids into the same ``_centroids/`` shape the seed twin uses, so
     every consumer is quantizer-agnostic: the fit sees only the
     ~256·nlist hash-sample (forced ACTIVE here via a lowered cap) while
     the ASSIGNMENT covers the full corpus — every row lands in the
@@ -1828,17 +1830,18 @@ def test_trained_corpus_cells_store_lifecycle(spark, emb):
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         append_corpus_cells,
         persist_corpus_cells,
+        read_corpus_cells,
         retrain_corpus_cells,
         semdedup_batch_vs_table,
     )
 
     corpus = emb.filter(F.col("vec_id") % 3 != 0)
     n_corpus = corpus.count()
-    name = "t_corpus_cells_trained"
+    name = str(tmp_path / "cells_trained")
     with mock.patch.object(SIM, "TRAIN_SAMPLE_PER_CELL", 50):
         assert n_corpus > 50 * 4  # cap 200 < corpus: the fit IS sampled
         persist_corpus_cells(corpus, name, nlist=4, trained=True)
-    stored = spark.table(name)
+    stored = read_corpus_cells(spark, name)
     assert stored.count() == n_corpus  # full-corpus assignment despite sampled fit
     cells = {r.cell for r in stored.select("cell").distinct().collect()}
     assert cells <= set(range(4)) and cells
@@ -1860,11 +1863,13 @@ def test_trained_corpus_cells_store_lifecycle(spark, emb):
         F.lit(900002).alias("vec_id"), F.col("embedding")
     )
     append_corpus_cells(spark, name, newcomer, nlist=4)
-    assert spark.table(name).count() == n_corpus + 1
+    assert read_corpus_cells(spark, name).count() == n_corpus + 1
     info = retrain_corpus_cells(spark, name, nlist=8, trained=True)
     assert info == {"n_rows": n_corpus + 1, "nlist": 8}
-    assert spark.table(name).count() == n_corpus + 1
-    cells8 = {r.cell for r in spark.table(name).select("cell").distinct().collect()}
+    assert read_corpus_cells(spark, name).count() == n_corpus + 1
+    cells8 = {
+        r.cell for r in read_corpus_cells(spark, name).select("cell").distinct().collect()
+    }
     assert cells8 <= set(range(8))
 
 
@@ -1885,6 +1890,7 @@ def test_ivf_pq_clustered_layout_and_probed_cell_listing(spark, emb, tmp_path):
     import json as _json
     import os
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_root
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         _read_index_cells,
         append_ivf_pq_index,
@@ -1895,9 +1901,7 @@ def test_ivf_pq_clustered_layout_and_probed_cell_listing(spark, emb, tmp_path):
 
     root = str(tmp_path / "ivfpq_clustered")
     build_ivf_pq_index(emb, root, nlist=8, m=8, codebook_size=16, store_vectors=True)
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import _live_index_root
-
-    live = _live_index_root(spark, root)  # appends land in-place: stays live
+    live = live_root(spark, root)  # appends land in-place: stays live
 
     def files_per_cell():
         return {
@@ -1973,9 +1977,8 @@ def test_ivf_pq_compact_restores_one_file_per_cell(spark, emb, tmp_path):
     import json as _json
     import os
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_root, live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _index_version,
-        _live_index_root,
         append_ivf_pq_index,
         build_ivf_pq_index,
         compact_ivf_pq_index,
@@ -2009,7 +2012,7 @@ def test_ivf_pq_compact_restores_one_file_per_cell(spark, emb, tmp_path):
 
     # a crashed prior compaction left an UNCOMMITTED staged snapshot
     # (version above the pointer) — swept on entry, never resolvable
-    assert _index_version(spark, root) == 1
+    assert live_version(spark, root) == 1
     os.makedirs(f"{root}/v=7/cell=0", exist_ok=True)
     open(f"{root}/v=7/cell=0/garbage.parquet", "w").write("junk")
 
@@ -2024,7 +2027,7 @@ def test_ivf_pq_compact_restores_one_file_per_cell(spark, emb, tmp_path):
     # the publish retained exactly {new, previous}: snapshot isolation
     # for a reader that resolved v=1 just before the flip (the crashed
     # v=7 was swept on entry, so the next version number is 2)
-    assert res["version"] == 2 and _index_version(spark, root) == 2
+    assert res["version"] == 2 and live_version(spark, root) == 2
     assert sorted(d for d in os.listdir(root) if d.startswith("v=")) == [
         "v=1",
         "v=2",
@@ -2033,7 +2036,7 @@ def test_ivf_pq_compact_restores_one_file_per_cell(spark, emb, tmp_path):
     # each compacted file is vec_id-sorted (row-group-pruning contract)
     import pyarrow.parquet as pq_
 
-    live = _live_index_root(spark, root)
+    live = live_root(spark, root)
     for d in os.listdir(live):
         if not d.startswith("cell="):
             continue
@@ -2116,59 +2119,64 @@ def test_profile_cell_skew_flags_hot_cell(spark, tmp_path):
 
 
 def test_pq_meta_torn_stamp_and_literal_path_probe(spark, emb, tmp_path):
-    """r16 (r15 ADVICE): (a) a TORN meta.json (crash mid-stamp before
-    the atomic write existed) degrades to the root-schema fallback —
-    rescore still works, and the next append re-stamps the FULL schema
-    (store_vectors + nlist + m); (b) the index existence probes are
-    exact-path (fs.exists), so a path containing glob metacharacters
-    is probed literally where globStatus would silently report it
-    missing; (c) meta writes are staged+renamed (no .tmp residue)."""
-    import json as _json
+    """(a) meta.json is written once per snapshot, atomically, and
+    never rewritten in place, so a TORN or MISSING stamp is external
+    damage: every reader raises a repair-oriented error instead of
+    guessing the layout; (b) the index existence probes are exact-path
+    (fs.exists), so a path containing glob metacharacters is probed
+    literally where globStatus would silently report it missing;
+    (c) meta writes are staged+renamed (no .tmp residue)."""
     import os
 
+    import pytest as _pytest
+
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+        glob_status,
+        live_root,
+        path_exists,
+    )
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         _load_pq_meta,
         append_ivf_pq_index,
         build_ivf_pq_index,
         ivf_pq_rescore_topk,
     )
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import _glob_status, _path_exists
 
     root = str(tmp_path / "ivfpq_torn")
     build_ivf_pq_index(
         emb.filter(F.col("vec_id") < 200), root, nlist=8, m=8,
         codebook_size=16, store_vectors=True,
     )
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import _live_index_root
-
-    live = _live_index_root(spark, root)
+    live = live_root(spark, root)
     meta_path = os.path.join(live, "_quantizer", "meta.json")
     assert not os.path.exists(meta_path + ".tmp") and not os.path.exists(
         os.path.join(live, "_quantizer", ".meta.json.tmp")
     )
-    # tear the stamp THROUGH the Hadoop FS (in-place create, no staging
-    # — the pre-atomic writer's crash shape, checksum sidecar consistent)
+    assert _load_pq_meta(spark, root)["store_vectors"] is True
+    # tear the stamp THROUGH the Hadoop FS (in-place create, no staging;
+    # checksum sidecar consistent)
     jvm = spark.sparkContext._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(meta_path)
     hfs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     stream = hfs.create(jpath, True)
     stream.write('{"store_vectors": tr'.encode())
     stream.close()
-    assert _load_pq_meta(spark, root) is None  # degrades, never raises
     q = emb.filter(F.col("vec_id") < 2)
-    assert ivf_pq_rescore_topk(spark, root, q, k=3, shortlist=8, nprobe=3).count() > 0
-    hfs.delete(jpath, False)  # pre-meta index: first append re-stamps
-    append_ivf_pq_index(
-        emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 210)), root
-    )
-    meta = _json.loads(open(meta_path).read())
-    assert meta == {"store_vectors": True, "nlist": 8, "m": 8}
+    with _pytest.raises(ValueError, match="corrupt IVF-PQ meta stamp.*rebuild"):
+        _load_pq_meta(spark, root)
+    with _pytest.raises(ValueError, match="meta stamp"):
+        ivf_pq_rescore_topk(spark, root, q, k=3, shortlist=8, nprobe=3)
+    hfs.delete(jpath, False)  # a missing stamp raises the same way
+    with _pytest.raises(ValueError, match="missing or corrupt IVF-PQ meta stamp"):
+        append_ivf_pq_index(
+            emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 210)), root
+        )
 
     # literal-path probe: glob metachars in a real dir name
     weird = tmp_path / "idx [1] {a}"
     os.makedirs(weird / "cell=0", exist_ok=True)
-    assert _path_exists(spark, str(weird / "cell=0")) is True
-    assert _glob_status(spark, str(weird / "cell=0")) == []  # the old bug
+    assert path_exists(spark, str(weird / "cell=0")) is True
+    assert glob_status(spark, str(weird / "cell=0")) == []  # the old bug
 
 
 def test_maintain_ivf_pq_index_tick(spark, emb, tmp_path):
@@ -2273,8 +2281,8 @@ def test_ivf_pq_publish_reader_and_crash_at_every_point(spark, emb, tmp_path):
     import os
     import shutil
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _index_version,
         build_ivf_pq_index,
         append_ivf_pq_index,
         compact_ivf_pq_index,
@@ -2367,14 +2375,14 @@ def test_ivf_pq_publish_reader_and_crash_at_every_point(spark, emb, tmp_path):
     # -- compaction publish points (post == pre: pure re-layout) -----
     # A: crash mid-staging — partial v=2, pointer=1
     fresh(donor=donor_c, staged_cells=3)
-    assert _index_version(spark, root) == 1
+    assert live_version(spark, root) == 1
     check("A: partial stage", pre, ["v=1", "v=2"])
     # B: staged snapshot complete, crash before the pointer flip
     fresh(donor=donor_c)
     check("B: staged, unflipped", pre, ["v=1", "v=2"])
     # C: pointer flipped, previous snapshot retained (grace)
     fresh(donor=donor_c, flip=True)
-    assert _index_version(spark, root) == 2
+    assert live_version(spark, root) == 2
     check("C: flipped, grace copy", pre, ["v=2", "v=3"])
     # D: after vacuum — only the new snapshot remains
     fresh(donor=donor_c, flip=True)
@@ -2511,8 +2519,8 @@ def test_retrain_publish_crash_recovery_and_tick_sweep(spark, emb, tmp_path):
     snapshot)."""
     import os
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _index_version,
         build_ivf_pq_index,
         ivf_pq_index_file_stats,
         ivf_pq_search,
@@ -2531,7 +2539,7 @@ def test_retrain_publish_crash_recovery_and_tick_sweep(spark, emb, tmp_path):
     # crash before the flip: a dead complete-looking staged snapshot
     os.makedirs(f"{root}/v=2/cell=0", exist_ok=True)
     open(f"{root}/v=2/cell=0/orphan.parquet", "w").write("junk")
-    assert _index_version(spark, root) == 1  # pointer untouched
+    assert live_version(spark, root) == 1  # pointer untouched
     q = emb.filter(F.col("vec_id") < 3)
     assert ivf_pq_search(spark, root, q, k=3, nprobe=8).count() > 0
     assert read_ivf_pq_index(spark, root).count() == n
@@ -2548,7 +2556,7 @@ def test_retrain_publish_crash_recovery_and_tick_sweep(spark, emb, tmp_path):
     os.makedirs(f"{root}/v=2/cell=0", exist_ok=True)
     open(f"{root}/v=2/cell=0/orphan.parquet", "w").write("junk")
     res = retrain_ivf_pq_index(spark, root, nlist=8)
-    assert res["n_rows"] == n and _index_version(spark, root) > 1
+    assert res["n_rows"] == n and live_version(spark, root) > 1
     assert ivf_pq_search(spark, root, q, k=3, nprobe=8).count() > 0
 
 
@@ -2561,8 +2569,8 @@ def test_retrain_derives_nlist_from_corpus_growth(spark, emb, tmp_path):
     skew gauge AND the per-cell population are back under the
     balanced-cell budget the sizing assumed, and the recall gate
     (all-cells rescore vs brute force) does not degrade."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_root
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _live_index_root,
         _load_pq_meta,
         append_ivf_pq_index,
         build_ivf_pq_index,
@@ -2585,7 +2593,7 @@ def test_retrain_derives_nlist_from_corpus_growth(spark, emb, tmp_path):
         emb.filter(F.col("vec_id") < 125), root, nlist=8, m=8,
         codebook_size=16, store_vectors=True,
     )
-    assert _load_pq_meta(spark, _live_index_root(spark, root))["n_rows"] == 125
+    assert _load_pq_meta(spark, live_root(spark, root))["n_rows"] == 125
     append_ivf_pq_index(emb.filter(F.col("vec_id") >= 125), root)
 
     q = emb.filter(F.col("vec_id") < 5)
@@ -2606,7 +2614,7 @@ def test_retrain_derives_nlist_from_corpus_growth(spark, emb, tmp_path):
     recall_before = recall(8)
     res = retrain_ivf_pq_index(spark, root)  # nlist derived, not passed
     assert res["nlist_before"] == 8 and res["nlist_after"] == 32
-    meta = _load_pq_meta(spark, _live_index_root(spark, root))
+    meta = _load_pq_meta(spark, live_root(spark, root))
     assert meta["nlist"] == 32 and meta["n_rows"] == 500  # new density baseline
     stored = read_ivf_pq_index(spark, root)
     assert stored.count() == 500
@@ -2704,87 +2712,6 @@ def test_retrain_recall_gate_at_production_nprobe(spark, tmp_path):
     assert tuned >= 0.9, f"tuned-fit recall gate failed: {tuned}"
 
 
-def test_migrate_legacy_index_and_writer_guards(spark, emb, tmp_path):
-    """r18: pre-versioned (r17-layout) trees stay READABLE (resolution
-    falls back to the root via its _quantizer — one stat, no listing),
-    the maintenance writers refuse them with migration guidance, and
-    migrate_ivf_pq_index moves them onto the snapshot layout in place:
-    r17 rename-aside crash states are reconciled first (a parked cell
-    whose live dir is missing is restored — zero rows lost across the
-    layout upgrade), values are identical post-migration, re-running is
-    an idempotent cleanup resume, and the migrated index compacts/
-    retrains normally."""
-    import os
-    import shutil
-
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _index_version,
-        _live_index_root,
-        build_ivf_pq_index,
-        compact_ivf_pq_index,
-        ivf_pq_index_file_stats,
-        ivf_pq_search,
-        maintain_ivf_pq_index,
-        migrate_ivf_pq_index,
-        read_ivf_pq_index,
-        retrain_ivf_pq_index,
-    )
-
-    # construct a genuine r17-layout tree: a versioned build's snapshot
-    # contents (cells + _quantizer) placed directly under a fresh root
-    donor = str(tmp_path / "donor")
-    build_ivf_pq_index(
-        emb.filter(F.col("vec_id") < 300), donor, nlist=8, m=8,
-        codebook_size=16, store_vectors=True,
-    )
-    legacy = str(tmp_path / "legacy")
-    shutil.copytree(_live_index_root(spark, donor), legacy)
-    assert _index_version(spark, legacy) is None
-
-    q = emb.filter(F.col("vec_id") < 5)
-    expected = sorted(
-        map(tuple, ivf_pq_search(spark, legacy, q, k=3, nprobe=8).collect())
-    )
-    assert expected  # legacy tree reads fine pre-migration
-    n = read_ivf_pq_index(spark, legacy).count()
-    assert ivf_pq_index_file_stats(spark, legacy)["n_cells"] > 0
-
-    # writers refuse with guidance
-    import pytest as _pytest
-
-    for op in (compact_ivf_pq_index, retrain_ivf_pq_index, maintain_ivf_pq_index):
-        with _pytest.raises(ValueError, match="migrate_ivf_pq_index"):
-            op(spark, legacy)
-
-    # r17 crash state: park one populated cell with its live dir missing
-    cells = sorted(d for d in os.listdir(legacy) if d.startswith("cell="))
-    hot = cells[0]
-    os.makedirs(f"{legacy}/.__old", exist_ok=True)
-    os.rename(f"{legacy}/{hot}", f"{legacy}/.__old/{hot}")
-
-    res = migrate_ivf_pq_index(spark, legacy)
-    assert res["migrated"] is True and res["version"] == 1
-    assert res["n_rows"] == n  # the parked cell was restored, not lost
-    assert read_ivf_pq_index(spark, legacy).count() == n
-    assert not os.path.exists(f"{legacy}/.__old")
-    assert not any(d.startswith("cell=") for d in os.listdir(legacy))
-    assert not os.path.exists(f"{legacy}/_quantizer")
-    got = sorted(
-        map(tuple, ivf_pq_search(spark, legacy, q, k=3, nprobe=8).collect())
-    )
-    assert got == expected  # values identical across the migration
-
-    # idempotent resume: a second run is a no-op cleanup
-    again = migrate_ivf_pq_index(spark, legacy)
-    assert again == {
-        "version": 1, "migrated": False, "n_rows": None, "legacy_dirs_removed": 0,
-    }
-
-    # the migrated index is a first-class versioned index
-    tick = maintain_ivf_pq_index(spark, legacy)
-    assert tick["files"]["max_files_per_cell"] == 1
-
-
 def test_corrupt_version_pointer_raises_repairable_error(spark, emb, tmp_path):
     """r18: a corrupt (present-but-unparseable) _VERSION pointer raises
     a distinct, repair-oriented error instead of masquerading as
@@ -2794,8 +2721,8 @@ def test_corrupt_version_pointer_raises_repairable_error(spark, emb, tmp_path):
     fully recovers the index."""
     import pytest as _pytest
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import stamp_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _stamp_index_version,
         build_ivf_pq_index,
         ivf_pq_search,
         read_ivf_pq_index,
@@ -2821,7 +2748,7 @@ def test_corrupt_version_pointer_raises_repairable_error(spark, emb, tmp_path):
     with _pytest.raises(ValueError, match="do NOT rebuild"):
         ivf_pq_search(spark, root, emb.filter(F.col("vec_id") < 2), k=3)
 
-    _stamp_index_version(spark, root, 1)  # the repair the error names
+    stamp_version(spark, root, 1)  # the repair the error names
     assert read_ivf_pq_index(spark, root).count() == n
 
 
@@ -2834,8 +2761,8 @@ def test_entry_sweep_keeps_actual_previous_version(spark, emb, tmp_path):
     in-flight reader may still be scanning."""
     import os
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import live_version
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
-        _index_version,
         build_ivf_pq_index,
         maintain_ivf_pq_index,
         read_ivf_pq_index,
@@ -2852,7 +2779,7 @@ def test_entry_sweep_keeps_actual_previous_version(spark, emb, tmp_path):
     # v=1 as the reader grace copy and sweeping the dead v=2
     build_ivf_pq_index(emb200, root, nlist=8, m=8, codebook_size=16,
                        store_vectors=True)
-    assert _index_version(spark, root) == 3
+    assert live_version(spark, root) == 3
     assert sorted(d for d in os.listdir(root) if d.startswith("v=")) == [
         "v=1", "v=3",
     ]
@@ -2861,3 +2788,35 @@ def test_entry_sweep_keeps_actual_previous_version(spark, emb, tmp_path):
     assert tick["versions_swept"] == []  # v=1 IS the grace copy: kept
     assert os.path.exists(f"{root}/v=1")
     assert read_ivf_pq_index(spark, root).count() == 200
+
+
+def test_scoped_persist_never_serves_a_cache_across_an_in_place_rewrite(spark, tmp_path):
+    """A scoped cache lives for one invocation: re-running the same
+    operator after its input parquet path was rewritten IN PLACE
+    (outside Spark, so no writer-side cache refresh fires) must return
+    the new rows, not the previous invocation's cache — even though the
+    two invocations build identical plans."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._cache import (
+        release_scope,
+        scoped_persist,
+    )
+
+    src = tmp_path / "rewritten"
+    src.mkdir()
+
+    def rewrite(ids):
+        pq.write_table(
+            pa.table({"id": pa.array(ids, pa.int64())}), str(src / "part-0.parquet")
+        )
+
+    def operator():
+        return scoped_persist(spark.read.parquet(str(src)), "test.in_place_rewrite")
+
+    rewrite([1, 2, 3])
+    assert sorted(r.id for r in operator().collect()) == [1, 2, 3]
+    rewrite([7, 8])
+    assert sorted(r.id for r in operator().collect()) == [7, 8]
+    release_scope("test.in_place_rewrite")
