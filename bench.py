@@ -2,8 +2,9 @@
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is forced to full execution with the noop writer (no driver
-materialization cost, no skipped compute).
+Every query is timed by scripts/measure.py: min of four cold passes, each
+run rebuilding the query after all caches are released and executing it
+fully through the noop writer.
 """
 
 from __future__ import annotations
@@ -11,9 +12,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from scripts.measure import load_avg, time_passes, warm_up  # noqa: E402
 
 BENCH_QUERIES = [
     # ingestion path (reference parity)
@@ -139,66 +141,34 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
 
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark import get_spark
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import QUERIES
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import (
+        QUERIES,
+        seed_amortized_store,
+    )
 
     spark = get_spark(app_name="bench")
-    # warm the JVM + parquet footers so per-query timings measure the query
-    QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # warm one Python worker per core (mapInPandas queries otherwise pay
-    # interpreter + Arrow startup inside their first measured stage)
-    import pandas as _pd
-    from pyspark.sql import types as _T
+    warm_up(spark, sf_dir)
 
-    def _ident(it):
-        yield from it
+    def build(name):
+        if name == "stream_semantic_dedup_amortized":
+            return QUERIES[name](spark, sf_dir, pre_seeded=True)
+        return QUERIES[name](spark, sf_dir)
 
-    n = spark.sparkContext.defaultParallelism
-    spark.range(0, n * 10, 1, n).mapInPandas(
-        _ident, _T.StructType([_T.StructField("id", _T.LongType())])
-    ).write.format("noop").mode("overwrite").save()
+    def setup(name):
+        # pay the O(corpus) store seed outside the timer — the timed
+        # figure isolates the per-trigger screen+append
+        if name == "stream_semantic_dedup_amortized":
+            seed_amortized_store(spark, sf_dir)
 
-    # Four passes, report the min: the host shows intermittent hypervisor
-    # CPU-steal waves (observed 3-15x inflation for whole passes); the min
-    # measures the query, not the noise.
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._cache import release_all_scopes
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import seed_amortized_store
-
-    timings: dict[str, float] = {}
-    for _pass in range(4):
-        for name in BENCH_QUERIES + EXTRA_QUERIES_R4 + EXTRA_QUERIES_R5 + EXTRA_QUERIES_R6 + EXTRA_QUERIES_R8 + EXTRA_QUERIES_R12:
-            kwargs = {}
-            if name == "stream_semantic_dedup_amortized":
-                # pay the O(corpus) store seed outside the timer — the
-                # timed figure isolates the per-trigger screen+append
-                seed_amortized_store(spark, sf_dir)
-                kwargs = {"pre_seeded": True}
-            t0 = time.time()
-            df = QUERIES[name](spark, sf_dir, **kwargs)
-            df.write.format("noop").mode("overwrite").save()
-            t = round(time.time() - t0, 3)
-            timings[name] = min(timings.get(name, t), t)
-        # r19 measurement fix (r18 verdict task 1): release every scoped
-        # cache AND the session cache between passes, so passes 2-4
-        # measure COLD-plan execution like pass 1 — previously the
-        # scoped_persist plan-identity fast path served pass 2-4 the
-        # prior pass's already-filled cache and the min excluded every
-        # persist-using key's cache-fill cost. Same queries, same SF,
-        # same noop-sink timing; only the between-pass state changed.
-        release_all_scopes()
-        spark.catalog.clearCache()
+    # Four cold passes, report the min: the host shows intermittent
+    # hypervisor CPU-steal waves (observed 3-15x inflation for whole
+    # passes); the min measures the query, not the noise.
+    names = BENCH_QUERIES + EXTRA_QUERIES_R4 + EXTRA_QUERIES_R5 + EXTRA_QUERIES_R6 + EXTRA_QUERIES_R8 + EXTRA_QUERIES_R12
+    timings = {k: min(v) for k, v in time_passes(spark, names, build, 4, setup).items()}
 
     # value = the 22-query set BASELINE.md totals compare against;
     # grand_total additionally includes the post-baseline additions.
     total = round(sum(timings[q] for q in BENCH_QUERIES), 3)
-    # Self-describing host context (r14 verdict task 7): the host drifts
-    # between a fast and a ~1.7x slow era on multi-hour timescales
-    # (BASELINE.md, rounds 10-14), so a single JSON artifact must carry
-    # its own load snapshot and the comparison rule instead of relying
-    # on prose in another file.
-    try:
-        load_avg = [round(x, 2) for x in os.getloadavg()]
-    except OSError:  # platform without getloadavg
-        load_avg = None
     print(
         json.dumps(
             {
@@ -209,13 +179,14 @@ def main() -> None:
                 "sf": sf,
                 "baseline_comparable_queries": len(BENCH_QUERIES),
                 "grand_total": round(sum(timings.values()), 3),
-                "load_avg_1_5_15": load_avg,
-                # r19: caches released between passes — min-of-4 is cold-plan
+                # the host drifts between a fast and a ~1.7x slow era, so
+                # the artifact carries its own load snapshot
+                "load_avg_1_5_15": load_avg(),
+                # every run releases all caches first (scripts/measure.py)
                 "cold_per_pass": True,
-                # notes shortened r19: the ~3.5 KB line outgrew the driver's
-                # r17 tail-capture window and vaporized a round-over-round
-                # table (VERDICT r18); full prose lives in BASELINE.md.
-                "era_note": "host has ~1.7x fast/slow eras; quote quietest of >=3 runs (BASELINE.md)",
+                # keep the line short: an over-long line is cut by tail
+                # capture; the full prose lives in BASELINE.md
+                "era_note": "~1.7x fast/slow host eras; quote quietest of >=3 runs",
                 "twin_note": "stream_semantic_dedup = frozen baseline twin; scale path is _amortized",
             }
         )

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ._cache import scoped_persist
+
 
 def tokenize(text: Column, lowercase: bool = True) -> Column:
     """Whitespace tokenization (JVM-side regexp split)."""
@@ -222,8 +224,6 @@ def minhash_lsh_pairs(
     64 longs), so MEMORY_AND_DISK persistence is the right trade at any
     scale: compute once, stream twice.
     """
-    from ._cache import scoped_persist
-
     signatures = scoped_persist(signatures, "dedup.lsh_pairs.signatures")
     banded = band_signatures(signatures, num_bands, num_hashes, hash_buckets)
     if max_bucket_size is not None:
@@ -400,8 +400,6 @@ def incremental_dedup_batch(
     survivors to the sink and duplicates to an audit table. Both stages
     broadcast the (small) batch side against the corpus scan under AQE.
     """
-    from ._cache import scoped_persist
-
     sign = minhash_signatures_md5 if md5_family else minhash_signatures
     corpus_hashes = content_hash(corpus, id_col, text_col).select("content_sha256").distinct()
     # the batch side is bounded by the micro-batch contract and feeds
@@ -518,8 +516,6 @@ def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFra
     Fingerprints are persisted before the self-join so the upstream
     tokenize+hash pipeline runs once, not once per join side (16 B/doc —
     cheap at any scale)."""
-    from ._cache import scoped_persist
-
     fingerprints = scoped_persist(fingerprints, "dedup.simhash_pairs.fps")
     blocks = fingerprints.select(
         "doc_id",
@@ -585,8 +581,6 @@ def ngram_jaccard_pairs(
 
     The exploded shingle set feeds both self-join sides plus the size
     aggregate — persisted so tokenization runs once, not three times."""
-    from ._cache import scoped_persist
-
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(word_shingles(tokenize(F.col(text_col)), n))).alias("shingle"),
@@ -644,8 +638,6 @@ def connected_components(
     cluster-level dedup: keep min-id per component, drop the rest.
     Returns (node, component) with component = min node id reachable.
     """
-    from ._cache import scoped_persist
-
     sym = scoped_persist(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -727,8 +719,6 @@ def simhash_near_pairs_md5(fingerprints: DataFrame, max_hamming: int = 12) -> Da
     equality join on (block, value), exact Hamming verify — the same
     plan as :func:`simhash_near_pairs` with block arithmetic that a SQL
     oracle replicates bit-for-bit."""
-    from ._cache import scoped_persist
-
     fingerprints = scoped_persist(fingerprints, "dedup.simhash_pairs_md5.fps")
     blocks = fingerprints.select(
         "doc_id",
@@ -769,7 +759,6 @@ def line_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     lines_col: str = "lines",
-    persist_exploded: bool = False,
 ) -> DataFrame:
     """CROSS-corpus line-level deduplication (the C4 §2.2 "discard any
     line that occurs elsewhere in the dataset" rule, applied
@@ -798,15 +787,11 @@ def line_dedup(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.col(lines_col)).alias("pos", "line"),
     )
-    if persist_exploded:
-        # A/B lever (r18 verdict task 3): the exploded line frame is
-        # consumed by BOTH the winners groupBy and the survivors
-        # join-back — persisting trades one corpus re-scan for a
-        # corpus-sized cache fill. Decided by measurement per corpus
-        # (scripts/dup_scan_probe.py), not by default.
-        from ._cache import scoped_persist
-
-        exploded = scoped_persist(exploded, "dedup.line_dedup.exploded")
+    # The exploded line frame feeds BOTH the winners groupBy and the
+    # survivors join-back: persisting trades one corpus re-scan for a
+    # corpus-sized cache fill, never slower in the r19 A/B at 1x and 10x
+    # (PROBES_r19.jsonl).
+    exploded = scoped_persist(exploded, "dedup.line_dedup.exploded")
     winners = exploded.groupBy("line").agg(
         F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("w")
     )
@@ -844,7 +829,6 @@ def span_dedup_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     width: int = 8,
-    persist_exploded: bool = False,
 ) -> DataFrame:
     """ExactSubstr-style duplicated-span audit (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better" §4.1),
@@ -892,15 +876,10 @@ def span_dedup_stats(
             ).otherwise(F.array().cast("array<string>"))
         ).alias("pos", "gram"),
     )
-    if persist_exploded:
-        # A/B lever (r18 verdict task 3) — same tradeoff as line_dedup:
-        # grams feeds both the winners groupBy and the dups join-back;
-        # the cache is gram-string-wide (~width words per row), so this
-        # is the §5 memory-pressure side of the bargain. Decided by
-        # scripts/dup_scan_probe.py measurement.
-        from ._cache import scoped_persist
-
-        grams = scoped_persist(grams, "dedup.span_dedup.grams")
+    # same trade as line_dedup: grams feeds both the winners groupBy and
+    # the dups join-back (the cache is gram-string-wide, ~width words per
+    # row; the r19 A/B found it never slower)
+    grams = scoped_persist(grams, "dedup.span_dedup.grams")
     winners = grams.groupBy("gram").agg(
         F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("w")
     )
@@ -974,8 +953,6 @@ def ngram_containment_pairs(
     differs, so the candidate-join cost is identical and the same
     MinHash/LSH candidates can feed it at 100 TB.
     """
-    from ._cache import scoped_persist
-
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(
@@ -1071,8 +1048,6 @@ def edit_distance_pairs(
     prefilter (|len(a)-len(b)| <= d, a lower bound on edit distance)
     drops most survivors before the O(len²) DP evaluates.
     """
-    from ._cache import scoped_persist
-
     normed = df.select(
         F.col(id_col).alias("__id"),
         normalize_text(F.col(text_col)).alias("__norm"),

@@ -73,12 +73,13 @@ def cosine_topk(
     window into the output — saves the caller a second corpus scan +
     join-back to re-attach them (the ``countmin_query`` carry pattern).
     Ranking is unaffected: the window orders on (cosine, vec_id) only.
-    Carried names must not collide with the output schema."""
+    Carried names must not collide with the output schema or the
+    scoring columns (``c_vec``/``c_norm``/``q_vec``/``q_norm``)."""
     carry = list(carry_cols or [])
-    reserved = {"query_id", "vec_id", "cosine", "rank"}
+    reserved = {"query_id", "vec_id", "cosine", "rank", "c_vec", "c_norm", "q_vec", "q_norm"}
     bad = reserved.intersection(carry)
     if bad:
-        raise ValueError(f"carry_cols collide with output columns: {sorted(bad)}")
+        raise ValueError(f"carry_cols collide with output or scoring columns: {sorted(bad)}")
     c = with_double_embedding(corpus, vec_col).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"), *carry
     ).withColumn("c_norm", _norm(F.col("c_vec")))

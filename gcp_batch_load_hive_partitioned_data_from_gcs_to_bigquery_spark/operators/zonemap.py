@@ -266,17 +266,6 @@ def refresh_zone_map(
     _STORE_CACHE.pop(zone_map_path(table_root), None)
 
 
-def maybe_refresh_zone_map(
-    spark: SparkSession, table_root: str, partitions: list[str]
-) -> bool:
-    """Sink hook: incrementally refresh the touched hours' stats iff a
-    store exists (no-op otherwise). Returns whether a refresh ran."""
-    if not has_zone_map(spark, table_root):
-        return False
-    refresh_zone_map(spark, table_root, partitions=partitions)
-    return True
-
-
 def _norm_file_path(p: str) -> str:
     """Normalize a file URI/path to its plain path component so store
     entries (``file:///x`` from ``_metadata.file_path``) compare equal
@@ -423,8 +412,6 @@ def skipping_scan(
     col: str,
     lo,
     hi,
-    use_store: bool = True,
-    distributed_threshold: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Scan ``table_root`` for rows with ``col BETWEEN lo AND hi``,
     reading only files whose zone-map interval intersects ``[lo, hi]``.
@@ -443,43 +430,40 @@ def skipping_scan(
     pre-store behavior), so a stale store can never silently drop rows.
 
     How the store is consulted depends on table size
-    (``distributed_threshold``, default :data:`DISTRIBUTED_PRUNE_FILES`):
-    below the cutoff the whole store is collected once and cached
-    driver-side (:func:`_cached_store_rows` — cheapest per scan at
-    metadata scale); at or above it the coverage check and interval
-    filter run on the EXECUTORS (:func:`_distributed_prune`) and only
-    surviving paths are collected, so driver memory is bounded by
-    selectivity, not file count. Both paths produce the identical
-    candidate list.
+    (:data:`DISTRIBUTED_PRUNE_FILES`): below the cutoff the whole store
+    is collected once and cached driver-side (:func:`_cached_store_rows`
+    — cheapest per scan at metadata scale); at or above it the coverage
+    check and interval filter run on the EXECUTORS
+    (:func:`_distributed_prune`) and only surviving paths are collected,
+    so driver memory is bounded by selectivity, not file count. Both
+    paths produce the identical candidate list.
     """
-    thr = DISTRIBUTED_PRUNE_FILES if distributed_threshold is None else distributed_threshold
     keep: list | None = None
     files_total = 0
-    if use_store:
-        live = _data_file_paths(spark, table_root)
-        if len(live) >= thr:
-            pruned = _distributed_prune(spark, table_root, col, lo, hi, live)
-            if pruned is not None:
-                keep, files_total = pruned
+    live = _data_file_paths(spark, table_root)
+    if len(live) >= DISTRIBUTED_PRUNE_FILES:
+        pruned = _distributed_prune(spark, table_root, col, lo, hi, live)
+        if pruned is not None:
+            keep, files_total = pruned
+        else:
+            # stale/unusable store at distributed scale: go STRAIGHT
+            # to on-the-fly stats — falling into the driver-snapshot
+            # branch would collect the whole store, the exact cost
+            # the cutoff exists to avoid at ~10^6 files. Pop the
+            # cache so a later refresh is re-read, not served stale.
+            _STORE_CACHE.pop(zone_map_path(table_root), None)
+            live = None
+    if keep is None and live is not None:
+        stored_rows = _cached_store_rows(spark, table_root)
+        if stored_rows and f"min_{col}" in stored_rows[0].__fields__:
+            store_files = {_norm_file_path(r["file_path"]) for r in stored_rows}
+            if store_files == live:
+                keep, files_total = _prune_rows(stored_rows, col, lo, hi)
             else:
-                # stale/unusable store at distributed scale: go STRAIGHT
-                # to on-the-fly stats — falling into the driver-snapshot
-                # branch would collect the whole store, the exact cost
-                # the cutoff exists to avoid at ~10^6 files. Pop the
-                # cache so a later refresh is re-read, not served stale.
+                # stale store (a write bypassed the sink hook, or a
+                # crash landed between data write and refresh): drop
+                # the cached snapshot, fall through to on-the-fly.
                 _STORE_CACHE.pop(zone_map_path(table_root), None)
-                live = None
-        if keep is None and live is not None:
-            stored_rows = _cached_store_rows(spark, table_root)
-            if stored_rows and f"min_{col}" in stored_rows[0].__fields__:
-                store_files = {_norm_file_path(r["file_path"]) for r in stored_rows}
-                if store_files == live:
-                    keep, files_total = _prune_rows(stored_rows, col, lo, hi)
-                else:
-                    # stale store (a write bypassed the sink hook, or a
-                    # crash landed between data write and refresh): drop
-                    # the cached snapshot, fall through to on-the-fly.
-                    _STORE_CACHE.pop(zone_map_path(table_root), None)
     if keep is None:
         rows = file_zone_map(spark, table_root, [col]).select(
             "file_path", f"min_{col}", f"max_{col}"

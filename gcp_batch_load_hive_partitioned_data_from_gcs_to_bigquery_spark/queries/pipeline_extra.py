@@ -1549,11 +1549,7 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda i: F.array_join(F.slice(words, i * 8 + 1, 8), " "),
     )
     lined = docs.select("doc_id", lines.alias("lines"))
-    # persist_exploded per r19 dup_scan_probe: at a 10x derived corpus
-    # the persisted exploded frame is never slower and cuts the scaling
-    # exponent (lines 0.025->-0.001, spans 0.252->0.118); at sf0.1 the
-    # two variants tie within noise (PROBES_r19.jsonl)
-    return D.line_dedup(lined, "doc_id", "lines", persist_exploded=True)
+    return D.line_dedup(lined, "doc_id", "lines")
 
 
 ORACLE_DEDUP_LINES = """
@@ -1933,8 +1929,7 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import span_dedup_stats
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    # persist_exploded per r19 dup_scan_probe (see q_dedup_lines)
-    return span_dedup_stats(docs, "doc_id", "text", width=8, persist_exploded=True)
+    return span_dedup_stats(docs, "doc_id", "text", width=8)
 
 
 ORACLE_DEDUP_SPANS = r"""

@@ -3,14 +3,15 @@ refine GET degrading as appends accumulate files per cell, and
 compact_ivf_pq_index restoring the build's one-sorted-file-per-cell
 cost — values bit-identical throughout.
 
-Setup: the 10× derived embeddings corpus (scale_probe derivation —
+Setup: the 10× derived embeddings corpus (scripts/measure.build_derived —
 driver sf0.1 data, id-shifted + epsilon-perturbed replicas; 20k
 vectors), nlist = 160 per the ∝-corpus maintenance contract. The index
 is built on the first 1/11 of the corpus, then grown by TEN O(batch)
 appends (a production day of hourly batches); each append adds one
 file per touched cell, so hot cells end ~11 files deep. The probed
-quantities (all min-of-2, fixed pre-collected Q×shortlist so ONLY the
-get is timed — same discipline as scale_probe's refine_get row):
+quantities (all min-of-2 cold runs of the harness, fixed pre-collected
+Q×shortlist so ONLY the get is timed — same as scale_probe's
+refine_get row):
 
 * ``refine_get_appended``   — stage-2 GET against the 10-append index
 * ``stage1_appended``       — ADC shortlist scan against it
@@ -33,9 +34,10 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import best_of, build_derived, noop  # noqa: E402
 
 DERIVED_ROOT = "/tmp/spark_graft_compact_probe"
 
@@ -55,7 +57,6 @@ def main() -> None:
         ivf_pq_rescore_topk,
         ivf_pq_search,
     )
-    from scripts.scale_probe import build_derived
 
     spark = get_spark(app_name="compaction_probe")
     corpus_dir = build_derived(spark, 10)
@@ -95,20 +96,10 @@ def main() -> None:
         append_ivf_pq_index(batch, appended)
 
     # warm the kernels (cold start fakes deltas)
-    ivf_pq_search(spark, fresh, queries20, k=1, nprobe=1).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    noop(ivf_pq_search(spark, fresh, queries20, k=1, nprobe=1))
 
     def stage1_time(root):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            ivf_pq_search(spark, root, queries20, k=20, nprobe=3).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        return round(best, 3)
+        return best_of(spark, lambda: ivf_pq_search(spark, root, queries20, k=20, nprobe=3))
 
     def refine_get_time(root):
         scored = _ivf_pq_adc_scored(spark, root, queries20, 20, 3, "vec_id", "embedding")
@@ -119,15 +110,7 @@ def main() -> None:
             .select("query_id", "vec_id", "cell")
             .collect()
         )
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            _refine_rescore(spark, root, short, queries20, 10).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        return round(best, 3)
+        return best_of(spark, lambda: _refine_rescore(spark, root, short, queries20, 10))
 
     def topk_rows(root):
         return sorted(

@@ -16,8 +16,9 @@ producer's traffic grows (the reference's per-hour job layout is
 fixed by the clock, not by volume). 1× = 100k rows (~4.2k/hour);
 K=100 → 10M rows (~420k/hour).
 
-Phases per K (min-of-2 each, noop sink for reads, real write for the
-sink — the write IS the operator):
+Phases per K (each a min-of-2 cold run of scripts/measure.py, reader
+construction and file listing included; noop sink for reads, real write
+for the sink — the write IS the operator):
 
 * ``csv_scan_day``      — full-day headerless tab-CSV parse through the
                           ingestion reader's fixed schema. Parse-bound:
@@ -53,7 +54,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BASE_SF = "/root/testdata/sf0.1"
+from scripts.measure import BASE_SF, best_of, fixture, noop  # noqa: E402
+
 DERIVED = "/tmp/spark_graft_ingest_probe"
 
 
@@ -66,55 +68,42 @@ def build_landing_csv(spark, k: int) -> str:
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import TS_FMT
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import load_table
 
-    out = f"{DERIVED}_csv_{k}x"
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    # sf0.1 events is ONE parquet split: repartition BEFORE the explode
-    # so the K×100k-row blowup runs on all cores instead of one task
-    # (the build is untimed, but at K=1000 a single-task explode of
-    # 100M rows stalls the fixture for many minutes)
-    ev = load_table(spark, BASE_SF, "events").repartition(32)
-    reps = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("rep")
-    folded = (
-        ev.select("*", reps)
-        .select(
-            (F.col("event_id").cast("long") * F.lit(1000) + F.col("rep").cast("long")).alias(
-                "event_id"
-            ),
-            # fold every day onto day 1: subtract the whole-day offset,
-            # keeping the intra-day (hour/min/sec/µs) distribution intact
-            F.expr(
-                "ts - make_dt_interval(datediff(ts, date'2024-01-01'), 0, 0, 0)"
-            ).alias("ts"),
-            (F.col("user_id").cast("long") + F.col("rep").cast("long") * F.lit(1_000_000)).alias(
-                "user_id"
-            ),
-            "event_type",
-            "value",
-            "props",
+    def write(out: str) -> None:
+        # sf0.1 events is ONE parquet split: repartition BEFORE the explode
+        # so the K×100k-row blowup runs on all cores instead of one task
+        # (the build is untimed, but at K=1000 a single-task explode of
+        # 100M rows stalls the fixture for many minutes)
+        ev = load_table(spark, BASE_SF, "events").repartition(32)
+        reps = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("rep")
+        folded = (
+            ev.select("*", reps)
+            .select(
+                (F.col("event_id").cast("long") * F.lit(1000) + F.col("rep").cast("long")).alias(
+                    "event_id"
+                ),
+                # fold every day onto day 1: subtract the whole-day offset,
+                # keeping the intra-day (hour/min/sec/µs) distribution intact
+                F.expr(
+                    "ts - make_dt_interval(datediff(ts, date'2024-01-01'), 0, 0, 0)"
+                ).alias("ts"),
+                (F.col("user_id").cast("long") + F.col("rep").cast("long") * F.lit(1_000_000)).alias(
+                    "user_id"
+                ),
+                "event_type",
+                "value",
+                "props",
+            )
         )
-    )
-    (
-        with_partition_columns(folded)
-        .repartition(32)
-        .write.partitionBy("year", "month", "day", "hour")
-        .options(sep="\t", header=False, quote="", emptyValue="", timestampFormat=TS_FMT)
-        .mode("overwrite")
-        .csv(out)
-    )
-    open(os.path.join(out, "_DONE"), "w").close()
-    return out
+        (
+            with_partition_columns(folded)
+            .repartition(32)
+            .write.partitionBy("year", "month", "day", "hour")
+            .options(sep="\t", header=False, quote="", emptyValue="", timestampFormat=TS_FMT)
+            .mode("overwrite")
+            .csv(out)
+        )
 
-
-def timed_noop(df, runs: int = 2) -> float:
-    best = None
-    for _ in range(runs):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        t = time.time() - t0
-        best = t if best is None else min(best, t)
-    return round(best, 3)
+    return fixture(f"{DERIVED}_csv_{k}x", write)
 
 
 def main() -> None:
@@ -143,10 +132,8 @@ def main() -> None:
     # 1x timings (min-of-2 alone leaves the 1x row floor-inflated and
     # the exponents then read artificially negative)
     warm = build_landing_csv(spark, 1)
-    read_hive_partitioned(spark, warm, schema=EVENTS_SCHEMA, options=csv_opts).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    _t, _root = None, f"{DERIVED}_warm_{time.monotonic_ns()}"
+    noop(read_hive_partitioned(spark, warm, schema=EVENTS_SCHEMA, options=csv_opts))
+    _root = f"{DERIVED}_warm_{time.monotonic_ns()}"
     create_partitioned_table(spark, _root)
     write_partition_overwrite(
         read_hive_partition(spark, warm, PART_HOUR, schema=EVENTS_SCHEMA, options=csv_opts),
@@ -155,35 +142,43 @@ def main() -> None:
     )
     shutil.rmtree(_root, ignore_errors=True)
 
-    def sink_timed(src_df, runs: int = 2) -> tuple[float, str]:
-        """Real write (the write IS the operator), min-of-N, fresh
-        table root each run; returns (seconds, last_root)."""
-        best, root = None, None
-        for i in range(runs):
-            root = f"{DERIVED}_tbl_{time.monotonic_ns()}"
-            create_partitioned_table(spark, root)
-            t0 = time.time()
-            write_partition_overwrite(src_df, root, cluster_by=["user_id"])
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        return round(best, 3), root
-
     tables_to_sweep: list[str] = []
+
+    def sink_time(src) -> float:
+        """Real write (the write IS the operator) of ``src()`` into a
+        fresh table root per run; the last root is ``tables_to_sweep[-1]``."""
+
+        def fresh_table():
+            tables_to_sweep.append(f"{DERIVED}_tbl_{time.monotonic_ns()}")
+            create_partitioned_table(spark, tables_to_sweep[-1])
+
+        return best_of(
+            spark,
+            lambda: write_partition_overwrite(src(), tables_to_sweep[-1], cluster_by=["user_id"]),
+            setup=fresh_table,
+        )
+
     for k in [1] + ks:
         landing = build_landing_csv(spark, k)
-        day = read_hive_partitioned(spark, landing, schema=EVENTS_SCHEMA, options=csv_opts)
-        hour = read_hive_partition(
-            spark, landing, PART_HOUR, schema=EVENTS_SCHEMA, options=csv_opts
+
+        def day():
+            return read_hive_partitioned(spark, landing, schema=EVENTS_SCHEMA, options=csv_opts)
+
+        n_rows = day().count()
+        t_scan_day = best_of(spark, day)
+        t_scan_hour = best_of(
+            spark,
+            lambda: read_hive_partition(
+                spark, landing, PART_HOUR, schema=EVENTS_SCHEMA, options=csv_opts
+            ),
         )
-        n_rows = day.count()
-        t_scan_day = timed_noop(day)
-        t_scan_hour = timed_noop(hour)
-        t_sink, big_root = sink_timed(day)
-        tables_to_sweep.append(big_root)
-        t_read = timed_noop(
-            read_landing_table(spark, big_root, PART_HOUR).select(
+        t_sink = sink_time(day)
+        big_root = tables_to_sweep[-1]
+        t_read = best_of(
+            spark,
+            lambda: read_landing_table(spark, big_root, PART_HOUR).select(
                 "event_id", "user_id", "value"
-            )
+            ),
         )
         results[f"{k}x"] = {
             "rows": n_rows,
@@ -203,18 +198,15 @@ def main() -> None:
                 schema=EVENTS_SCHEMA,
                 options=csv_opts,
             ).localCheckpoint(eager=True)
-            t_fresh, fresh_root = sink_timed(one_hour_batch)
-            tables_to_sweep.append(fresh_root)
-            t0 = time.time()
-            write_partition_overwrite(one_hour_batch, big_root, cluster_by=["user_id"])
-            t_big1 = time.time() - t0
-            t0 = time.time()
-            write_partition_overwrite(one_hour_batch, big_root, cluster_by=["user_id"])
-            t_big2 = time.time() - t0
+            t_fresh = sink_time(lambda: one_hour_batch)
+            t_big = best_of(
+                spark,
+                lambda: write_partition_overwrite(one_hour_batch, big_root, cluster_by=["user_id"]),
+            )
             results["sink_fixed_batch_vs_table_size"] = {
                 "t_fresh_table": t_fresh,
-                f"t_{k}x_table": round(min(t_big1, t_big2), 3),
-                "table_size_ratio": round(min(t_big1, t_big2) / max(t_fresh, 1e-9), 3),
+                f"t_{k}x_table": t_big,
+                "table_size_ratio": round(t_big / max(t_fresh, 1e-9), 3),
             }
 
     # exponents between adjacent scales, per phase

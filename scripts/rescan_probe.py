@@ -1,6 +1,6 @@
 """Scale probe for the r19 duplicated-derivation rewrites: time the
-restructured catalog keys at 1x and a 10x derived corpus (same derived
-fixtures as scale_probe.build_derived), so the decision between "N
+restructured catalog keys at 1x and a 10x derived corpus
+(scripts/measure.build_derived), so the decision between "N
 parallel duplicate scans" and "one derivation (+ bounded persist)" is
 made at the scale the keys exist for — at sf0.1 these queries are
 scheduler-bound and duplicate branches are latency-hidden by idle
@@ -8,8 +8,8 @@ cores, which reverses the verdict the plan shape gives at 100 TB
 (r18 change-5 lesson: measure, both ways, at both scales).
 
 Methodology: each key's module-level load_table is patched to read the
-derived corpus; noop sink; min-of-2; release_all_scopes + clearCache
-between runs (cold-plan discipline, same as time_keys.py).
+derived corpus; every figure is a min-of-2 cold run of the harness
+(scripts/measure.py, the same rule as time_keys.py).
 
 Usage: python scripts/rescan_probe.py [K] <key> [key ...]
 Prints one JSON line.
@@ -21,9 +21,10 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import best_of, build_derived, load_avg, noop  # noqa: E402
 
 
 def main() -> None:
@@ -41,9 +42,6 @@ def main() -> None:
     ]
 
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark import get_spark
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._cache import (
-        release_all_scopes,
-    )
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries import (
         analytics_extra as AX,
         behavior_extra as BX,
@@ -51,7 +49,6 @@ def main() -> None:
         pipeline_extra as PX,
         tpch_extra as TX_Q,
     )
-    from scale_probe import build_derived
 
     spark = get_spark(app_name="rescan_probe")
     base = build_derived(spark, 1)
@@ -64,57 +61,38 @@ def main() -> None:
 
     modules = [AX, BX, CAT, PX, TX_Q]
 
-    def timed(fn, root, runs: int = 2) -> float:
+    def time_on(name, root) -> float:
         orig = [m.load_table for m in modules]
         loader = make_loader(root)
         for m in modules:
             m.load_table = loader
         try:
-            best = None
-            for _ in range(runs):
-                release_all_scopes()
-                spark.catalog.clearCache()
-                t0 = time.time()
-                fn(spark, root).write.format("noop").mode("overwrite").save()
-                t = time.time() - t0
-                best = t if best is None else min(best, t)
-            return round(best, 3)
+            return best_of(spark, lambda: CAT.QUERIES[name](spark, root), key=name)
         finally:
             for m, o in zip(modules, orig):
                 m.load_table = o
-            release_all_scopes()
-            spark.catalog.clearCache()
 
     # untimed warm-up
     from pyspark.sql import functions as F
 
-    spark.read.parquet(os.path.join(base, "documents.parquet")).agg(
-        F.count(F.lit(1))
-    ).write.format("noop").mode("overwrite").save()
+    noop(spark.read.parquet(os.path.join(base, "documents.parquet")).agg(F.count(F.lit(1))))
 
     results = {}
     for name in names:
-        fn = CAT.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"rescan_probe {name} 1x")
-        t1 = timed(fn, base)
-        spark.sparkContext.setJobDescription(f"rescan_probe {name} {k}x")
-        tk = timed(fn, derived)
+        t1 = time_on(name, base)
+        tk = time_on(name, derived)
         results[name] = {
             "t_1x": t1,
             f"t_{k}x": tk,
             "exponent": round(math.log(tk / t1) / math.log(k), 3),
         }
-    try:
-        load_avg = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        load_avg = None
     print(
         json.dumps(
             {
                 "metric": "rescan_probe",
                 "k": k,
                 "operators": results,
-                "load_avg_1_5_15": load_avg,
+                "load_avg_1_5_15": load_avg(),
             }
         )
     )

@@ -22,8 +22,10 @@ original build". This probe measures that claim across octaves
                         READ the build gets as a DataFrame argument,
                         so ~1× is the expected band.
 
-Discipline (memory: probes): min-of-2 per cell, kernels warmed by a
-small throwaway build first, never overlapped with bench/pytest.
+Every cell is a min-of-2 cold run of scripts/measure.py (each build into
+a fresh root; both retrain arms of a size run on its last build),
+kernels warmed by a small throwaway build first, never overlapped with
+bench/pytest.
 
 Usage: python scripts/retrain_probe.py [K ...]   (one JSON line out)
 """
@@ -35,9 +37,10 @@ import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import BASE_SF, best_of, build_derived, load_avg  # noqa: E402
 
 PROBE_ROOT = "/tmp/spark_graft_retrain_probe"
 
@@ -51,7 +54,6 @@ def main() -> None:
         retrain_ivf_pq_index,
     )
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import load_table
-    from scripts.scale_probe import BASE_SF, build_derived
 
     spark = get_spark(app_name="retrain_probe")
     shutil.rmtree(PROBE_ROOT, ignore_errors=True)
@@ -69,55 +71,48 @@ def main() -> None:
     out = {"metric": "retrain_probe", "ks": ks, "phases": {}}
     times = {}
     for k in ks:
-        if k == 1:
-            emb = load_table(spark, BASE_SF, "embeddings")
-        else:
-            emb = spark.read.parquet(
-                os.path.join(build_derived(spark, k), "embeddings.parquet")
-            )
-        n = emb.count()
+        def emb():
+            if k == 1:
+                return load_table(spark, BASE_SF, "embeddings")
+            return spark.read.parquet(os.path.join(build_derived(spark, k), "embeddings.parquet"))
+
+        n = emb().count()
         nlist = 16 * k  # ∝ corpus, same contract as scale/compaction probes
         # PQ codebooks stay at most 256 entries (the FAISS 8-bit code
         # convention): nlist scales with the corpus, codebooks do not
         cb = min(nlist, 256)
 
-        builds, retrains, tuned = [], [], []
-        for rep in range(2):
-            root = f"{PROBE_ROOT}/idx_{k}x_{rep}"
-            t0 = time.monotonic()
-            build_ivf_pq_index(
-                emb, root, nlist=nlist, m=8, codebook_size=cb,
-                store_vectors=True,
-            )
-            builds.append(time.monotonic() - t0)
-            # the UNTUNED fit budget (pre-r19 default: 256
-            # samples/centroid, MLlib's 20 iterations) — kept as the
-            # probe's reference arm now that the capped budget is the
-            # operator default
-            t0 = time.monotonic()
-            res = retrain_ivf_pq_index(
-                spark, root, nlist=nlist,
-                fit_sample_per_cell=256, fit_max_iter=20,
-            )
-            retrains.append(time.monotonic() - t0)
+        roots: list[str] = []
+        build = best_of(
+            spark,
+            lambda: build_ivf_pq_index(
+                emb(), roots[-1], nlist=nlist, m=8, codebook_size=cb, store_vectors=True,
+            ),
+            setup=lambda: roots.append(f"{PROBE_ROOT}/idx_{k}x_{len(roots)}"),
+        )
+
+        def retrain(**budget):
+            res = retrain_ivf_pq_index(spark, roots[-1], nlist=nlist, **budget)
             assert res["n_rows"] == n, (res, n)
-            # the r19 DEFAULT budget (64 samples/centroid, 10
-            # iterations, k-means|| seeding kept — random init measured
-            # recall-flaky from a stale quantizer): the levers that
-            # bound the fit's quadratic term at large nlist
-            t0 = time.monotonic()
-            res = retrain_ivf_pq_index(spark, root, nlist=nlist)
-            tuned.append(time.monotonic() - t0)
-            assert res["n_rows"] == n, (res, n)
-        times[k] = (min(builds), min(retrains))
+
+        # the UNTUNED fit budget (pre-r19 default: 256 samples/centroid,
+        # MLlib's 20 iterations) — kept as the probe's reference arm now
+        # that the capped budget is the operator default
+        untuned = best_of(spark, lambda: retrain(fit_sample_per_cell=256, fit_max_iter=20))
+        # the r19 DEFAULT budget (64 samples/centroid, 10 iterations,
+        # k-means|| seeding kept — random init measured recall-flaky from
+        # a stale quantizer): the levers that bound the fit's quadratic
+        # term at large nlist
+        tuned = best_of(spark, retrain)
+        times[k] = (build, untuned)
         out["phases"][f"{k}x"] = {
             "rows": n,
             "nlist": nlist,
-            "build": round(min(builds), 3),
-            "retrain": round(min(retrains), 3),
-            "retrain_tuned": round(min(tuned), 3),
-            "retrain_vs_build": round(min(retrains) / min(builds), 3),
-            "retrain_tuned_vs_build": round(min(tuned) / min(builds), 3),
+            "build": build,
+            "retrain": untuned,
+            "retrain_tuned": tuned,
+            "retrain_vs_build": round(untuned / build, 3),
+            "retrain_tuned_vs_build": round(tuned / build, 3),
         }
 
     out["exponents"] = {}
@@ -129,10 +124,7 @@ def main() -> None:
         out["exponents"][f"retrain_{lo}x_{hi}x"] = round(
             math.log10(times[hi][1] / times[lo][1]) / span, 3
         )
-    try:
-        out["load_avg"] = round(os.getloadavg()[0], 2)
-    except OSError:
-        pass
+    out["load_avg_1_5_15"] = load_avg()
     print(json.dumps(out))
 
 

@@ -22,8 +22,9 @@ that was an inference.  This probe makes it a measurement two ways:
 
 Replica semantics, knob scaling (n_shards ∝ N), time-shifted intervals
 and the fixed-queries discipline are identical to scripts/scale_probe.py
-(same build_derived).  Each row's kernel is warmed untimed at 1x before
-any timing (the r14 cold-start lesson), and every timing is min-of-2.
+(same scripts/measure.build_derived).  Each row's kernel is warmed
+untimed at 1x before any timing (the r14 cold-start lesson), and every
+timing is a min-of-2 cold run of the harness.
 
 Usage: python scripts/riser_probe.py      # writes one JSON line
 """
@@ -35,13 +36,10 @@ import math
 import os
 import shutil
 import sys
-import time
 
-_HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.dirname(_HERE))
-sys.path.insert(0, _HERE)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scale_probe import build_derived, timed  # noqa: E402
+from scripts.measure import best_of, build_derived, cold_run, load_avg  # noqa: E402
 
 # NOTE: the probe bodies below (bm25 / interval-overlap / shards / int8
 # rescore) intentionally mirror scripts/scale_probe.py's rows — same
@@ -88,10 +86,11 @@ def main() -> None:
 
     results = {}
 
-    def probe(name, fn, warm=None):
-        if warm is not None:
-            warm()
-        ts = [fn(k) for k in KS]
+    def probe(name, build, setup=lambda k: None):
+        # warm the row's kernel with one untimed 1x run first
+        setup(1)
+        cold_run(spark, lambda: build(1), f"{name}#warm")
+        ts = [best_of(spark, lambda: build(k), setup=lambda: setup(k), key=name) for k in KS]
         a, b, resid = fit_floor_linear(KS, ts)
         row = {f"t_{k}x": ts[i] for i, k in enumerate(KS)}
         row["exp_1_10"] = round(math.log(ts[1] / ts[0]) / math.log(10), 3)
@@ -110,18 +109,13 @@ def main() -> None:
         print(name, row, flush=True)
 
     # --- text_bm25_topk -------------------------------------------------
-    def bm25_time(k):
-        return timed(TX.bm25_topk(tbl(k, "documents"), ["spark", "query", "join"], k=10))
-
     probe(
         "text_bm25_topk",
-        bm25_time,
-        warm=lambda: TX.bm25_topk(tbl(1, "documents"), ["spark"], k=1)
-        .write.format("noop").mode("overwrite").save(),
+        lambda k: TX.bm25_topk(tbl(k, "documents"), ["spark", "query", "join"], k=10),
     )
 
     # --- join_interval_overlap (time-shifted replicas, as scale_probe) --
-    def overlap_time(k):
+    def overlap_join(k):
         ev = tbl(k, "events")
         shift = (F.col("event_id") / F.lit(1_000_000_000)).cast("long") * F.lit(35 * 86400)
         s0 = F.unix_timestamp("ts") + shift
@@ -134,29 +128,23 @@ def main() -> None:
                 (s0 + mins * 60).alias("e"),
             )
 
-        return timed(
-            interval_overlap_join(intervals("error"), intervals("purchase"), bucket_secs=600)
-        )
+        return interval_overlap_join(intervals("error"), intervals("purchase"), bucket_secs=600)
 
-    probe("join_interval_overlap", overlap_time, warm=lambda: overlap_time(1))
+    probe("join_interval_overlap", overlap_join)
 
     # --- sink_training_shards (n_shards ∝ N, real write) ----------------
-    def shard_time(k):
-        src = tbl(k, "documents").select(
-            "doc_id", "text", token_count(F.col("text")).alias("n_tokens")
+    def shard_write(k):
+        src = tbl(k, "documents").select("doc_id", "text", token_count(F.col("text")).alias("n_tokens"))
+        write_training_shards(
+            src, f"/tmp/riser_probe_shards_{k}", "doc_id", "n_tokens", n_shards=7 * k, epoch=0
         )
-        best = None
-        for _ in range(2):
-            root = f"/tmp/riser_probe_shards_{k}"
-            shutil.rmtree(root, ignore_errors=True)
-            t0 = time.time()
-            write_training_shards(src, root, "doc_id", "n_tokens", n_shards=7 * k, epoch=0)
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        shutil.rmtree(f"/tmp/riser_probe_shards_{k}", ignore_errors=True)
-        return round(best, 3)
 
-    probe("sink_training_shards", shard_time, warm=lambda: shard_time(1))
+    def clear_shards(k):
+        shutil.rmtree(f"/tmp/riser_probe_shards_{k}", ignore_errors=True)
+
+    probe("sink_training_shards", shard_write, setup=clear_shards)
+    for k in KS:
+        clear_shards(k)
 
     # --- ann_int8_rescore_total (fixed queries; stage 2 is the known
     # scan-bound broadcast-join variant — the fit should read BOTH scans
@@ -164,18 +152,15 @@ def main() -> None:
     queries20 = (
         tbl(1, "embeddings").filter(F.col("vec_id") < 20).localCheckpoint(eager=True)
     )
-
-    def rescore_time(k):
-        return timed(
-            SIM.int8_rescore_topk(tbl(k, "embeddings"), queries20, k=10, shortlist=20)
-        )
-
-    probe("ann_int8_rescore_total", rescore_time, warm=lambda: rescore_time(1))
+    probe(
+        "ann_int8_rescore_total",
+        lambda k: SIM.int8_rescore_topk(tbl(k, "embeddings"), queries20, k=10, shortlist=20),
+    )
 
     out = {
         "probe": "riser_k100",
         "ks": KS,
-        "load_avg": round(os.getloadavg()[0], 2),
+        "load_avg_1_5_15": load_avg(),
         "results": results,
     }
     print(json.dumps(out), flush=True)

@@ -2,13 +2,9 @@
 sf0.1 and at a K×-replicated derivative, and report per-operator scaling
 exponents (t ∝ N^e → e = ln(tK/t1)/ln(K)).
 
-The K× corpus is DERIVED from the driver-provided sf0.1 parquet (never
-hand-synthesized data): each replica shifts ids, perturbs embeddings by
-a tiny deterministic epsilon (so SemDeDup doesn't see K exact copies of
-every vector — an artifact replication would introduce, not a property
-of a real 10× corpus), appends a replica token to text (fresh shingle
-hashes), and remaps user ids (so per-entity history stays constant and
-only entity COUNT scales — the shape a growing corpus actually has).
+The K× corpus is derived from the sf0.1 test-data parquet by
+scripts/measure.build_derived; every row is a min-of-2 cold run of the
+harness, construction and cache fill included.
 
 Operators with corpus-proportional knobs scale them with K, exactly as
 their docstrings prescribe for production: SemDeDup's nlist ∝ N (keeps
@@ -23,69 +19,23 @@ Writes one JSON line; copy the numbers into BASELINE.md.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BASE_SF = "/root/testdata/sf0.1"
-DERIVED = "/tmp/spark_graft_scale_probe"
-
-
-def build_derived(spark, k: int) -> str:
-    from pyspark.sql import functions as F
-
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import load_table
-
-    out = f"{DERIVED}_{k}x"
-    if os.path.exists(os.path.join(out, "_READY")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    reps = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("rep")
-
-    docs = load_table(spark, BASE_SF, "documents").select("*", reps)
-    docs.select(
-        (F.col("doc_id") + F.col("rep").cast("long") * F.lit(10_000_000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" r"), F.col("rep")).alias("text"),
-        "lang", "source",
-    ).withColumn(
-        # n_chars must describe the REPLICA's text, not the original's
-        "n_chars", F.length("text").cast("long")
-    ).repartition(32).write.mode("overwrite").parquet(os.path.join(out, "documents.parquet"))
-
-    emb = load_table(spark, BASE_SF, "embeddings").select("*", reps)
-    emb.select(
-        (F.col("vec_id") + F.col("rep").cast("long") * F.lit(10_000_000)).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda v: (v + F.col("rep").cast("float") * F.lit(0.0011)).cast("float"),
-        ).alias("embedding"),
-        "label",
-    ).repartition(32).write.mode("overwrite").parquet(os.path.join(out, "embeddings.parquet"))
-
-    ev = load_table(spark, BASE_SF, "events").select("*", reps)
-    ev.select(
-        (F.col("event_id") + F.col("rep").cast("long") * F.lit(1_000_000_000)).alias("event_id"),
-        "ts",
-        (F.col("user_id") + F.col("rep").cast("long") * F.lit(1_000_000)).alias("user_id"),
-        "event_type", "value", "props",
-    ).repartition(32).write.mode("overwrite").parquet(os.path.join(out, "events.parquet"))
-
-    open(os.path.join(out, "_READY"), "w").close()
-    return out
-
-
-def timed(df, runs: int = 2) -> float:
-    best = None
-    for _ in range(runs):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        t = time.time() - t0
-        best = t if best is None else min(best, t)
-    return round(best, 3)
+from scripts.measure import (  # noqa: E402
+    BASE_SF,
+    DERIVED,
+    best_of,
+    build_derived,
+    fixture,
+    noop,
+    single_file_drops,
+    warm_up,
+)
 
 
 def main() -> None:
@@ -98,30 +48,28 @@ def main() -> None:
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import text as TX
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.shards import write_training_shards
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.text import token_count
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import load_table
 
     spark = get_spark(app_name="scale_probe")
+    warm_up(spark, BASE_SF)
     # the 1x baseline is ALSO a derived Spark-written copy: identical
     # 32-file layout at both scales, so the ratio measures per-row work,
     # not the driver testdata's single-input-split parallelism artifact
     base = build_derived(spark, 1)
     derived = build_derived(spark, k)
 
-    import math
-
     results = {}
 
     def tbl(sf, name):
         # the derived set is Spark-written (proper timestamps, multi-file
-        # dirs); load_table's pyarrow normalization is for the driver's
-        # single-file testdata only
-        if sf == BASE_SF:
-            return load_table(spark, sf, name)
+        # dirs): no load_table normalization needed
         return spark.read.parquet(os.path.join(sf, name + ".parquet"))
 
-    def probe(name, fn):
-        t1 = fn(base, 1)
-        tk = fn(derived, k)
+    def probe(name, build, setup=lambda sf, kk: None):
+        """Min-of-2 cold runs of ``build(sf, kk)`` at 1x and Kx."""
+        t1, tk = (
+            best_of(spark, lambda: build(sf, kk), setup=lambda: setup(sf, kk))
+            for sf, kk in ((base, 1), (derived, k))
+        )
         results[name] = {
             "t_sf0.1": t1,
             f"t_{k}x": tk,
@@ -134,46 +82,36 @@ def main() -> None:
     # corpus-proportional knob: nlist ∝ N (SemDeDup paper rule)
     probe(
         "dedup_semantic",
-        lambda sf, kk: timed(
-            SIM.semdedup(
-                tbl(sf, "embeddings"), nlist=64 * kk, min_cosine=0.3
-            ).select("vec_id", "cell", "keep")
-        ),
+        lambda sf, kk: SIM.semdedup(
+            tbl(sf, "embeddings"), nlist=64 * kk, min_cosine=0.3
+        ).select("vec_id", "cell", "keep"),
     )
     probe(
         "classify_naive_bayes",
-        lambda sf, kk: timed(
-            CL.naive_bayes_confusion(docs_of(sf), "doc_id", "text", "lang")
-        ),
+        lambda sf, kk: CL.naive_bayes_confusion(docs_of(sf), "doc_id", "text", "lang"),
     )
     probe(
         "text_repetition_filter",
-        lambda sf, kk: timed(TX.repetition_signals(docs_of(sf), "doc_id", "text")),
+        lambda sf, kk: TX.repetition_signals(docs_of(sf), "doc_id", "text"),
     )
     probe(
         "text_bm25_topk",
-        lambda sf, kk: timed(
-            TX.bm25_topk(docs_of(sf), ["spark", "query", "join"], k=10)
-        ),
+        lambda sf, kk: TX.bm25_topk(docs_of(sf), ["spark", "query", "join"], k=10),
     )
 
     # shard sink: n_shards ∝ N keeps per-shard size constant; timing is
     # the real write (the write IS the operator), not a noop
-    def shard_probe(sf, kk):
-        src = docs_of(sf).select(
-            "doc_id", "text", token_count(F.col("text")).alias("n_tokens")
+    def shard_write(sf, kk):
+        src = docs_of(sf).select("doc_id", "text", token_count(F.col("text")).alias("n_tokens"))
+        write_training_shards(
+            src, f"/tmp/scale_probe_shards_{kk}", "doc_id", "n_tokens", n_shards=7 * kk, epoch=0
         )
-        best = None
-        for _ in range(2):
-            root = f"/tmp/scale_probe_shards_{kk}"
-            shutil.rmtree(root, ignore_errors=True)
-            t0 = time.time()
-            write_training_shards(src, root, "doc_id", "n_tokens", n_shards=7 * kk, epoch=0)
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        return round(best, 3)
 
-    probe("sink_training_shards", shard_probe)
+    probe(
+        "sink_training_shards",
+        shard_write,
+        setup=lambda sf, kk: shutil.rmtree(f"/tmp/scale_probe_shards_{kk}", ignore_errors=True),
+    )
 
     # Interval-overlap join: replicas are TIME-SHIFTED (35 days apart,
     # recovered from the event_id's replica stride) so interval density
@@ -183,7 +121,7 @@ def main() -> None:
     # semantics, which would swamp the plan signal.
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.temporal import interval_overlap_join
 
-    def overlap_probe(sf, kk):
+    def overlap_join(sf, kk):
         ev = tbl(sf, "events")
         shift = (F.col("event_id") / F.lit(1_000_000_000)).cast("long") * F.lit(35 * 86400)
         s0 = F.unix_timestamp("ts") + shift
@@ -196,12 +134,11 @@ def main() -> None:
                 (s0 + mins * 60).alias("e"),
             )
 
-        pairs = interval_overlap_join(
+        return interval_overlap_join(
             intervals("error"), intervals("purchase"), bucket_secs=600
         )
-        return timed(pairs)
 
-    probe("join_interval_overlap", overlap_probe)
+    probe("join_interval_overlap", overlap_join)
 
     # BPE encode with a FROZEN tokenizer (trained once on the 1x
     # corpus — production freezes the tokenizer before corpus growth):
@@ -218,10 +155,8 @@ def main() -> None:
     ]
     probe(
         "text_bpe_encode",
-        lambda sf, kk: timed(
-            bpe_encode(docs_of(sf), "doc_id", "text", frozen_merges).select(
-                "doc_id", F.size("tokens").alias("n_tokens")
-            )
+        lambda sf, kk: bpe_encode(docs_of(sf), "doc_id", "text", frozen_merges).select(
+            "doc_id", F.size("tokens").alias("n_tokens")
         ),
     )
 
@@ -236,25 +171,17 @@ def main() -> None:
     # didn't): one O(N) pilot-shifted partials pass collected as one
     # d^2-sized row per partition + an O(d^3) driver eigh. Expect
     # ~linear-bounded in rows with a large fixed floor at these sizes.
-    # pca_fit_project's partials .collect() is the action, so time the
-    # call directly (min-of-2, same discipline as timed()).
-    def pca_fit_time(sf, kk):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            SIM.pca_fit_project(tbl(sf, "embeddings"), "vec_id", "embedding", k=8)
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        return round(best, 3)
-
-    probe("pca_fit_moment_pass", pca_fit_time)
+    # pca_fit_project's partials .collect() is the action (it returns a
+    # tuple, so the harness times the call as it is).
+    probe(
+        "pca_fit_moment_pass",
+        lambda sf, kk: SIM.pca_fit_project(tbl(sf, "embeddings"), "vec_id", "embedding", k=8),
+    )
     probe(
         "pca_apply_frozen_model",
-        lambda sf, kk: timed(
-            SIM.pca_apply(tbl(sf, "embeddings"), frozen_pca, "vec_id", "embedding").select(
-                "vec_id", F.size("pca").alias("w")
-            )
-        ),
+        lambda sf, kk: SIM.pca_apply(
+            tbl(sf, "embeddings"), frozen_pca, "vec_id", "embedding"
+        ).select("vec_id", F.size("pca").alias("w")),
     )
 
     # Multimodal pixel decode (r13 verdict task 6 — the one heavy
@@ -267,31 +194,25 @@ def main() -> None:
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import multimodal as MM
 
     def media_root(sf, kk):
-        root = f"{DERIVED}_media_png_{kk}x"
-        if not os.path.exists(os.path.join(root, "_READY")):
-            shutil.rmtree(root, ignore_errors=True)
-            MM.documents_as_png_media(
+        return fixture(
+            f"{DERIVED}_media_png_{kk}x",
+            lambda root: MM.documents_as_png_media(
                 docs_of(sf).repartition(spark.sparkContext.defaultParallelism)
-            ).write.mode("overwrite").parquet(root)
-            open(os.path.join(root, "_READY"), "w").close()
-        return root
+            ).write.mode("overwrite").parquet(root),
+        )
 
     # untimed warm-up: the FIRST decode pass in a session pays ~4 s of
     # Python-worker/Arrow setup for this kernel shape (measured: pass0
     # 5.4 s vs warm 1.2-1.4 s at 1x) — without it the 1x min-of-2 stays
     # partially cold while the 10x runs fully warm, faking a NEGATIVE
     # exponent (r14 runs A/B reproduced -0.13/-0.18 before this fix)
-    MM.image_pixel_stats(
-        MM.decode_image_pixels(spark.read.parquet(media_root(base, 1)))
-    ).write.format("noop").mode("overwrite").save()
-    probe(
-        "multimodal_pixel_decode",
-        lambda sf, kk: timed(
-            MM.image_pixel_stats(
-                MM.decode_image_pixels(spark.read.parquet(media_root(sf, kk)))
-            )
-        ),
-    )
+    def pixel_stats(sf, kk):
+        return MM.image_pixel_stats(
+            MM.decode_image_pixels(spark.read.parquet(media_root(sf, kk)))
+        )
+
+    noop(pixel_stats(base, 1))
+    probe("multimodal_pixel_decode", pixel_stats)
 
     # Sliding-window family: raw events are touched once (map-side
     # bitmap collapse / per-hour top-k), then the trailing merge moves
@@ -300,17 +221,18 @@ def main() -> None:
     # K while the calendar stays fixed — expect ~linear.
     import gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.analytics_extra as AX
 
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import QUERIES
+
     def sliding_probe(qname):
-        def run(sf, kk):
+        def build(sf, kk):
             ev = tbl(sf, "events")
             orig = AX.load_table
             AX.load_table = lambda s_, d_, n_: ev
             try:
-                from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import QUERIES
-                return timed(QUERIES[qname](spark, sf))
+                return QUERIES[qname](spark, sf)
             finally:
                 AX.load_table = orig
-        return run
+        return build
 
     probe("window_sliding_distinct", sliding_probe("window_sliding_distinct"))
     probe("window_sliding_quantile", sliding_probe("window_sliding_quantile"))
@@ -336,8 +258,9 @@ def main() -> None:
     def screen_time(sf, kk):
         root = f"{DERIVED}_cells_{kk}x"
         persist_corpus_cells(tbl(sf, "embeddings"), root, nlist=64 * kk)
-        return timed(
-            semdedup_batch_vs_table(spark, root, batch, nlist=64 * kk, min_cosine=0.3)
+        return best_of(
+            spark,
+            lambda: semdedup_batch_vs_table(spark, root, batch, nlist=64 * kk, min_cosine=0.3),
         )
 
     t1 = screen_time(base, 1)
@@ -358,13 +281,11 @@ def main() -> None:
     )
     probe(
         "ann_int8_shortlist_gemm",
-        lambda sf, kk: timed(SIM.int8_topk(tbl(sf, "embeddings"), queries20, k=20)),
+        lambda sf, kk: SIM.int8_topk(tbl(sf, "embeddings"), queries20, k=20),
     )
     probe(
         "ann_int8_rescore_total",
-        lambda sf, kk: timed(
-            SIM.int8_rescore_topk(tbl(sf, "embeddings"), queries20, k=10, shortlist=20)
-        ),
+        lambda sf, kk: SIM.int8_rescore_topk(tbl(sf, "embeddings"), queries20, k=10, shortlist=20),
     )
     g, tot = results["ann_int8_shortlist_gemm"], results["ann_int8_rescore_total"]
     results["ann_int8_rescore_stage2_increment"] = {
@@ -392,41 +313,28 @@ def main() -> None:
     def refine_root(sf, kk):
         # _v2: the r15 cluster-by-cell build layout (one sorted file per
         # cell) — cached pre-change indexes must not satisfy this name
-        root = f"{DERIVED}_ivfpqref_v2_{kk}x"
-        if not os.path.exists(os.path.join(root, "_READY")):
-            shutil.rmtree(root, ignore_errors=True)
-            build_ivf_pq_index(
+        return fixture(
+            f"{DERIVED}_ivfpqref_v2_{kk}x",
+            lambda root: build_ivf_pq_index(
                 tbl(sf, "embeddings"), root,
                 nlist=16 * kk, m=8, codebook_size=16 * kk, store_vectors=True,
-            )
-            open(os.path.join(root, "_READY"), "w").close()
-        return root
+            ),
+        )
 
     # untimed warm-up of the ADC kernel shape (per-kernel cold start
     # fakes exponents — r14 lesson)
-    ivf_pq_search(
-        spark, refine_root(base, 1), queries20, k=1, nprobe=1
-    ).write.format("noop").mode("overwrite").save()
-
-    def rescore_total_time(sf, kk):
-        root = refine_root(sf, kk)
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            ivf_pq_rescore_topk(
-                spark, root, queries20, k=10, shortlist=20, nprobe=3
-            ).write.format("noop").mode("overwrite").save()
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        return round(best, 3)
+    noop(ivf_pq_search(spark, refine_root(base, 1), queries20, k=1, nprobe=1))
 
     probe(
         "ann_ivf_pq_shortlist_stage1",
-        lambda sf, kk: timed(
-            ivf_pq_search(spark, refine_root(sf, kk), queries20, k=20, nprobe=3)
+        lambda sf, kk: ivf_pq_search(spark, refine_root(sf, kk), queries20, k=20, nprobe=3),
+    )
+    probe(
+        "ann_ivf_pq_rescore_total",
+        lambda sf, kk: ivf_pq_rescore_topk(
+            spark, refine_root(sf, kk), queries20, k=10, shortlist=20, nprobe=3
         ),
     )
-    probe("ann_ivf_pq_rescore_total", rescore_total_time)
     s1 = results["ann_ivf_pq_shortlist_stage1"]
     st = results["ann_ivf_pq_rescore_total"]
     # end-to-end increment: total re-runs stage 1 internally (ADC scan +
@@ -449,27 +357,23 @@ def main() -> None:
     )
     from pyspark.sql import Window as _W
 
-    def refine_get_time(sf, kk):
-        root = refine_root(sf, kk)
-        scored = _ivf_pq_adc_scored(spark, root, queries20, 20, 3, "vec_id", "embedding")
+    def shortlist(sf, kk):
+        scored = _ivf_pq_adc_scored(
+            spark, refine_root(sf, kk), queries20, 20, 3, "vec_id", "embedding"
+        )
         w1 = _W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        short = (
+        return (
             scored.withColumn("rnk", F.row_number().over(w1))
             .filter(F.col("rnk") <= 20)
             .select("query_id", "vec_id", "cell")
             .collect()
         )
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            _refine_rescore(spark, root, short, queries20, 10).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        return round(best, 3)
 
-    probe("ann_ivf_pq_refine_get", refine_get_time)
+    short = {1: shortlist(base, 1), k: shortlist(derived, k)}
+    probe(
+        "ann_ivf_pq_refine_get",
+        lambda sf, kk: _refine_rescore(spark, refine_root(sf, kk), short[kk], queries20, 10),
+    )
 
     # stream_sliding_distinct store-age curve: the sink merges ONLY the
     # batch's touched hour partitions (existence-probed per key, never a
@@ -506,27 +410,27 @@ def main() -> None:
         seed.repartition(F.col("hr")).write.partitionBy("hr").mode(
             "overwrite"
         ).parquet(store)
-        # run 0 is an UNTIMED warm-up: the first drain after the (age-
-        # proportional, up to ~60 s at 2400 partitions) seed write pays
-        # cold Python workers + post-write IO/GC pressure — timing it
-        # once inflated the old-store number ~4x and faked an age
-        # dependence the warm triggers don't have (r11 re-measurement:
-        # warm triggers are ~1.6-1.8 s at BOTH ages)
-        best = None
-        for r in range(3):
-            ckpt = f"{store}_ckpt_{r}"
+        ckpt = f"{store}_ckpt"
+
+        def fresh_ckpt():
             shutil.rmtree(ckpt, ignore_errors=True)
-            t0 = time.time()
+
+        def trigger():
             q = stream_bitmap_distinct(
                 spark, batch_src, store, ev_schema, ckpt,
                 max_files_per_trigger=10, grain="hour",
             )
             drain_stream(q, what="store-age probe")
-            t = time.time() - t0
-            if r == 0:
-                continue
-            best = t if best is None else min(best, t)
-        return round(best, 3)
+
+        # one UNTIMED warm-up trigger: the first drain after the (age-
+        # proportional, up to ~60 s at 2400 partitions) seed write pays
+        # cold Python workers + post-write IO/GC pressure — timing it
+        # once inflated the old-store number ~4x and faked an age
+        # dependence the warm triggers don't have (r11 re-measurement:
+        # warm triggers are ~1.6-1.8 s at BOTH ages)
+        fresh_ckpt()
+        trigger()
+        return best_of(spark, trigger, setup=fresh_ckpt)
 
     t_young, t_old = age_trigger_time(240), age_trigger_time(2400)
     results["stream_sliding_distinct_store_age"] = {
@@ -548,36 +452,31 @@ def main() -> None:
     # includes the one-trigger Structured Streaming floor (~1.1-1.4 s)
     # at BOTH scales, so a flat ratio is conservative evidence. Run 0 is
     # an untimed warm-up (post-seed IO/worker pressure, same discipline
-    # as the store-age row); the store is re-seeded per run so appends
-    # never accumulate into the next run's corpus.
+    # as the store-age row); the store is re-seeded before every run so
+    # appends never accumulate into the next run's corpus.
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.streaming.semantic_stream import (
         stream_semantic_dedup,
     )
 
-    amort_src = f"{DERIVED}_amortbatch96"
-    if not os.path.exists(os.path.join(amort_src, "_READY")):
-        shutil.rmtree(amort_src, ignore_errors=True)
-        os.makedirs(amort_src, exist_ok=True)
-        for i in range(16):
-            part = tbl(base, "embeddings").filter(
+    amort_src = single_file_drops(
+        [
+            tbl(base, "embeddings").filter(
                 (F.col("vec_id") < 96) & (F.pmod(F.col("vec_id"), 16) == i)
             )
-            stage = f"{amort_src}_stage"
-            part.coalesce(1).write.mode("overwrite").parquet(stage)
-            fname = next(f_ for f_ in os.listdir(stage) if f_.endswith(".parquet"))
-            dst = os.path.join(amort_src, f"{i:04d}.parquet")
-            os.replace(os.path.join(stage, fname), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(f"{amort_src}_stage", ignore_errors=True)
-        open(os.path.join(amort_src, "_READY"), "w").close()
+            for i in range(16)
+        ],
+        f"{DERIVED}_amortbatch96",
+    )
     emb_schema = spark.read.parquet(amort_src).schema
 
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import drop_corpus_cells
 
     def amort_trigger_time(sf, kk) -> float:
         root = f"{DERIVED}_amort_cells_{kk}x"
-        best = None
-        for r in range(3):
+        ckpt = f"{DERIVED}_amort_ckpt_{kk}"
+        audit = f"{DERIVED}_amort_audit_{kk}"
+
+        def reseed():
             drop_corpus_cells(spark, root)
             # seed EXCLUDING the batch's ids AND their Kx replicas
             # (pmod strips the +rep*10M replica offset): the trigger's
@@ -596,28 +495,26 @@ def main() -> None:
                 root,
                 nlist=64 * kk,
             )
-            ckpt = f"{DERIVED}_amort_ckpt_{kk}_{r}"
-            audit = f"{DERIVED}_amort_audit_{kk}_{r}"
             for d_ in (ckpt, audit):
                 shutil.rmtree(d_, ignore_errors=True)
-            t0 = time.time()
+
+        def trigger():
             # min_cosine=0.9 here (vs 0.3 on the screen rows): the
             # screen's compute cost is threshold-independent, but at
             # 0.3 only ~5 of the 96 batch vectors survive to append —
             # 0.9 lets ~the whole batch through so the timed append
             # writes a meaningful, scale-symmetric number of rows
-            q = stream_semantic_dedup(
+            stream_semantic_dedup(
                 spark, amort_src, root, audit, emb_schema,
                 nlist=64 * kk, min_cosine=0.9, checkpoint=ckpt,
                 max_files_per_trigger=16,
-            )
-            q.awaitTermination()
-            t = time.time() - t0
-            if r == 0:
-                continue
-            best = t if best is None else min(best, t)
+            ).awaitTermination()
+
+        reseed()
+        trigger()  # untimed warm-up
+        t = best_of(spark, trigger, setup=reseed)
         drop_corpus_cells(spark, root)
-        return round(best, 3)
+        return t
 
     ta1, tak = amort_trigger_time(base, 1), amort_trigger_time(derived, k)
     results["stream_semantic_amortized_trigger"] = {

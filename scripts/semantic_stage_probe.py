@@ -9,8 +9,9 @@ exponent can be attributed to a stage instead of guessed at:
 nlist scales with K (the corpus-proportional rule the operator
 documents), so `assign` FLOPs grow K^2 by construction — this probe
 exists to show whether that term dominates the wall clock yet, and to
-size the two-level assignment work. Reuses scale_probe's derived-corpus
-builder (1x is also Spark-written, so layouts match).
+size the two-level assignment work. Uses the harness's derived-corpus
+builder (1x is also Spark-written, so layouts match); every stage is a
+min-of-2 cold run.
 
 Usage: python scripts/semantic_stage_probe.py [K]   (default 10)
 Writes one JSON line; copy the numbers into BASELINE.md.
@@ -22,15 +23,10 @@ import json
 import math
 import os
 import sys
-import time
 
-# repo root (package import) AND scripts dir (sibling scale_probe) must
-# both be on the path BEFORE the sibling import, or `python -m` / other
-# cwds break — only direct invocation puts scripts/ on sys.path[0]
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scale_probe import build_derived, timed  # noqa: E402
+from scripts.measure import best_of, build_derived  # noqa: E402
 
 
 def main() -> None:
@@ -45,30 +41,30 @@ def main() -> None:
     derived = build_derived(spark, k)
 
     def run(sf_dir: str, nlist: int) -> dict:
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        c = SIM.with_double_embedding(emb, "embedding").select(
-            F.col("vec_id"), F.col("embedding").alias("c_vec")
-        )
-        c.count()  # warm the scan/JVM so the first timed stage isn't startup
+        def emb():
+            return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+
+        def c():
+            return SIM.with_double_embedding(emb(), "embedding").select(
+                F.col("vec_id"), F.col("embedding").alias("c_vec")
+            )
+
+        c().count()  # warm the scan/JVM so the first timed stage isn't startup
         out = {}
-        # min-of-2 like timed(): the seed stage is a driver-side collect,
-        # so it can't go through the noop-write harness
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            centroid_rows = SIM._seed_centroid_rows(c, nlist)
-            t = time.time() - t0
-            best = t if best is None else min(best, t)
-        out["seed"] = round(best, 3)
-        assigned = SIM._assign_cells_blas(c, centroid_rows).withColumn(
-            "c_norm", SIM._norm(F.col("c_vec"))
+        # the seed stage is a driver-side collect: timed as it is
+        out["seed"] = best_of(spark, lambda: SIM._seed_centroid_rows(c(), nlist))
+        centroid_rows = SIM._seed_centroid_rows(c(), nlist)
+        out["assign"] = best_of(
+            spark,
+            lambda: SIM._assign_cells_blas(c(), centroid_rows).withColumn(
+                "c_norm", SIM._norm(F.col("c_vec"))
+            ),
         )
-        out["assign"] = timed(assigned, runs=2)
-        out["full"] = timed(
-            SIM.semdedup(emb, nlist=nlist, min_cosine=0.3).select(
+        out["full"] = best_of(
+            spark,
+            lambda: SIM.semdedup(emb(), nlist=nlist, min_cosine=0.3).select(
                 "vec_id", "cell", "keep"
             ),
-            runs=2,
         )
         return out
 

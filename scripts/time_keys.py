@@ -1,13 +1,11 @@
 """Timing harness for ARBITRARY catalog keys — the measurable
 before/after that `bench.py` gives the 62 benched keys, extended to the
-rest of the 262-key catalog (r18 verdict task 4: the >=3-rescan
-non-benched keys had no timing evidence, so duplicated-derivation fixes
-there were invisible).
+rest of the 262-key catalog.
 
-Same methodology as bench.py post-r19: noop sink (guide §1.4), min-of-N
-passes, and ALL caches released between passes (scoped_persist scopes +
-spark.catalog.clearCache) so every pass measures COLD-plan execution —
-the cache-fill cost of any persist stays inside the timed region.
+Same rule as bench.py (scripts/measure.py): min of N pass-major cold
+runs, each rebuilding the query after every cache is released and
+executing it through the noop sink, so the cache-fill cost of any
+persist stays inside the timed region.
 
 Usage: python scripts/time_keys.py [-n PASSES] <key> [key ...]
 Prints one JSON line: {"metric": "time_keys", "queries": {...}, ...}.
@@ -18,9 +16,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import load_avg, time_passes, warm_up  # noqa: E402
 
 
 def main() -> int:
@@ -37,60 +36,22 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark import get_spark
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._cache import (
-        release_all_scopes,
-    )
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import QUERIES
 
     spark = get_spark(app_name="time_keys")
-    # warm the JVM + parquet footers + one Python worker per core, same
-    # as bench.py — timings measure the query, not interpreter startup
-    QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    import pandas as _pd  # noqa: F401
-    from pyspark.sql import types as _T
-
-    def _ident(it):
-        yield from it
-
-    n = spark.sparkContext.defaultParallelism
-    spark.range(0, n * 10, 1, n).mapInPandas(
-        _ident, _T.StructType([_T.StructField("id", _T.LongType())])
-    ).write.format("noop").mode("overwrite").save()
-
-    timings: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {k: [] for k in names}
-    for _pass in range(n_passes):
-        for name in names:
-            spark.sparkContext.setJobDescription(f"time_keys: {name}")
-            t0 = time.time()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            t = round(time.time() - t0, 3)
-            all_runs[name].append(t)
-            timings[name] = min(timings.get(name, t), t)
-            spark.sparkContext.setJobDescription(None)
-        # cold-plan discipline: next pass re-fills any persisted
-        # intermediate inside its own timed region
-        release_all_scopes()
-        spark.catalog.clearCache()
-
-    try:
-        load_avg = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        load_avg = None
+    warm_up(spark, sf_dir)
+    all_runs = time_passes(spark, names, lambda name: QUERIES[name](spark, sf_dir), n_passes)
     print(
         json.dumps(
             {
                 "metric": "time_keys",
                 "unit": "sec",
-                "queries": timings,
+                "queries": {k: min(v) for k, v in all_runs.items()},
                 "runs": all_runs,
                 "passes": n_passes,
                 "sf_dir": sf_dir,
                 "cold_per_pass": True,
-                "load_avg_1_5_15": load_avg,
+                "load_avg_1_5_15": load_avg(),
             }
         )
     )

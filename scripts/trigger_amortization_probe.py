@@ -14,6 +14,8 @@ stance — so drops sharing a bigger trigger skip screening against each
 other); the invariant checked instead is survivors + audited == batch
 total per run.
 
+Each drain is one cold run of scripts/measure.py.
+
 Usage: python scripts/trigger_amortization_probe.py
 Writes one JSON line; copy the table into BASELINE.md.
 """
@@ -24,9 +26,10 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import BASE_SF, best_of, single_file_drops  # noqa: E402
 
 ROOT = "/tmp/spark_graft_trigger_probe"
 
@@ -42,27 +45,15 @@ def main() -> None:
     )
 
     spark = get_spark(app_name="trigger_amortization_probe")
-    emb = load_table(spark, "/root/testdata/sf0.1", "embeddings")
+    emb = load_table(spark, BASE_SF, "embeddings")
     seed = emb.filter(F.col("vec_id") % 4 != 0)
 
     # 16 arrival-ordered single-file batch drops (the store is seeded
     # separately, before the clock starts)
-    src = os.path.join(ROOT, "src")
-    if not os.path.exists(os.path.join(src, "_READY")):
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src)
-        drops = [
-            emb.filter((F.col("vec_id") % 4 == 0) & (F.col("vec_id") % 16 == i))
-            for i in range(16)
-        ]
-        for i, part in enumerate(drops):
-            stage = os.path.join(ROOT, f"stage{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(stage)
-            name = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i:04d}.parquet")
-            os.rename(os.path.join(stage, name), dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        open(os.path.join(src, "_READY"), "w").close()
+    src = single_file_drops(
+        [emb.filter((F.col("vec_id") % 4 == 0) & (F.col("vec_id") % 16 == i)) for i in range(16)],
+        os.path.join(ROOT, "src"),
+    )
 
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import (
         persist_corpus_cells,
@@ -76,18 +67,23 @@ def main() -> None:
         cells_root = os.path.join(ROOT, f"cells_{mft}")
         audit = os.path.join(ROOT, f"audit_{mft}")
         ckpt = os.path.join(ROOT, f"ckpt_{mft}")
-        for d in (audit, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-        drop_corpus_cells(spark, cells_root)
-        persist_corpus_cells(seed, cells_root, nlist=64)  # outside the clock
-        t0 = time.time()
-        q = stream_semantic_dedup(
-            spark, src, cells_root, audit, emb.schema,
-            nlist=64, min_cosine=0.3, checkpoint=ckpt,
-            max_files_per_trigger=mft,
+
+        def reset():
+            for d in (audit, ckpt):
+                shutil.rmtree(d, ignore_errors=True)
+            drop_corpus_cells(spark, cells_root)
+            persist_corpus_cells(seed, cells_root, nlist=64)  # outside the clock
+
+        elapsed = best_of(
+            spark,
+            lambda: stream_semantic_dedup(
+                spark, src, cells_root, audit, emb.schema,
+                nlist=64, min_cosine=0.3, checkpoint=ckpt,
+                max_files_per_trigger=mft,
+            ).awaitTermination(),
+            runs=1,
+            setup=reset,
         )
-        q.awaitTermination()
-        elapsed = round(time.time() - t0, 3)
         n_store = read_corpus_cells(spark, cells_root).count()
         n_audit = spark.read.parquet(audit).count()
         rows.append(

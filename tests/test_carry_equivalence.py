@@ -141,6 +141,15 @@ def test_cosine_topk_carry_cols_reserved_names_raise(spark):
         cosine_topk(emb, emb.limit(1), k=2, carry_cols=["cosine"])
 
 
+def test_cosine_topk_carry_cols_scoring_names_raise(spark):
+    """A carried ``c_norm`` would be silently overwritten by the
+    computed corpus norm; every scoring column name must be refused."""
+    emb = _emb(spark)
+    for name in ("c_norm", "c_vec", "q_vec", "q_norm"):
+        with pytest.raises(ValueError, match="carry_cols collide"):
+            cosine_topk(emb.withColumn(name, F.lit(1.0)), emb.limit(1), k=2, carry_cols=[name])
+
+
 def test_repetition_signals_carry_cols_equal_join_back(spark):
     docs = _docs(spark).withColumn("n_chars", F.length("text"))
     plain = repetition_signals(docs, "doc_id", "text")

@@ -148,10 +148,10 @@ def test_norm_path_sql_and_driver_agree(spark):
     assert got[2] == "/t/sp ace/part-2.parquet"   # %20 decodes
 
 
-def test_skipping_scan_distributed_path_matches_driver_path(spark, events):
+def test_skipping_scan_distributed_path_matches_driver_path(spark, events, monkeypatch):
     """Above the file-count cutoff the candidate list is pruned on the
-    executors (stats rows never collected); forcing that path with
-    distributed_threshold=1 must yield the IDENTICAL candidate set,
+    executors (stats rows never collected); forcing that path with a
+    cutoff of 1 must yield the IDENTICAL candidate set,
     counts, and rows as the cached driver path."""
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import zonemap as ZM
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import (
@@ -165,16 +165,15 @@ def test_skipping_scan_distributed_path_matches_driver_path(spark, events):
 
     lo, hi = 100, 5000
     d_df, d_read, d_total = ZM.skipping_scan(spark, root, "user_id", lo, hi)
-    x_df, x_read, x_total = ZM.skipping_scan(
-        spark, root, "user_id", lo, hi, distributed_threshold=1
-    )
+    monkeypatch.setattr(ZM, "DISTRIBUTED_PRUNE_FILES", 1)
+    x_df, x_read, x_total = ZM.skipping_scan(spark, root, "user_id", lo, hi)
     assert (x_read, x_total) == (d_read, d_total)
     assert sorted(x_df.inputFiles()) == sorted(d_df.inputFiles())
     want = day1.filter(F.col("user_id").between(lo, hi)).count()
     assert x_df.count() == d_df.count() == want
 
 
-def test_skipping_scan_distributed_falls_back_on_stale_store(spark, events):
+def test_skipping_scan_distributed_falls_back_on_stale_store(spark, events, monkeypatch):
     """A data file that bypassed the sink hook must fail the distributed
     coverage check (anti-join, not set equality on the driver) and fall
     back to on-the-fly stats — every live row found, none dropped."""
@@ -195,9 +194,8 @@ def test_skipping_scan_distributed_falls_back_on_stale_store(spark, events):
     leaf = sorted(glob.glob(f"{root}/year=*/month=*/day=*/hour=*/part-*.parquet"))[0]
     shutil.copy(leaf, leaf.replace("part-", "part-rogue-"))
 
-    df, files_read, files_total = ZM.skipping_scan(
-        spark, root, "user_id", 0, 10**9, distributed_threshold=1
-    )
+    monkeypatch.setattr(ZM, "DISTRIBUTED_PRUNE_FILES", 1)
+    df, files_read, files_total = ZM.skipping_scan(spark, root, "user_id", 0, 10**9)
     live_rows = spark.read.parquet(root).count()  # includes the rogue copy
     assert df.count() == live_rows
     assert files_total == len(ZM._data_file_paths(spark, root))
