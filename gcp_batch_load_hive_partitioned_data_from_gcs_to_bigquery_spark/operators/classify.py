@@ -140,6 +140,9 @@ def naive_bayes_confusion(
         .groupBy("true_label", F.col("label").alias("pred_label"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("score"), 4).alias("avg_score"),
+            # binary round (x·10⁴ to nearest, /10⁴) — what DuckDB's
+            # round(DOUBLE, 4) computes; F.round rounds the decimal
+            # expansion half up and splits from it on exact-looking ties
+            (F.round(F.avg("score") * 1e4, 0) / 1e4).alias("avg_score"),
         )
     )

@@ -11,18 +11,21 @@ pre-execution, against the query plan itself:
 
 * landing roots are REGISTERED (``create_partitioned_table`` and
   ``read_landing_table`` do this automatically);
-* :func:`assert_partition_filtered` inspects the df's PHYSICAL plan: every
-  file scan whose location lies under a registered root must carry at
-  least one partition filter (``PartitionFilters`` non-empty — i.e. the
-  scan is partition-pruned). Unfiltered scans raise
+* :func:`assert_partition_filtered` walks the df's PHYSICAL plan tree:
+  every ``FileSourceScanExec`` with a root path under a registered root
+  must carry at least one partition filter (``partitionFilters``
+  non-empty — i.e. the scan is partition-pruned). Unfiltered scans raise
   :class:`PartitionFilterRequiredError` before any task launches.
 
 Checking the physical plan (not the user's API calls) means the guard is
 route-independent: ``spark.read.parquet(root)``, SQL over a temp view, or
-a join that buries the scan three operators deep are all caught, and a
-filter that Catalyst pushes down to the scan passes no matter where in
-the query it was written. Cost is one driver-side plan inspection — no
-job runs, nothing is scanned.
+a join that buries the scan three operators deep, a scan inside a scalar,
+IN or EXISTS subquery and a scan under a cached relation are all caught,
+and a filter that Catalyst pushes down to the scan passes no matter where
+in the query it was written. The walk reads the scan nodes' root paths
+and partition filters as objects, not the plan's text rendering, so no
+path length can truncate it and no session conf is touched. Cost is one
+driver-side plan walk — no job runs, nothing is scanned.
 
 Scale note: this is exactly the guarantee that keeps a 100 TB landing
 table safe from accidental full scans — the reference's motivation for
@@ -65,36 +68,28 @@ def guarded_roots() -> frozenset[str]:
     return frozenset(_GUARDED_ROOTS)
 
 
-# One FileScan node prints as a single line in the physical-plan string:
-#   FileScan parquet [...] Batched: true, ..., Location: InMemoryFileIndex
-#   (1 paths)[file:/tmp/sg_tbl], PartitionFilters: [isnotnull(year#5), ...],
-#   PushedFilters: ..., ReadSchema: ...
-_LOCATION_RE = re.compile(r"Location: \w+(?:\(\d+ paths?\))?\[([^\]]*)\]")
-_PART_FILTERS_RE = re.compile(r"PartitionFilters: \[([^\]]*)\]")
+def _seq(scala_seq):
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
 
 
-def _scan_violations(plan_text: str) -> list[str]:
-    """Return the registered roots scanned without partition filters."""
-    violations = []
-    for line in plan_text.splitlines():
-        if "FileScan" not in line:
-            continue
-        loc = _LOCATION_RE.search(line)
-        if not loc:
-            continue
-        paths = [_normalize(p.strip()) for p in loc.group(1).split(",") if p.strip()]
-        hit_roots = {
-            root
-            for root in _GUARDED_ROOTS
-            for p in paths
-            if p == root or p.startswith(root + "/")
-        }
-        if not hit_roots:
-            continue
-        pf = _PART_FILTERS_RE.search(line)
-        if pf is None or not pf.group(1).strip():
-            violations.extend(sorted(hit_roots))
-    return violations
+def _scans(node):
+    """Yield ``(root_paths, n_partition_filters)`` for every
+    ``FileSourceScanExec`` under ``node``. ``children`` covers the operator
+    tree; ``innerChildren`` covers the subquery plans (scalar, IN,
+    EXISTS, dynamic pruning) and a cached relation's plan; an adaptive
+    node also exposes its current plan through ``executedPlan``."""
+    name = node.getClass().getSimpleName()
+    if name == "FileSourceScanExec":
+        paths = [p.toString() for p in _seq(node.relation().location().rootPaths())]
+        yield paths, node.partitionFilters().size()
+    elif name == "AdaptiveSparkPlanExec":
+        yield from _scans(node.executedPlan())
+    for child in _seq(node.children()):
+        yield from _scans(child)
+    for child in _seq(node.innerChildren()):
+        yield from _scans(child)
 
 
 def assert_partition_filtered(df: DataFrame) -> DataFrame:
@@ -104,28 +99,23 @@ def assert_partition_filtered(df: DataFrame) -> DataFrame:
 
         df = assert_partition_filtered(spark.read.parquet(root).filter(...))
 
-    Driver-side only — inspects the planned physical plan, launches no
-    job.
+    Driver-side only — walks the planned physical plan, launches no job
+    and changes no session conf.
     """
     if not _GUARDED_ROOTS:
         return df
-    # The FileScan Location metadata is truncated at
-    # spark.sql.maxMetadataStringLength (default 100 chars) — long table
-    # paths would lose their closing bracket and dodge the check. Widen it
-    # for the duration of the plan render.
-    spark = df.sparkSession
-    key = "spark.sql.maxMetadataStringLength"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "100000")
-    try:
-        plan_text = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(key, prev)
-    violations = _scan_violations(plan_text)
+    violations = {
+        root
+        for paths, n_filters in _scans(df._jdf.queryExecution().executedPlan())
+        if not n_filters
+        for p in map(_normalize, paths)
+        for root in _GUARDED_ROOTS
+        if p == root or p.startswith(root + "/")
+    }
     if violations:
         raise PartitionFilterRequiredError(
             "query scans landing table(s) without a partition filter: "
-            f"{sorted(set(violations))} — filter on year/month/day/hour "
+            f"{sorted(violations)} — filter on year/month/day/hour "
             "(reference parity: require_partition_filter=TRUE)"
         )
     return df

@@ -174,7 +174,6 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import (
-        enable_ns_read,
         normalize_ts,
         stream_ts_field,
     )
@@ -190,7 +189,6 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("props", T.StringType()),
         ]
     )
-    enable_ns_read(spark, src_path)
     key = ("slidesrc", sf_dir)
     if key not in _FIXTURES:
         root = _tmp("slidesrc")

@@ -183,10 +183,9 @@ def q_source_generic_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """source_generic_format (ingestion/app.py:33): pass-through options
     dict into an arbitrary-format reader (parquet here)."""
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.hive_csv import read_generic
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import enable_ns_read, normalize_ts
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import normalize_ts
 
     path = f"{sf_dir}/events.parquet"
-    enable_ns_read(spark, path)
     df = read_generic(spark, path, "parquet", options={"mergeSchema": "false"})
     df = normalize_ts(df)
     return df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
@@ -2352,7 +2351,6 @@ def q_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-hour tumbling window with a 40-minute watermark (the reference's
     late-data grace, commands.sh:73), counts to a memory sink."""
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import (
-        enable_ns_read,
         normalize_ts,
         stream_ts_field,
     )
@@ -2368,7 +2366,6 @@ def q_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("props", T.StringType()),
         ]
     )
-    enable_ns_read(spark, src_path)
     # file-stream sources need a directory; link the single parquet file in
     import os
 
@@ -5632,6 +5629,9 @@ _ROUND_QUEUE = [
     "agg_bitmap_distinct",
     "dedup_spans",
     "text_contamination_bloom",
+    # avg_score now rounds the binary double like the oracle's
+    # round(DOUBLE, 4) (was Spark's decimal half-up)
+    "classify_naive_bayes",
 ]
 
 _missing = [k for k in _ROUND_QUEUE if k not in QUERIES]

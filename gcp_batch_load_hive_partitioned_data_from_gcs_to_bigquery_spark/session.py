@@ -34,6 +34,10 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # pushdown to a min/max range, which cannot row-group-prune a
     # scattered id set — raise it so shortlist-sized sets stay exact.
     "spark.sql.parquet.pushdown.inFilterThreshold": "1024",
+    # Read timestamp[ns] parquet columns as int64 nanos (sources/tables.py
+    # folds them to TimestampType) instead of failing; tz and ntz micros
+    # columns read the same either way, so no read flips this mid-session.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
     # Single-JVM local mode runs all 32 executor threads in the driver
     # heap; the 1g default causes GC thrash under concurrent hash-aggs.

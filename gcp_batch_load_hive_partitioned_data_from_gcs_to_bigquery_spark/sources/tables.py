@@ -3,11 +3,13 @@
 The driver's synthetic tables (TESTDATA.md) are TPC-H-ish parquet files.
 One wrinkle: some were written with nanosecond-precision timestamps
 (``timestamp[ns]``), which Spark's vectorized parquet reader rejects
-(PARQUET_TYPE_ILLEGAL). We read those columns as raw int64 nanos
-(``spark.sql.legacy.parquet.nanosAsLong``) and convert with integer
-division to microseconds — identical truncation to what DuckDB does when
-it surfaces the same column as a microsecond TIMESTAMP, so oracle
-comparisons agree exactly. Detection is driver-side parquet-footer
+(PARQUET_TYPE_ILLEGAL). The session default
+``spark.sql.legacy.parquet.nanosAsLong=true`` (``session.DEFAULT_CONFIGS``;
+a session built without ``get_spark`` must set it too) reads those
+columns as raw int64 nanos, and we convert with integer division to
+microseconds — identical truncation to what DuckDB does when it surfaces
+the same column as a microsecond TIMESTAMP, so oracle comparisons agree
+exactly. Detection is driver-side parquet-footer
 metadata (pyarrow), never a data scan.
 """
 
@@ -35,17 +37,22 @@ TABLE_NAMES = (
 
 @lru_cache(maxsize=128)
 def _nanos_columns(path: str) -> tuple[str, ...]:
-    """Column names stored as timestamp[ns] in the parquet footer."""
+    """Column names stored as timestamp[ns] (tz-aware or not) in the
+    parquet footer."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     schema = pq.read_schema(path)
-    return tuple(f.name for f in schema if str(f.type) == "timestamp[ns]")
+    return tuple(
+        f.name for f in schema if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    )
 
 
 @lru_cache(maxsize=128)
 def timestamp_flavor(path: str, col: str = "ts") -> str:
     """How ``col`` is physically stored in the parquet footer:
-    ``'ns'`` (timestamp[ns] — needs the nanosAsLong legacy read),
+    ``'ns'`` (timestamp[ns] — reads as int64 nanos under the session's
+    nanosAsLong default),
     ``'ntz'`` (tz-naive micros — surfaces as TIMESTAMP_NTZ on Spark 4),
     or ``'tz'`` (tz-aware — plain TimestampType). The driver regenerates
     testdata between rounds with varying flavors, so call sites that read
@@ -56,16 +63,9 @@ def timestamp_flavor(path: str, col: str = "ts") -> str:
     field = next((f for f in pq.read_schema(path) if f.name == col), None)
     if field is None:
         raise ValueError(f"column {col!r} not present in parquet schema of {path}")
-    if str(field.type) == "timestamp[ns]":
+    if field.type.unit == "ns":
         return "ns"
     return "ntz" if field.type.tz is None else "tz"
-
-
-def enable_ns_read(spark: SparkSession, path: str, col: str = "ts") -> None:
-    """Set the legacy nanos-as-long conf iff ``path`` actually stores
-    ``col`` as timestamp[ns] (must happen before the read is planned)."""
-    if timestamp_flavor(path, col) == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def stream_ts_field(path: str, col: str = "ts"):
@@ -102,11 +102,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import types as T
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos = _nanos_columns(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
-    for col in nanos:
+    for col in _nanos_columns(path):
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     # Tz-naive parquet timestamps surface as TIMESTAMP_NTZ on Spark 4.
     # Cast to TimestampType: NTZ is interpreted as session-local wall

@@ -116,7 +116,10 @@ def run_tws_totals_over_files(
     the right provider at scale: state lives off-heap/on-disk with
     changelog checkpointing, so state size is bounded by disk, not
     executor heap. The conf is set for this session and restored after
-    the bounded run.
+    the bounded run — the package's one session-conf flip: the provider
+    is fixed when the query starts, Spark has no per-query option for
+    it, and a session default would move every
+    ``applyInPandasWithState`` checkpoint onto RocksDB too.
 
     Environment gate: the transformWithState Python worker speaks
     protobuf to the JVM state server; this container has no

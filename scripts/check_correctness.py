@@ -18,18 +18,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
-
-_args = sys.argv[1:]
-JSONL_PATH = None
-if "--jsonl" in _args:
-    i = _args.index("--jsonl")
-    JSONL_PATH = _args[i + 1]
-    _args = _args[:i] + _args[i + 2 :]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.01"
-ONLY = set(_args[1:])
+import duckdb
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -57,7 +46,17 @@ def normalize(rows, cols):
     return sorted(out)
 
 
-def main() -> int:
+def main(argv: list[str]) -> int:
+    args = list(argv)
+    jsonl_path = None
+    if "--jsonl" in args:
+        i = args.index("--jsonl")
+        jsonl_path = args[i + 1]
+        del args[i : i + 2]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    only = set(args[1:])
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark import get_spark
 
@@ -65,13 +64,13 @@ def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
+            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures, passes, rows_only = [], [], []
-    jsonl_fh = open(JSONL_PATH, "a") if JSONL_PATH else None
+    jsonl_fh = open(jsonl_path, "a") if jsonl_path else None
 
     def emit(rec: dict) -> None:
         if jsonl_fh is not None:
@@ -79,14 +78,14 @@ def main() -> int:
             jsonl_fh.flush()
 
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
-        rec = {"key": name, "sf_dir": SF_DIR, "rows_match": None,
+        rec = {"key": name, "sf_dir": sf_dir, "rows_match": None,
                "schema_match": None, "hash_match": None, "spark_rows": None,
                "oracle_rows": None, "secs": None, "err": None}
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = sdf.collect()
             rec["spark_rows"] = len(srows)
@@ -142,11 +141,11 @@ def main() -> int:
 
     print(
         f"\n{len(passes)} ok, {len(rows_only)} rows-only, {len(failures)} failed"
-        f" (sf_dir={SF_DIR})"
+        f" (sf_dir={sf_dir})"
     )
     return 1 if failures else 0
 
 
 if __name__ == "__main__":
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -88,3 +88,30 @@ def hive_csv_root(spark, events, tmp_path_factory):
         .csv(root)
     )
     return root
+
+
+# Nanosecond instants (UTC) of the ns-flavored events fixture; the
+# sub-microsecond digits must truncate away on read.
+NS_EVENT_TS = (1704067200_123456789, 1704070800_000000999, 1704074400_999999999)
+
+
+@pytest.fixture()
+def ns_sf_dir(tmp_path):
+    """An sf dir whose ``events.parquet`` stores ``ts`` as timestamp[ns]
+    (the flavor some testdata regenerations write)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(NS_EVENT_TS)
+    table = pa.table(
+        {
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(NS_EVENT_TS, pa.timestamp("ns")),
+            "user_id": pa.array([7] * n, pa.int64()),
+            "event_type": pa.array(["click", "view", "click"]),
+            "value": pa.array([1.0] * n),
+            "props": pa.array(["{}"] * n),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    return str(tmp_path)

@@ -159,6 +159,30 @@ def test_naive_bayes_one_pred_per_doc(spark):
     assert scored.count() == 12 * 2
 
 
+def test_naive_bayes_avg_score_rounds_like_duckdb_on_a_tie(spark, monkeypatch):
+    """Two winning scores whose mean prints as a half-way tie
+    (-51.70495): Spark's decimal half-up gives -51.705, the binary double
+    sits just below the tie and DuckDB's round(avg(x), 4) gives -51.7049.
+    The confusion table must match the oracle."""
+    import duckdb
+
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import classify
+
+    scores = (-51.70533, -51.70457)
+    scored = spark.createDataFrame(
+        [(i, "a", "a", s, 1) for i, s in enumerate(scores)],
+        "doc_id long, true_label string, label string, score double, pred int",
+    )
+    monkeypatch.setattr(classify, "naive_bayes_scores", lambda *_: scored)
+    got = naive_bayes_confusion(None, "doc_id", "text", "lab").collect()[0].avg_score
+    want = duckdb.sql(
+        "SELECT round(avg(x), 4) FROM "
+        f"(VALUES ({scores[0]}::DOUBLE), ({scores[1]}::DOUBLE)) t(x)"
+    ).fetchone()[0]
+    assert want == -51.7049
+    assert got == want
+
+
 def test_shingles_empty_for_short_docs_no_crash(spark):
     # sequence(1, 0) descends in Spark; the size gate must yield []
     # (not crash in slice) for docs shorter than the shingle width.

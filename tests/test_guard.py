@@ -80,3 +80,52 @@ def test_non_guarded_root_unaffected(spark, events, tmp_path):
 
 def test_read_landing_table_route_still_green(spark, landing):
     assert read_landing_table(spark, landing, "2024010100").count() > 0
+
+
+@pytest.fixture()
+def long_landing(spark, events, tmp_path):
+    """A guarded landing table whose root is longer than the 100
+    characters a plan's text rendering keeps of a scan location."""
+    root = str(tmp_path / ("t" * 100) / "guarded_tbl")
+    assert len(root) > 100
+    create_partitioned_table(spark, root)
+    write_partition_overwrite(events.limit(200), root)
+    yield root
+    unregister_landing_root(root)
+
+
+def test_long_root_unfiltered_read_rejected(spark, long_landing):
+    with pytest.raises(PartitionFilterRequiredError):
+        assert_partition_filtered(spark.read.parquet(long_landing))
+
+
+def test_long_root_unfiltered_cached_read_rejected(spark, long_landing):
+    """The scan under a cached relation is found through the cache's
+    plan, whatever the root's length."""
+    cached = spark.read.parquet(long_landing).cache()
+    try:
+        with pytest.raises(PartitionFilterRequiredError):
+            assert_partition_filtered(cached.groupBy("event_type").count())
+    finally:
+        cached.unpersist()
+
+
+def test_unfiltered_scalar_subquery_rejected(spark, landing):
+    spark.read.parquet(landing).createOrReplaceTempView("guarded_lt")
+    with pytest.raises(PartitionFilterRequiredError):
+        assert_partition_filtered(spark.sql("SELECT (SELECT count(*) FROM guarded_lt) AS n"))
+    ok = spark.sql("SELECT (SELECT count(*) FROM guarded_lt WHERE hour = 0) AS n")
+    assert assert_partition_filtered(ok).first().n > 0
+
+
+def test_reads_and_ingest_leave_session_conf_unchanged(spark, landing, ns_sf_dir):
+    """An ns-flavored table read, a partition overwrite and a guarded
+    read-back set no session conf."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import load_table
+
+    before = spark.conf.getAll
+    ns_events = load_table(spark, ns_sf_dir, "events")
+    assert ns_events.count() == 3
+    write_partition_overwrite(ns_events, landing)
+    assert read_landing_table(spark, landing, "2024010100").count() > 0
+    assert spark.conf.getAll == before

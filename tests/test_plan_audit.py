@@ -125,8 +125,9 @@ def _distinct_scan_counts(plan: str) -> dict:
 
 
 def test_no_repeated_expensive_derivations(spark):
-    """Regression pin for the round-11 repeated-derivation fixes
-    (scripts/replan_audit.py): each of these plans used to re-derive a
+    """Regression pin for the round-11 repeated-derivation fixes (found
+    by a one-off catalog-wide plan audit, BASELINE.md "Round-11
+    repeated-derivation audit"): each of these plans used to re-derive a
     shared expensive parent once per consuming branch — 4-6 corpus
     scans where the algorithm needs 1-3. The bound is the documented
     minimum for each shape; a regression (dropped persist, re-split
