@@ -55,6 +55,14 @@ def hive_path_from_bq_partition(partition: str) -> str:
     return hive_path_from_datetime(datetime_from_bq_partition(partition))
 
 
+def partition_dir(root: str, partition: str) -> str:
+    """The one directory that holds hour ``partition`` under ``root`` —
+    the decorator ``table$YYYYMMDDHH`` (ingestion/tasks.py:24-25) as a
+    path. Every single-hour read and maintenance op addresses this leaf
+    instead of listing the root."""
+    return f"{root.removesuffix('/')}/{hive_path_from_bq_partition(partition)}"
+
+
 def glob_path_all(root: str, partition_path: str) -> str:
     """Build the all-files glob for one partition directory.
 

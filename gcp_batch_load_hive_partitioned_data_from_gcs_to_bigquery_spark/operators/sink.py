@@ -37,6 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import partition_columns
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import (
+    datetime_from_bq_partition,
+    partition_dir,
+    partition_values,
+)
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
     delete_path,
     glob_status,
@@ -84,8 +89,6 @@ def with_static_partition(df: DataFrame, partition: str) -> DataFrame:
     semantic of the BQ partition decorator (ingestion/tasks.py:24-25): the
     load targets ``table$YYYYMMDDHH`` regardless of row contents, so the
     source schema needs no timestamp column."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import partition_values
-
     out = df
     for name, val in partition_values(partition).items():
         out = out.withColumn(name, F.lit(val))
@@ -228,12 +231,7 @@ def compact_partition(
     """
     import math
 
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import (
-        hive_path_from_bq_partition,
-    )
-
-    part_dir = f"{table_root.rstrip('/')}/{hive_path_from_bq_partition(partition)}"
-    _, fs, path = hadoop_fs(spark, part_dir)
+    _, fs, path = hadoop_fs(spark, partition_dir(table_root, partition))
     size = fs.getContentSummary(path).getLength()
     n_files = max(1, math.ceil(size / target_file_bytes))
 
@@ -295,10 +293,6 @@ def maintain_hourly_rollup(
     rolled = hour.groupBy(*[F.col(c) for c in group_cols]).agg(*agg_cols)
     # carry a representative timestamp so the rollup table partitions on
     # the same hour as its source partition
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import (
-        datetime_from_bq_partition,
-    )
-
     rolled = rolled.withColumn(
         ts_col, F.lit(datetime_from_bq_partition(partition)).cast("timestamp")
     )
@@ -397,34 +391,28 @@ def merge_upsert_partition(
 
 
 def read_landing_table(
-    spark: SparkSession,
-    table_root: str,
-    partition: str | None = None,
-    require_partition_filter: bool = True,
+    spark: SparkSession, table_root: str, partition: str | None = None
 ) -> DataFrame:
-    """Read the landing table back, enforcing the reference's
-    ``require_partition_filter=TRUE`` (bq_create_table_ddl.sql:12) at the
-    API level: a read with no partition constraint is rejected. Catalyst
-    prunes the scan to the one requested hour.
+    """Read one hour back — the decorator read ``table$YYYYMMDDHH``
+    (ingestion/tasks.py:24-25). No partition is rejected: the reference's
+    ``require_partition_filter=TRUE`` (bq_create_table_ddl.sql:12).
+
+    Loads the hour's leaf directory with ``basePath=table_root``: one
+    directory is listed however deep the table is, ``year/month/day/hour``
+    still surface as int columns, and the plan guard passes the scan. A
+    missing hour reads as zero rows with the table's columns, like an
+    empty BigQuery partition; ``limit(0)`` folds to an empty relation, so
+    nothing is scanned.
     """
-    if partition is None and require_partition_filter:
+    if partition is None:
         raise ValueError(
             "partition filter required: pass partition='YYYYMMDDHH' "
             "(reference parity: require_partition_filter=TRUE)"
         )
-    df = spark.read.option("basePath", table_root).parquet(table_root)
-    if partition is not None:
-        from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import partition_values
-
-        vals = partition_values(partition)
-        for name in PARTITION_COLS:
-            df = df.filter(F.col(name) == vals[name])
-        # plan-level twin of the API guard: verify the filters actually
-        # reached the scan as partition pruning (driver-side, no job)
-        from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.plans.guard import assert_partition_filtered
-
-        df = assert_partition_filtered(df)
-    return df
+    leaf = partition_dir(table_root, partition)
+    if not path_exists(spark, leaf):
+        return spark.read.parquet(table_root).limit(0)
+    return spark.read.option("basePath", table_root).parquet(leaf)
 
 
 def list_table_partitions(spark: SparkSession, table_root: str) -> list[str]:
@@ -456,12 +444,10 @@ def vacuum_partitions(
     everything, BigQuery storage is cheap" — README.md:96-109 of the
     reference); an hourly landing table at 100 TB needs one.
     """
-    from ..functions.partition import hive_path_from_bq_partition
-
     dropped, kept = [], []
     for part in list_table_partitions(spark, table_root):
         if part < retain_from:
-            delete_path(spark, f"{table_root}/{hive_path_from_bq_partition(part)}")
+            delete_path(spark, partition_dir(table_root, part))
             dropped.append(part)
         else:
             kept.append(part)

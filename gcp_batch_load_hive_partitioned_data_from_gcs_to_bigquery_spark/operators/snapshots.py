@@ -96,7 +96,7 @@ def write_snapshot(
     the new data directory. ``mode='overwrite'``: the new version lists
     only the new files (logical truncate — old files stay on disk for
     time travel; retention is a separate vacuum concern, see
-    operators/sink.py vacuum_partition_retention for the pattern).
+    operators/sink.py vacuum_partitions for the pattern).
     Data first, manifest last: the version becomes visible atomically
     with the manifest file.
     """
@@ -211,7 +211,7 @@ def vacuum_snapshots(
     ANY kept manifest is never touched, so readers of kept versions are
     unaffected; readers of vacuumed versions lose time travel — that is
     the retention contract (same shape as the landing table's
-    vacuum_partition_retention). Returns counts for observability.
+    vacuum_partitions). Returns counts for observability.
 
     Metadata-only cost: the reachable-file set is the union of
     ``keep_last`` manifests (driver-side, bounded by file counts in the

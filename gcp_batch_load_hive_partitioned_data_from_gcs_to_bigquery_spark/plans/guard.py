@@ -3,19 +3,21 @@
 The reference makes unfiltered reads of the landing table impossible at
 the TABLE level (``require_partition_filter=TRUE``,
 bq_create_table_ddl.sql:12): any query that does not constrain the
-partitioning column is rejected by the engine before it runs. The
-API-level guard in :func:`..operators.sink.read_landing_table` covers the
-supported read path, but a direct ``spark.read.parquet(table_root)``
-bypasses it. This module closes that hole the way BigQuery does —
-pre-execution, against the query plan itself:
+partitioning column is rejected by the engine before it runs.
+:func:`..operators.sink.read_landing_table` reads one hour's directory,
+but a direct ``spark.read.parquet(table_root)`` reads them all. This
+module closes that hole the way BigQuery does — pre-execution, against
+the query plan itself:
 
-* landing roots are REGISTERED (``create_partitioned_table`` and
-  ``read_landing_table`` do this automatically);
+* landing roots are REGISTERED (``create_partitioned_table`` does this);
 * :func:`assert_partition_filtered` walks the df's PHYSICAL plan tree:
   every ``FileSourceScanExec`` with a root path under a registered root
   must carry at least one partition filter (``partitionFilters``
-  non-empty — i.e. the scan is partition-pruned). Unfiltered scans raise
-  :class:`PartitionFilterRequiredError` before any task launches.
+  non-empty — i.e. the scan is partition-pruned) or be rooted at a full
+  hour leaf ``root/year=Y/month=M/day=D/hour=H`` (one hour by
+  construction; the root and shallower directories are not). Unfiltered
+  scans raise :class:`PartitionFilterRequiredError` before any task
+  launches.
 
 Checking the physical plan (not the user's API calls) means the guard is
 route-independent: ``spark.read.parquet(root)``, SQL over a temp view, or
@@ -34,9 +36,12 @@ the DDL flag.
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
 
 from pyspark.sql import DataFrame
+
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import HIVE_PARTITION_BY_HOUR_FORMAT
 
 # Module-level registry: landing-table roots under partition-filter
 # enforcement. Keyed by normalized absolute path (no scheme, no trailing
@@ -66,6 +71,15 @@ def unregister_landing_root(table_root: str) -> None:
 
 def guarded_roots() -> frozenset[str]:
     return frozenset(_GUARDED_ROOTS)
+
+
+def _is_hour_leaf(fragment: str) -> bool:
+    """Is ``fragment`` exactly ``year=…/month=…/day=…/hour=…``?"""
+    try:
+        _dt.datetime.strptime(fragment, HIVE_PARTITION_BY_HOUR_FORMAT)
+    except ValueError:
+        return False
+    return True
 
 
 def _seq(scala_seq):
@@ -110,7 +124,8 @@ def assert_partition_filtered(df: DataFrame) -> DataFrame:
         if not n_filters
         for p in map(_normalize, paths)
         for root in _GUARDED_ROOTS
-        if p == root or p.startswith(root + "/")
+        if p == root
+        or (p.startswith(root + "/") and not _is_hour_leaf(p[len(root) + 1:]))
     }
     if violations:
         raise PartitionFilterRequiredError(

@@ -4,11 +4,11 @@ Scan-side parity with the reference's load-job source config:
 
 * ``scan_hive_partitioned`` — the reference resolves one hourly partition to
   a glob ``gs://bucket/year=Y/month=M/day=D/hour=H/*`` (ingestion/
-  partition.py:25-27, ingestion/tasks.py:27-28). In Spark, Hive-style
-  partition discovery is built in: reading with ``basePath`` surfaces
-  ``year/month/day/hour`` as columns, and a filter on them is statically
-  pruned (``PruneFileSourcePartitions``) — only the matching directories
-  are ever listed or read, exactly the reference's pruned scan.
+  partition.py:25-27, ingestion/tasks.py:27-28). ``read_hive_partition``
+  loads that one leaf directory with ``basePath=root``: Spark's Hive-style
+  partition discovery still surfaces ``year/month/day/hour`` as columns,
+  and only the matching directory is ever listed or read, exactly the
+  reference's scan.
 * ``scan_csv_tab_delimited`` — option-for-option mapping of
   ``replace_partition_csv_job_config`` (ingestion/bigquery_interaction.py:
   17-26): CSV, field_delimiter='\\t', skip_leading_rows=0 (no header),
@@ -18,14 +18,16 @@ Scan-side parity with the reference's load-job source config:
   schema and conforms columns positionally.
 
 At 100 TB: unquoted tab CSV is line-splittable, so parse parallelism equals
-file splits (``spark.sql.files.maxPartitionBytes``); partition pruning keeps
+file splits (``spark.sql.files.maxPartitionBytes``); addressing the leaf keeps
 an hourly ingest to one directory regardless of table size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import types as T
+
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import partition_dir
 
 # Reference: ingestion/bigquery_interaction.py:17-26. `quote=""` disables
 # quoting entirely (BQ quote_character=''); header=False ≈ skip_leading_rows=0;
@@ -45,6 +47,16 @@ def read_tab_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFr
     return spark.read.schema(schema).options(**TAB_CSV_OPTIONS).csv(path)
 
 
+def _hive_reader(spark, root, schema, fmt, options) -> DataFrameReader:
+    """The ``basePath=root`` reader both Hive readers load through."""
+    opts = dict(TAB_CSV_OPTIONS) if fmt == "csv" else {}
+    opts.update(options or {})
+    reader = spark.read.format(fmt).options(basePath=root, **opts)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader
+
+
 def read_hive_partitioned(
     spark: SparkSession,
     root: str,
@@ -58,12 +70,7 @@ def read_hive_partitioned(
     columns via built-in partition discovery; predicates on them prune at
     plan time. ``fmt='csv'`` defaults to the reference's tab-CSV options.
     """
-    opts = dict(TAB_CSV_OPTIONS) if fmt == "csv" else {}
-    opts.update(options or {})
-    reader = spark.read.format(fmt).options(basePath=root, **opts)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(root)
+    return _hive_reader(spark, root, schema, fmt, options).load(root)
 
 
 def read_hive_partition(
@@ -74,26 +81,12 @@ def read_hive_partition(
     fmt: str = "csv",
     options: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Scan exactly one hourly partition, pruned at plan time.
-
-    ``partition`` is the compact ``YYYYMMDDHH`` string; the equality filter
-    on the four partition columns is the Spark-native expression of the
-    reference's single-directory glob (ingestion/tasks.py:27-28) — Catalyst
-    rewrites it to a one-directory listing, so the scan cost is identical.
+    """Scan exactly one hourly partition (compact ``YYYYMMDDHH``): load its
+    directory, the reference's single-directory glob (ingestion/tasks.py:
+    27-28), with ``basePath=root`` — one directory is listed however deep
+    the bucket is, and ``year/month/day/hour`` still surface as columns.
     """
-    from pyspark.sql import functions as F
-
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import partition_values
-
-    df = read_hive_partitioned(spark, root, schema=schema, fmt=fmt, options=options)
-    vals = partition_values(partition)
-    cond = (
-        (F.col("year") == vals["year"])
-        & (F.col("month") == vals["month"])
-        & (F.col("day") == vals["day"])
-        & (F.col("hour") == vals["hour"])
-    )
-    return df.filter(cond)
+    return _hive_reader(spark, root, schema, fmt, options).load(partition_dir(root, partition))
 
 
 def read_generic(

@@ -1,12 +1,11 @@
 """Streaming semantics: tumbling hourly windows, late data, backfill."""
 
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.streaming.hourly import (
-    backfill_partitions,
     hourly_counts,
     stream_hourly_ingest,
 )
 
-__all__ = ["backfill_partitions", "drain_stream", "hourly_counts", "stream_hourly_ingest"]
+__all__ = ["drain_stream", "hourly_counts", "stream_hourly_ingest"]
 
 
 def drain_stream(query, timeout_sec: int = 300, what: str = "stream") -> None:

@@ -12,7 +12,8 @@ Structured Streaming form:
   idempotent partition replace (workflow.yaml:49-52, README.md:34-39) →
   ``foreachBatch`` + dynamic partition overwrite.
 * ``stream_backfill`` — reprocess historical windows partition-by-partition
-  (README.md:49-60, commands.sh:56-64).
+  (README.md:49-60, commands.sh:56-64): that is
+  :func:`..plans.ingest.backfill_partition_range`.
 """
 
 from __future__ import annotations
@@ -69,14 +70,3 @@ def stream_hourly_ingest(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def backfill_partitions(
-    spark: SparkSession,
-    partitions: list[str],
-    ingest_one,
-) -> dict[str, object]:
-    """Reprocess an explicit partition list (stream_backfill). ``ingest_one``
-    is a callable ``(partition: str) -> LoadJobMetadata``; safe to re-run
-    because every write is an idempotent partition replace."""
-    return {p: ingest_one(p) for p in partitions}

@@ -82,6 +82,22 @@ def test_read_landing_table_route_still_green(spark, landing):
     assert read_landing_table(spark, landing, "2024010100").count() > 0
 
 
+def test_read_landing_table_hour_leaf_passes(spark, landing):
+    """The supported read addresses the hour's leaf directory: its scan
+    carries no partition filter but is one hour by construction, whether
+    the hour is present or missing."""
+    assert assert_partition_filtered(read_landing_table(spark, landing, "2024010100")).count() > 0
+    assert assert_partition_filtered(read_landing_table(spark, landing, "2030010100")).count() == 0
+
+
+@pytest.mark.parametrize("fragment", ["year=2024", "year=2024/month=01/day=01"])
+def test_unfiltered_shallow_directory_read_rejected(spark, landing, fragment):
+    """A directory above the hour leaf still spans many hours."""
+    df = spark.read.option("basePath", landing).parquet(f"{landing}/{fragment}")
+    with pytest.raises(PartitionFilterRequiredError):
+        assert_partition_filtered(df)
+
+
 @pytest.fixture()
 def long_landing(spark, events, tmp_path):
     """A guarded landing table whose root is longer than the 100
