@@ -9,12 +9,14 @@ which get rows-only checks).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# the package lives next to this file
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.queries.catalog import (  # noqa: E402
     ORACLES,

@@ -62,6 +62,15 @@ def hive_path_col(ts: Column | str) -> Column:
     return F.date_format(ts, HIVE_PATH_PATTERN)
 
 
+def bq_partition_from_hive_cols() -> Column:
+    """The four Hive partition columns → ``YYYYMMDDHH`` (twin of
+    :func:`.partition.bq_partition_from_hive_path`). Partition discovery
+    reads them back as ints, so each is zero padded here."""
+    return F.format_string(
+        "%04d%02d%02d%02d", *(F.col(c).cast("int") for c in ("year", "month", "day", "hour"))
+    )
+
+
 def trunc_hour_col(ts: Column | str) -> Column:
     """``TIMESTAMP_TRUNC(f, HOUR)`` (bq_create_table_ddl.sql:7)."""
     return F.date_trunc("hour", ts)

@@ -19,6 +19,8 @@ import uuid as _uuid
 # Reference: ingestion/partition.py:3-4
 HIVE_PARTITION_BY_HOUR_FORMAT = "year=%Y/month=%m/day=%d/hour=%H"
 BQ_PARTITION_BY_HOUR_FORMAT = "%Y%m%d%H"
+# Every hour leaf under a table root, as a Hadoop glob.
+HIVE_PARTITION_BY_HOUR_GLOB = "year=*/month=*/day=*/hour=*"
 
 
 def bq_partition_from_datetime(dt: _dt.datetime) -> str:
@@ -53,6 +55,16 @@ def hive_path_from_bq_partition(partition: str) -> str:
     (ingestion/partition.py:19-22).
     """
     return hive_path_from_datetime(datetime_from_bq_partition(partition))
+
+
+def bq_partition_from_hive_path(path: str) -> str:
+    """Inverse of :func:`hive_path_from_bq_partition`:
+    ``year=…/month=…/day=…/hour=…`` → ``YYYYMMDDHH``. Unpadded values
+    (``month=1``) parse; anything that is not exactly one hour leaf
+    (a shallower directory, ``hour=__HIVE_DEFAULT_PARTITION__``) raises
+    ``ValueError``."""
+    dt = _dt.datetime.strptime(path, HIVE_PARTITION_BY_HOUR_FORMAT)
+    return bq_partition_from_datetime(dt)
 
 
 def partition_dir(root: str, partition: str) -> str:

@@ -36,9 +36,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import partition_columns
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import (
+    bq_partition_from_hive_cols,
+    partition_columns,
+    ts_from_bq_partition_col,
+)
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import (
-    datetime_from_bq_partition,
+    HIVE_PARTITION_BY_HOUR_GLOB,
+    bq_partition_from_hive_path,
     partition_dir,
     partition_values,
 )
@@ -156,7 +161,6 @@ def write_partition_overwrite(
 
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.zonemap import (
         has_zone_map,
-        part_key_expr,
         refresh_zone_map,
     )
 
@@ -175,9 +179,7 @@ def write_partition_overwrite(
         # map-side-combined, a handful of rows out.
         # bounded collect: one row per PARTITION the batch touches (an
         # hourly batch lands in a handful of hive partitions), never per-row
-        touched = [
-            r["part_key"] for r in out.select(part_key_expr()).distinct().collect()
-        ]
+        touched = [r[0] for r in out.select(bq_partition_from_hive_cols()).distinct().collect()]
 
     (
         out.write.format(fmt)
@@ -267,15 +269,15 @@ def maintain_hourly_rollup(
     spark: SparkSession,
     table_root: str,
     rollup_root: str,
-    partition: str,
+    partition: str | list[str],
     group_cols: list[str],
     agg_exprs: dict[str, str],
     ts_col: str = "ts",
 ) -> JobState:
     """Incrementally maintain a continuous hourly aggregate (the
-    hypertable-rollup pattern): after ingesting hour ``partition`` into
-    the landing table, recompute ONLY that hour's rollup rows and
-    partition-overwrite them into ``rollup_root``.
+    hypertable-rollup pattern): after ingesting hour ``partition`` (or a
+    list of hours) into the landing table, recompute ONLY those hours'
+    rollup rows and partition-overwrite them into ``rollup_root``.
 
     ``agg_exprs`` maps output column → SQL aggregate over the hour (e.g.
     ``{"n_rows": "count(*)", "sum_value": "sum(value)"}``).
@@ -288,16 +290,16 @@ def maintain_hourly_rollup(
     the reference's WRITE_TRUNCATE gives raw rows, lifted to the
     aggregate level).
     """
-    hour = read_landing_table(spark, table_root, partition)
+    parts = [partition] if isinstance(partition, str) else partition
+    hours = read_landing_table(spark, table_root, *parts)
+    # the hour's start is the rollup row's timestamp, so the rollup table
+    # partitions on the same hour as its source partition
+    hour_ts = ts_from_bq_partition_col(bq_partition_from_hive_cols()).alias(ts_col)
     agg_cols = [F.expr(sql).alias(name) for name, sql in agg_exprs.items()]
-    rolled = hour.groupBy(*[F.col(c) for c in group_cols]).agg(*agg_cols)
-    # carry a representative timestamp so the rollup table partitions on
-    # the same hour as its source partition
-    rolled = rolled.withColumn(
-        ts_col, F.lit(datetime_from_bq_partition(partition)).cast("timestamp")
-    )
+    rolled = hours.groupBy(hour_ts, *group_cols).agg(*agg_cols)
+    rolled = rolled.select(*group_cols, *agg_exprs, ts_col)
     create_partitioned_table(spark, rollup_root)
-    return write_partition_overwrite(rolled, rollup_root, ts_col=ts_col, partition=partition)
+    return write_partition_overwrite(rolled, rollup_root, ts_col=ts_col)
 
 
 def repair_rollup(
@@ -316,8 +318,8 @@ def repair_rollup(
     write and rollup write, or a backfill wrote hours out-of-band), this
     converges the rollup without touching any hour that is already
     present. Cost is two metadata partition LISTs (no Spark job) plus
-    one pruned read + tiny write per MISSING hour — O(missing), never
-    O(table), so running it after every batch is safe at any scale.
+    one read of the MISSING hours' leaves and one tiny write — O(missing),
+    never O(table), so running it after every batch is safe at any scale.
     Returns the list of repaired partitions.
     """
     landing = set(list_table_partitions(spark, table_root))
@@ -325,9 +327,9 @@ def repair_rollup(
         spark, rollup_root
     ) else set()
     missing = sorted(landing - have)
-    for part in missing:
+    if missing:
         maintain_hourly_rollup(
-            spark, table_root, rollup_root, part, group_cols, agg_exprs, ts_col=ts_col
+            spark, table_root, rollup_root, missing, group_cols, agg_exprs, ts_col=ts_col
         )
     return missing
 
@@ -391,43 +393,44 @@ def merge_upsert_partition(
 
 
 def read_landing_table(
-    spark: SparkSession, table_root: str, partition: str | None = None
+    spark: SparkSession, table_root: str, *partitions: str
 ) -> DataFrame:
-    """Read one hour back — the decorator read ``table$YYYYMMDDHH``
-    (ingestion/tasks.py:24-25). No partition is rejected: the reference's
-    ``require_partition_filter=TRUE`` (bq_create_table_ddl.sql:12).
+    """Read a set of hours back — the decorator read ``table$YYYYMMDDHH``
+    (ingestion/tasks.py:24-25) per hour. No hour is rejected: the
+    reference's ``require_partition_filter=TRUE`` (bq_create_table_ddl.sql:12).
 
-    Loads the hour's leaf directory with ``basePath=table_root``: one
-    directory is listed however deep the table is, ``year/month/day/hour``
-    still surface as int columns, and the plan guard passes the scan. A
-    missing hour reads as zero rows with the table's columns, like an
-    empty BigQuery partition; ``limit(0)`` folds to an empty relation, so
-    nothing is scanned.
+    Loads the present hours' leaf directories in ONE read with
+    ``basePath=table_root``: only those directories are listed however
+    deep the table is, ``year/month/day/hour`` still surface as int
+    columns, and the plan guard passes the scan. A missing hour adds no
+    rows, like an empty BigQuery partition; if none is present,
+    ``limit(0)`` gives the table's columns and folds to an empty relation.
     """
-    if partition is None:
+    if not partitions:
         raise ValueError(
-            "partition filter required: pass partition='YYYYMMDDHH' "
+            "partition filter required: pass one or more 'YYYYMMDDHH' hours "
             "(reference parity: require_partition_filter=TRUE)"
         )
-    leaf = partition_dir(table_root, partition)
-    if not path_exists(spark, leaf):
+    leaves = [partition_dir(table_root, p) for p in partitions]
+    leaves = [leaf for leaf in leaves if path_exists(spark, leaf)]
+    if not leaves:
         return spark.read.parquet(table_root).limit(0)
-    return spark.read.option("basePath", table_root).parquet(leaf)
+    return spark.read.option("basePath", table_root).parquet(*leaves)
 
 
 def list_table_partitions(spark: SparkSession, table_root: str) -> list[str]:
     """Enumerate the table's hourly partitions as compact YYYYMMDDHH
     strings — one metadata LIST over the Hive layout (no Spark job), the
-    same cost shape as the existence probe."""
-    pattern = f"{table_root}/year=*/month=*/day=*/hour=*"
+    same cost shape as the existence probe. A directory that is not an
+    hour (``hour=__HIVE_DEFAULT_PARTITION__``) is not listed, the same
+    rule the plan guard applies."""
     parts = []
-    for st in glob_status(spark, pattern):
-        p = st.getPath()
-        hour = p.getName().split("=")[1]
-        day = p.getParent().getName().split("=")[1]
-        month = p.getParent().getParent().getName().split("=")[1]
-        year = p.getParent().getParent().getParent().getName().split("=")[1]
-        parts.append(f"{year}{month.zfill(2)}{day.zfill(2)}{hour.zfill(2)}")
+    for st in glob_status(spark, f"{table_root}/{HIVE_PARTITION_BY_HOUR_GLOB}"):
+        leaf = "/".join(st.getPath().toString().split("/")[-4:])
+        try:
+            parts.append(bq_partition_from_hive_path(leaf))
+        except ValueError:
+            continue
     return sorted(parts)
 
 

@@ -37,10 +37,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import bq_partition_from_hive_cols
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+    glob_status,
     hadoop_fs,
     path_exists,
 )
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import read_landing_table
 
 #: Store directory for the persisted zone map, INSIDE the table root.
 #: The leading underscore makes Spark's file listing treat it as hidden
@@ -54,36 +57,6 @@ def zone_map_path(table_root: str) -> str:
     return f"{table_root.rstrip('/')}/{ZONEMAP_DIRNAME}"
 
 
-def part_key_expr() -> Column:
-    """``YYYYMMDDHH`` partition key derived from the Hive layout columns
-    — the join/overwrite key of the persisted store."""
-    return F.concat_ws(
-        "",
-        F.col("year").cast("string"),
-        F.lpad(F.col("month").cast("string"), 2, "0"),
-        F.lpad(F.col("day").cast("string"), 2, "0"),
-        F.lpad(F.col("hour").cast("string"), 2, "0"),
-    ).alias("part_key")
-
-
-def _partitions_predicate(partitions: list[str]) -> Column:
-    """OR of per-hour conjunctions on the raw partition columns — plain
-    equality predicates on metadata columns, so Catalyst partition
-    pruning limits the scan to exactly the named hours."""
-    pred: Column | None = None
-    for p in partitions:
-        c = (
-            (F.col("year") == int(p[0:4]))
-            & (F.col("month") == int(p[4:6]))
-            & (F.col("day") == int(p[6:8]))
-            & (F.col("hour") == int(p[8:10]))
-        )
-        pred = c if pred is None else (pred | c)
-    if pred is None:
-        return F.lit(False)
-    return pred
-
-
 def file_zone_map(
     spark: SparkSession,
     table_root: str,
@@ -95,14 +68,17 @@ def file_zone_map(
 
     One scan, one groupBy on ``_metadata.file_path``. Output rows ≈
     file count — metadata-sized regardless of table volume.
-    ``partitions`` (``YYYYMMDDHH`` strings) restricts the scan to those
-    hours via partition pruning — the incremental-refresh path reads
-    ONLY the changed hours, never the table. ``with_part_key`` adds the
-    store's ``part_key`` overwrite key to the output.
+    ``partitions`` (``YYYYMMDDHH`` strings) reads only those hours' leaf
+    directories through :func:`..operators.sink.read_landing_table` —
+    the incremental-refresh path lists and scans ONLY the changed hours,
+    never the table; ``None`` reads the whole root (the full build).
+    ``with_part_key`` adds the store's ``part_key`` overwrite key to the
+    output.
     """
-    df = spark.read.parquet(table_root)
-    if partitions is not None:
-        df = df.filter(_partitions_predicate(partitions))
+    if partitions is None:
+        df = spark.read.parquet(table_root)
+    else:
+        df = read_landing_table(spark, table_root, *partitions)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
@@ -110,7 +86,7 @@ def file_zone_map(
     key_names = ["file_path", "part_key"] if with_part_key else ["file_path"]
     keys = [F.col("_metadata.file_path").alias("file_path")]
     if with_part_key:
-        keys.append(part_key_expr())
+        keys.append(bq_partition_from_hive_cols().alias("part_key"))
     return df.select(*keys, *cols).groupBy(*key_names).agg(*aggs)
 
 
@@ -130,14 +106,7 @@ def partition_zone_map(
     for c in cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
         aggs.append(F.max(c).alias(f"max_{c}"))
-    part = F.concat_ws(
-        "",
-        F.col("year"),
-        F.lpad(F.col("month").cast("string"), 2, "0"),
-        F.lpad(F.col("day").cast("string"), 2, "0"),
-        F.lpad(F.col("hour").cast("string"), 2, "0"),
-    ).alias("hour_partition")
-    return df.groupBy(part).agg(*aggs)
+    return df.groupBy(bq_partition_from_hive_cols().alias("hour_partition")).agg(*aggs)
 
 
 def has_zone_map(spark: SparkSession, table_root: str) -> bool:
@@ -222,12 +191,15 @@ def load_zone_map(spark: SparkSession, table_root: str) -> DataFrame | None:
 
 
 def zone_map_columns(spark: SparkSession, table_root: str) -> list[str] | None:
-    """Data columns the persisted store carries stats for (from its own
-    schema — the store is self-describing), or ``None`` if no store."""
-    zm = load_zone_map(spark, table_root)
-    if zm is None:
+    """Data columns the persisted store carries stats for, or ``None`` if
+    no store. Every ``part_key=`` leaf has the store's schema, so one
+    metadata glob (no job) finds a leaf and only it is read, never the
+    whole store (one listing task per hour once there are more than 32)."""
+    leaves = glob_status(spark, f"{zone_map_path(table_root)}/part_key=*")
+    if not leaves:
         return None
-    return [c[len("min_") :] for c in zm.columns if c.startswith("min_")]
+    cols = spark.read.parquet(leaves[0].getPath().toString()).columns
+    return [c[len("min_") :] for c in cols if c.startswith("min_")]
 
 
 def refresh_zone_map(
@@ -240,14 +212,16 @@ def refresh_zone_map(
 
     With ``partitions=None`` this is the one-time full build (one table
     scan). With a list of ``YYYYMMDDHH`` hours it is the INCREMENTAL
-    maintenance path: scan only the named hours (partition-pruned), and
+    maintenance path: read only the named hours' leaf directories, and
     dynamic-partition-overwrite only those hours' stats rows — the store
     is laid out ``part_key=YYYYMMDDHH/`` so a refresh never touches any
     other hour's stats files. At 100 TB an hourly write refreshes one
-    hour's stats with one hour's scan — O(batch), never O(table).
+    hour's stats with one hour's listing and scan — O(batch), never
+    O(table).
 
     ``cols=None`` re-uses the column list already recorded in the store
-    schema (required for incremental refresh so the schema stays stable).
+    schema, read from one store leaf (required for incremental refresh
+    so the schema stays stable).
     """
     if cols is None:
         cols = zone_map_columns(spark, table_root)

@@ -4,17 +4,17 @@ The reference makes unfiltered reads of the landing table impossible at
 the TABLE level (``require_partition_filter=TRUE``,
 bq_create_table_ddl.sql:12): any query that does not constrain the
 partitioning column is rejected by the engine before it runs.
-:func:`..operators.sink.read_landing_table` reads one hour's directory,
-but a direct ``spark.read.parquet(table_root)`` reads them all. This
-module closes that hole the way BigQuery does — pre-execution, against
-the query plan itself:
+:func:`..operators.sink.read_landing_table` reads only the named hours'
+directories, but a direct ``spark.read.parquet(table_root)`` reads them
+all. This module closes that hole the way BigQuery does — pre-execution,
+against the query plan itself:
 
 * landing roots are REGISTERED (``create_partitioned_table`` does this);
 * :func:`assert_partition_filtered` walks the df's PHYSICAL plan tree:
   every ``FileSourceScanExec`` with a root path under a registered root
   must carry at least one partition filter (``partitionFilters``
-  non-empty — i.e. the scan is partition-pruned) or be rooted at a full
-  hour leaf ``root/year=Y/month=M/day=D/hour=H`` (one hour by
+  non-empty — i.e. the scan is partition-pruned) or have every root at
+  a full hour leaf ``root/year=Y/month=M/day=D/hour=H`` (one hour by
   construction; the root and shallower directories are not). Unfiltered
   scans raise :class:`PartitionFilterRequiredError` before any task
   launches.
@@ -36,12 +36,11 @@ the DDL flag.
 
 from __future__ import annotations
 
-import datetime as _dt
 import re
 
 from pyspark.sql import DataFrame
 
-from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import HIVE_PARTITION_BY_HOUR_FORMAT
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import bq_partition_from_hive_path
 
 # Module-level registry: landing-table roots under partition-filter
 # enforcement. Keyed by normalized absolute path (no scheme, no trailing
@@ -71,15 +70,6 @@ def unregister_landing_root(table_root: str) -> None:
 
 def guarded_roots() -> frozenset[str]:
     return frozenset(_GUARDED_ROOTS)
-
-
-def _is_hour_leaf(fragment: str) -> bool:
-    """Is ``fragment`` exactly ``year=…/month=…/day=…/hour=…``?"""
-    try:
-        _dt.datetime.strptime(fragment, HIVE_PARTITION_BY_HOUR_FORMAT)
-    except ValueError:
-        return False
-    return True
 
 
 def _seq(scala_seq):
@@ -118,15 +108,19 @@ def assert_partition_filtered(df: DataFrame) -> DataFrame:
     """
     if not _GUARDED_ROOTS:
         return df
-    violations = {
-        root
-        for paths, n_filters in _scans(df._jdf.queryExecution().executedPlan())
-        if not n_filters
-        for p in map(_normalize, paths)
-        for root in _GUARDED_ROOTS
-        if p == root
-        or (p.startswith(root + "/") and not _is_hour_leaf(p[len(root) + 1:]))
-    }
+    violations = set()
+    for paths, n_filters in _scans(df._jdf.queryExecution().executedPlan()):
+        if n_filters:
+            continue
+        for p in map(_normalize, paths):
+            for root in _GUARDED_ROOTS:
+                if p != root and not p.startswith(root + "/"):
+                    continue
+                # only a full hour leaf is one hour; the root parses as ""
+                try:
+                    bq_partition_from_hive_path(p[len(root) + 1:])
+                except ValueError:
+                    violations.add(root)
     if violations:
         raise PartitionFilterRequiredError(
             "query scans landing table(s) without a partition filter: "

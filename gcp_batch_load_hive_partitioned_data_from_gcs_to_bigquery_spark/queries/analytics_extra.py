@@ -403,6 +403,7 @@ def q_partition_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what keeps retention O(expired) on a years-deep hourly table.
     (The reference keeps everything; retention is the missing lifecycle
     op an at-scale landing table needs.)"""
+    from ..functions.columns import bq_partition_from_hive_cols
     from ..operators.sink import (
         create_partitioned_table,
         read_landing_table,
@@ -417,13 +418,9 @@ def q_partition_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_partition_overwrite(four_hours, table_root)
     dropped, kept = vacuum_partitions(spark, table_root, retain_from="2024010102")
     assert dropped == ["2024010100", "2024010101"], dropped  # invariant, not a test
-    back = spark.read.option("basePath", table_root).parquet(table_root)
+    back = read_landing_table(spark, table_root, *kept)
     return (
-        back.groupBy(
-            F.format_string("%04d%02d%02d%02d", "year", "month", "day", "hour").alias(
-                "partition"
-            )
-        )
+        back.groupBy(bq_partition_from_hive_cols().alias("partition"))
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .orderBy("partition")
     )
@@ -2878,6 +2875,7 @@ def q_monitor_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     events."""
     import datetime as _dt
 
+    from ..functions.partition import bq_partition_from_datetime, datetime_from_bq_partition
     from ..operators.sink import list_table_partitions
     from .catalog import _parquet_fixture_root
 
@@ -2885,11 +2883,8 @@ def q_monitor_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = list_table_partitions(spark, root)
     ref = _dt.datetime(2024, 1, 2, 6)
     last = max(parts)
-    last_dt = _dt.datetime.strptime(last, "%Y%m%d%H")
-    lag_h = int((ref - last_dt).total_seconds() // 3600)
-    window = {
-        (ref - _dt.timedelta(hours=i + 1)).strftime("%Y%m%d%H") for i in range(24)
-    }
+    lag_h = int((ref - datetime_from_bq_partition(last)).total_seconds() // 3600)
+    window = {bq_partition_from_datetime(ref - _dt.timedelta(hours=i + 1)) for i in range(24)}
     present = len(window & set(parts))
     rows = [
         ("last_partition", int(last)),

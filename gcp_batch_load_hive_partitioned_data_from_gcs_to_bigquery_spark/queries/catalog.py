@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import bq_partition_from_hive_cols
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import dedup as D
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import multimodal as MM
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import similarity as SIM
@@ -905,16 +906,10 @@ def q_rollup_continuous_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_partition_overwrite(batch0, table_root)
     maintain_hourly_rollup(spark, table_root, rollup_root, hours[0], ["event_type"], aggs)
 
-    frames = [
-        read_landing_table(spark, rollup_root, h).select(
-            F.lit(h).alias("hour_partition"), "event_type", "n_rows", "sum_value", "n_users"
-        )
-        for h in hours
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return read_landing_table(spark, rollup_root, *hours).select(
+        bq_partition_from_hive_cols().alias("hour_partition"),
+        "event_type", "n_rows", "sum_value", "n_users",
+    )
 
 
 ORACLE_ROLLUP_CONTINUOUS = """
@@ -4924,16 +4919,9 @@ def q_rollup_repair_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     repaired = repair_rollup(spark, table_root, rollup_root, ["event_type"], aggs)
     assert repaired == [hours[1], hours[2]], repaired
 
-    frames = [
-        read_landing_table(spark, rollup_root, h).select(
-            F.lit(h).alias("hour_partition"), "event_type", "n_rows", "sum_value"
-        )
-        for h in hours
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return read_landing_table(spark, rollup_root, *hours).select(
+        bq_partition_from_hive_cols().alias("hour_partition"), "event_type", "n_rows", "sum_value"
+    )
 
 
 ORACLE_ROLLUP_REPAIR = """
@@ -5189,14 +5177,8 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drain_stream(q)
 
-    frames = [
-        read_landing_table(spark, table_root, f"20240101{h:02d}")
-        for h in range(3)
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy(
+    hours = [f"20240101{h:02d}" for h in range(3)]
+    return read_landing_table(spark, table_root, *hours).groupBy(
         F.date_format("ts", "yyyy-MM-dd HH").alias("hour")
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -5248,14 +5230,8 @@ def q_rollup_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         _FIXTURES[key] = rollup_root
 
-    rollup_root = _FIXTURES[key]
-    frames = [
-        read_landing_table(spark, rollup_root, f"20240101{h:02d}")
-        for h in range(3)
-    ]
-    rollup = frames[0]
-    for f in frames[1:]:
-        rollup = rollup.unionByName(f)
+    hours = [f"20240101{h:02d}" for h in range(3)]
+    rollup = read_landing_table(spark, _FIXTURES[key], *hours)
     return rollup.groupBy("event_type").agg(
         F.sum("n_rows").alias("n_rows"),
         F.round(F.sum("sum_value"), 2).alias("sum_value"),
@@ -5591,7 +5567,7 @@ ORACLES.update(BEHAVIOR_ORACLES)
 # their deterministic md5-family/fixed-quantizer forms this round) sort to
 # the front of the stale pool on their own.
 #
-# Round-19 queue — keys whose implementation changed since their last
+# Round-20 queue — keys whose implementation changed since their last
 # green correctness row, per the changed-kernel discipline: a green row from
 # an earlier round attests the OLD code and must not satisfy the queue.
 # _ROUND_QUEUE_ROUND pins the round this queue demands evidence FROM:
@@ -5600,8 +5576,9 @@ ORACLES.update(BEHAVIOR_ORACLES)
 # the stalest keys.
 # Gate (per project discipline): every queued key verified with
 # scripts/check_correctness.py at sf0.01 AND sf0.1 before the rotation
-# landed.
-_ROUND_QUEUE_ROUND = 19
+# landed. The committed round-19 rows predate every change queued here,
+# so only round-20 rows can retire an entry.
+_ROUND_QUEUE_ROUND = 20
 _ROUND_QUEUE = [
     # the IVF-PQ index family: publish protocol moved to
     # operators/_publish.py, legacy-layout fallbacks removed, strict
@@ -5632,6 +5609,25 @@ _ROUND_QUEUE = [
     # avg_score now rounds the binary double like the oracle's
     # round(DOUBLE, 4) (was Spark's decimal half-up)
     "classify_naive_bayes",
+    # several hours now read back as ONE leaf-list read_landing_table
+    # (was a per-hour read + unionByName loop); hour_partition comes from
+    # the shared partition-column key instead of a per-read literal; the
+    # rollup's hour timestamp comes from the partition columns, and
+    # repair_rollup rolls every missing hour up from one read
+    "rollup_continuous_hourly",
+    "rollup_repair_missing",
+    "stream_upsert_sink",
+    "rollup_mv_rewrite",
+    # reads its kept hours' leaves instead of the whole root; the
+    # partition key is the shared Column twin of the hour-path parse
+    "partition_vacuum_retention",
+    # the per-hour key and the store's part_key are the shared Column
+    # twin; the incremental refresh reads the touched hours' leaves
+    "stats_zone_map",
+    "scan_file_skipping",
+    # list_table_partitions parses leaves with the shared inverse; the
+    # lag and window use the partition kit's parse/format
+    "monitor_freshness",
 ]
 
 _missing = [k for k in _ROUND_QUEUE if k not in QUERIES]

@@ -7,7 +7,8 @@ max_results=1)`` and short-circuits on the first item; we use the Hadoop
 FileSystem ``globStatus`` on the partition directory, which is a pure
 namenode/object-store LIST with no Spark job launched. At 100 TB this stays
 O(one directory listing) because the Hive layout puts each hour in its own
-prefix.
+prefix. The hour's directory comes from :mod:`..functions.partition`, the
+one owner of the hour ↔ directory mapping.
 """
 
 from __future__ import annotations

@@ -115,3 +115,26 @@ def ns_sf_dir(tmp_path):
     )
     pq.write_table(table, str(tmp_path / "events.parquet"))
     return str(tmp_path)
+
+
+def run_counting_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return its result and the
+    tasks each Spark job it launched ran, one entry per job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job and stage records arrive through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    tasks = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        stages = (tracker.getStageInfo(s) for s in tracker.getJobInfo(job_id).stageIds)
+        tasks.append(sum(s.numCompletedTasks for s in stages if s is not None))
+    return out, tasks

@@ -2,9 +2,10 @@
 has a query, every query is callable, and names stay collision-free.
 Cheap guards against catalog wiring regressions."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 

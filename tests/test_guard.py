@@ -90,6 +90,17 @@ def test_read_landing_table_hour_leaf_passes(spark, landing):
     assert assert_partition_filtered(read_landing_table(spark, landing, "2030010100")).count() == 0
 
 
+def test_leaf_list_read_passes_and_root_in_the_list_rejected(spark, landing):
+    """A read of several hours' leaves is partition-constrained by
+    construction; a leaf list that also names the root is not."""
+    two_hours = read_landing_table(spark, landing, "2024010100", "2024010101")
+    assert assert_partition_filtered(two_hours).count() > 0
+    leaf = f"{landing}/year=2024/month=01/day=01/hour=00"
+    df = spark.read.option("basePath", landing).parquet(leaf, landing)
+    with pytest.raises(PartitionFilterRequiredError):
+        assert_partition_filtered(df)
+
+
 @pytest.mark.parametrize("fragment", ["year=2024", "year=2024/month=01/day=01"])
 def test_unfiltered_shallow_directory_read_rejected(spark, landing, fragment):
     """A directory above the hour leaf still spans many hours."""

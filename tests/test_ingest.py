@@ -27,7 +27,7 @@ from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.plans.jobs 
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.hive_csv import read_hive_partition
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import partition_exists
 
-from .conftest import EVENTS_SCHEMA, TS_FMT
+from .conftest import EVENTS_SCHEMA, TS_FMT, run_counting_jobs
 
 # events span 2024-01-01..2024-01-30 (TESTDATA.md); hour 2024010100 exists.
 PART = "2024010100"
@@ -354,6 +354,29 @@ def test_read_hive_partition_reads_only_the_hours_leaf(spark, tmp_path, depth):
         (2 * i, f"u{i}", h.year, h.month, h.day, h.hour),
         (2 * i + 1, f"v{i}", h.year, h.month, h.day, h.hour),
     ]
+
+
+@pytest.mark.parametrize("depth", [24, 2000])
+def test_read_landing_table_reads_a_set_of_hours_in_one_read(spark, tmp_path, depth):
+    """Three hours read back as one leaf-list read: exactly those hours'
+    files are opened however deep the table is, the rows are those
+    hours' rows, and building the read launches one Spark job (schema
+    inference) where a per-hour union launched one per hour."""
+    root = tmp_path / "deep_table"
+    hours, files = _write_hours(root, depth, _parquet_hour)
+    picked = [1, depth // 2, depth - 1]
+    parts = [bq_partition_from_datetime(hours[i]) for i in picked]
+    df, jobs = run_counting_jobs(spark, lambda: read_landing_table(spark, str(root), *parts))
+    assert len(jobs) == 1
+    assert sorted(_input_paths(df)) == sorted(str(files[i]) for i in picked)
+    expected = []
+    for i in picked:
+        h = hours[i]
+        expected += [
+            (2 * i, i + 0.25, h.year, h.month, h.day, h.hour),
+            (2 * i + 1, i + 0.5, h.year, h.month, h.day, h.hour),
+        ]
+    assert sorted(tuple(r) for r in df.collect()) == sorted(expected)
 
 
 def test_read_landing_table_missing_hour_is_empty_with_table_columns(spark, tmp_path):

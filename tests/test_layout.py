@@ -267,6 +267,64 @@ def test_zone_map_store_incremental_refresh(spark, events):
     assert df.count() == hour_df.count()
 
 
+def test_zone_map_refresh_tasks_do_not_grow_with_store_depth(spark, tmp_path):
+    """An hourly write into a zone-mapped table 48 hours deep launches
+    only jobs of a handful of tasks: the refresh learns the store's
+    columns from one store leaf instead of listing every hour's stats
+    directory (a distributed listing job, one task per hour, once there
+    are more than 32). Rewriting an hour with its own rows leaves every
+    stats row as it was."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.partition import (
+        bq_partition_from_datetime,
+        hive_path_from_datetime,
+    )
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import (
+        write_partition_overwrite,
+    )
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.zonemap import (
+        load_zone_map,
+        refresh_zone_map,
+    )
+
+    from .conftest import run_counting_jobs
+
+    root = tmp_path / "zm_deep"
+    hours = [dt.datetime(2024, 1, 1) + dt.timedelta(hours=i) for i in range(48)]
+    for i, hour in enumerate(hours):
+        leaf = root / hive_path_from_datetime(hour)
+        leaf.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"event_id": [2 * i, 2 * i + 1], "value": [i + 0.25, i + 0.5]}),
+            leaf / "part-0.parquet",
+        )
+    refresh_zone_map(spark, str(root), cols=["event_id", "value"])
+
+    def stats():
+        return sorted(
+            tuple(r) for r in load_zone_map(spark, str(root)).drop("file_path").collect()
+        )
+
+    before = stats()
+    assert len(before) == 48
+    i = 5
+    same_rows = spark.createDataFrame(
+        [(2 * i, i + 0.25), (2 * i + 1, i + 0.5)], "event_id long, value double"
+    ).coalesce(1)
+    _, jobs = run_counting_jobs(
+        spark,
+        lambda: write_partition_overwrite(
+            same_rows, str(root), partition=bq_partition_from_datetime(hours[i])
+        ),
+    )
+    assert jobs and max(jobs) <= 4, jobs
+    assert stats() == before
+
+
 def test_zone_map_cache_detects_foreign_refresh(spark, events):
     """A store refreshed by ANOTHER process must be picked up by a reader
     whose driver cache still holds the old snapshot: the cache hit is

@@ -87,3 +87,30 @@ def test_merge_upsert_partition_semantics(spark, events, tmp_path):
     ).count() == 0
     # sibling partition untouched
     assert read_landing_table(spark, table_root, "2024010101").count() == other_before
+
+
+def test_list_table_partitions_parses_unpadded_leaves_and_skips_non_hours(spark, tmp_path):
+    """Leaves written with unpadded values (pyarrow's Hive layout:
+    ``month=1/day=2/hour=3``) list as padded ``YYYYMMDDHH``; a null-hour
+    leaf (``hour=__HIVE_DEFAULT_PARTITION__``) is not an hour and is not
+    listed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "pa_tbl")
+    pq.write_to_dataset(
+        pa.table(
+            {
+                "v": [1, 2, 3, 4],
+                "year": [2024, 2024, 2024, 2024],
+                "month": [1, 1, 12, 1],
+                "day": [2, 2, 31, 2],
+                "hour": [3, 23, 0, None],
+            }
+        ),
+        root,
+        partition_cols=["year", "month", "day", "hour"],
+    )
+    assert (tmp_path / "pa_tbl/year=2024/month=1/day=2/hour=__HIVE_DEFAULT_PARTITION__").is_dir()
+    assert list_table_partitions(spark, root) == ["2024010203", "2024010223", "2024123100"]
+

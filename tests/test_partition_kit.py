@@ -39,6 +39,20 @@ def test_hive_path_from_bq_partition_composition():
     assert P.hive_path_from_bq_partition("2023062712") == "year=2023/month=06/day=27/hour=12"
 
 
+def test_bq_partition_from_hive_path_inverts_and_rejects_non_hours():
+    assert P.bq_partition_from_hive_path("year=2023/month=06/day=27/hour=12") == "2023062712"
+    assert P.bq_partition_from_hive_path("year=2024/month=1/day=2/hour=3") == "2024010203"
+    for fragment in (
+        "",
+        "year=2024",
+        "year=2024/month=01/day=01",
+        "year=2024/month=01/day=01/hour=__HIVE_DEFAULT_PARTITION__",
+        "year=2024/month=01/day=01/hour=00/part-0.parquet",
+    ):
+        with pytest.raises(ValueError):
+            P.bq_partition_from_hive_path(fragment)
+
+
 def test_glob_path_strips_trailing_slash():
     # Parity: removesuffix("/") then template (ingestion/partition.py:25-27)
     assert (
@@ -82,6 +96,7 @@ def test_roundtrip_property(d):
     assert P.hive_path_from_bq_partition(
         P.bq_partition_from_datetime(d)
     ) == P.hive_path_from_datetime(truncated)
+    assert P.bq_partition_from_hive_path(P.hive_path_from_datetime(d)) == P.bq_partition_from_datetime(d)
 
 
 def test_strict_partition_col_parses_and_raises(spark):
@@ -107,3 +122,20 @@ def test_strict_partition_col_parses_and_raises(spark):
         # strict twin: job fails
         with pytest.raises(Exception, match="malformed partition string|RAISE_ERROR"):
             df.select(ts_from_bq_partition_col_strict("p").alias("ts")).collect()
+
+
+def test_bq_partition_from_hive_cols_matches_the_path_parse(spark):
+    """The Column twin keys int partition columns (what discovery reads
+    back) and the sink's zero-padded strings the same as the path parse."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import (
+        bq_partition_from_hive_cols,
+    )
+
+    ints = spark.createDataFrame([(2024, 1, 2, 3)], "year int, month int, day int, hour int")
+    strs = spark.createDataFrame(
+        [("2024", "01", "02", "03")], "year string, month string, day string, hour string"
+    )
+    expected = P.bq_partition_from_hive_path("year=2024/month=1/day=2/hour=3")
+    for df in (ints, strs):
+        assert df.select(bq_partition_from_hive_cols().alias("p")).first().p == expected
+
