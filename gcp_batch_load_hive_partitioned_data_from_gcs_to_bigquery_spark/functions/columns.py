@@ -71,11 +71,6 @@ def bq_partition_from_hive_cols() -> Column:
     )
 
 
-def trunc_hour_col(ts: Column | str) -> Column:
-    """``TIMESTAMP_TRUNC(f, HOUR)`` (bq_create_table_ddl.sql:7)."""
-    return F.date_trunc("hour", ts)
-
-
 def partition_columns(ts: Column | str) -> dict[str, Column]:
     """The four zero-padded partition columns derived from a timestamp —
     what Hive-style partition discovery would surface from the path.
@@ -88,21 +83,3 @@ def partition_columns(ts: Column | str) -> dict[str, Column]:
         "hour": F.date_format(ts, "HH"),
     }
 
-
-def partition_decorator_col(table_id: Column | str, partition: Column | str) -> Column:
-    """``concat(table_id, '$', suffix)`` (ingestion/tasks.py:24-25)."""
-    return F.concat(F.col(table_id) if isinstance(table_id, str) else table_id,
-                    F.lit("$"),
-                    F.col(partition) if isinstance(partition, str) else partition)
-
-
-def glob_path_col(root: Column | str, partition_path: Column | str) -> Column:
-    """``root/partition/*`` glob with trailing-slash stripping
-    (twin of ingestion/partition.py:25-27)."""
-    root_c = F.col(root) if isinstance(root, str) else root
-    part_c = F.col(partition_path) if isinstance(partition_path, str) else partition_path
-    return F.format_string(
-        "%s/%s/*",
-        F.regexp_replace(root_c, "/$", ""),
-        F.regexp_replace(part_c, "/$", ""),
-    )

@@ -6,9 +6,12 @@ partition has two representations — the compact string ``YYYYMMDDHH`` (the
 BigQuery partition-decorator suffix) and the Hive directory fragment
 ``year=YYYY/month=MM/day=DD/hour=HH`` — bridged through ``datetime``.
 
-Each function here has a Column-expression twin in
+The string conversions (``bq_partition_from_datetime``,
+``datetime_from_bq_partition``, ``hive_path_from_datetime``,
+``bq_partition_from_hive_path``) have Column-expression twins in
 :mod:`..functions.columns` so the same arithmetic runs distributed inside
-whole-stage codegen when applied to billions of rows.
+whole-stage codegen when applied to billions of rows. The path, decorator
+and job-id helpers are driver-side only.
 """
 
 from __future__ import annotations

@@ -26,7 +26,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -129,20 +128,6 @@ def png_dims_for_id(media_id: int) -> tuple[int, int]:
     external oracle can recompute the expected parse result without
     touching the bytes."""
     return 16 + media_id % 64, 16 + (media_id // 8) % 48
-
-
-def documents_as_media(docs: DataFrame) -> DataFrame:
-    """Adapter for testing: treat document text bytes as opaque media
-    payloads (the container has no real image fixtures)."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode("text", "UTF-8").alias("content"),
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.octet_length("text").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    )
 
 
 def documents_as_png_media(docs: DataFrame) -> DataFrame:

@@ -1087,8 +1087,10 @@ def retrain_ivf_pq_index(
     nlist×d centroid matrix. The encode + clustering shuffle is the
     build's exact cost; the ONE term retrain carries beyond the build
     is the k-means fit, and its cost model deserves honesty (measured
-    at 1×/10×/100× in scripts/retrain_probe.py): per iteration the fit
-    pays ``sample × nlist`` distance GEMMs, and because the sample cap
+    at 1×/10×/100×, PROBES_r18.jsonl runs A/B/G/H; the
+    ``ann_ivf_pq_retrain`` row of scripts/scale_probe.py tracks it):
+    per iteration the fit pays ``sample × nlist`` distance GEMMs, and
+    because the sample cap
     scales with nlist (``256·nlist``, FAISS's documented training
     density) while ``nlist ∝ corpus``, the fit's TOTAL work grows
     quadratically in corpus size and overtakes the linear encode once
@@ -2178,7 +2180,7 @@ def semdedup(
     # it (pair-join left, pair-join right, final verdict join) — without
     # the cache each branch re-derives its whole lineage and the GEMM
     # kernel runs 3x per action (measured ~3x the assignment stage at
-    # both 1x and 10x in scripts/semantic_stage_probe.py).
+    # both 1x and 10x; BASELINE.md "Round-11 semantic stage probe").
     from ._cache import scoped_persist
 
     assigned = scoped_persist(
@@ -2996,44 +2998,6 @@ def jl_topk(
     )
 
 
-def jl_project_packed(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_dim: int = 16,
-    in_dim: int = 64,
-    out_col: str = "embedding",
-) -> DataFrame:
-    """:func:`jl_project` with the projected vector kept PACKED as
-    ``array<double>`` (one row per input) instead of exploded to
-    (id, dim, value) rows — the shape downstream vector operators
-    (semdedup, cosine joins) consume directly. Same deterministic sign
-    matrix, same single-GEMM-per-batch kernel, same zero-shuffle plan."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    R = jl_sign_matrix(in_dim, out_dim)
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField(out_col, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def _kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            P = np.array(list(pdf[vec_col]), dtype=np.float64) @ R
-            yield pd.DataFrame({"vec_id": ids, out_col: list(P)})
-
-    return with_double_embedding(df.select(id_col, vec_col), vec_col).mapInPandas(
-        _kernel, out_schema
-    )
-
-
 def semdedup_jl(
     corpus: DataFrame,
     nlist: int = 16,
@@ -3119,7 +3083,8 @@ def semdedup_jl(
     # Persisted for the same reason as semdedup's assignment: three plan
     # branches (pair-join left/right, final verdict join) would each
     # re-run the projection+assignment kernel — 3x the GEMM per action
-    # (measured on the full-dim twin in scripts/semantic_stage_probe.py).
+    # (measured on the full-dim twin; BASELINE.md "Round-11 semantic
+    # stage probe").
     from ._cache import scoped_persist
 
     assigned = scoped_persist(

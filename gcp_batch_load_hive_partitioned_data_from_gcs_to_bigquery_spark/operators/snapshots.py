@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
-    hadoop_fs,
+    delete_path,
+    glob_status,
     read_small_file,
     write_small_file,
 )
@@ -62,18 +63,9 @@ _DATA_DIR = "data"
 def snapshot_versions(spark: SparkSession, root: str) -> list[int]:
     """Committed versions, ascending — resolved from manifests ONLY
     (a data directory without its manifest is not a version)."""
-    jvm, fs, _ = hadoop_fs(spark, root)
-    pattern = jvm.org.apache.hadoop.fs.Path(
-        f"{root}/{_MANIFEST_DIR}/v*.json"
-    )
-    statuses = fs.globStatus(pattern)
-    if statuses is None:
-        return []
-    versions = []
-    for st in statuses:
-        name = st.getPath().getName()  # v00000001.json
-        versions.append(int(name[1:-5]))
-    return sorted(versions)
+    manifests = glob_status(spark, f"{root}/{_MANIFEST_DIR}/v*.json")
+    # each manifest is named v00000001.json
+    return sorted(int(st.getPath().getName()[1:-5]) for st in manifests)
 
 
 def _manifest_path(root: str, version: int) -> str:
@@ -107,10 +99,10 @@ def write_snapshot(
     data_dir = f"{root}/{_DATA_DIR}/v{version:08d}"
     df.write.mode("error").parquet(data_dir)
 
-    jvm, fs, _ = hadoop_fs(spark, root)
-    pattern = jvm.org.apache.hadoop.fs.Path(f"{data_dir}/*.parquet")
-    statuses = fs.globStatus(pattern) or []
-    new_files = sorted(str(st.getPath().toString()) for st in statuses)
+    new_files = sorted(
+        str(st.getPath().toString())
+        for st in glob_status(spark, f"{data_dir}/*.parquet")
+    )
 
     files = list(new_files)
     if mode == "append" and existing:
@@ -224,18 +216,12 @@ def vacuum_snapshots(
     reachable: set[str] = set()
     for v in kept:
         reachable.update(_read_manifest(spark, root, v)["files"])
-    jvm, fs, _ = hadoop_fs(spark, root)
     deleted = 0
     for v in dropped:
         for f in _read_manifest(spark, root, v)["files"]:
-            if f not in reachable:
-                p = jvm.org.apache.hadoop.fs.Path(f)
-                if fs.exists(p):
-                    fs.delete(p, False)
-                    deleted += 1
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(_manifest_path(root, v)), False
-        )
+            if f not in reachable and delete_path(spark, f):
+                deleted += 1
+        delete_path(spark, _manifest_path(root, v))
     return {
         "kept": len(kept),
         "dropped_versions": len(dropped),

@@ -1,4 +1,4 @@
-"""One-off scale-evidence probe: time the most expensive operators at
+"""The standing scale probe: time the most expensive operators at
 sf0.1 and at a K×-replicated derivative, and report per-operator scaling
 exponents (t ∝ N^e → e = ln(tK/t1)/ln(K)).
 
@@ -374,6 +374,31 @@ def main() -> None:
         "ann_ivf_pq_refine_get",
         lambda sf, kk: _refine_rescore(spark, refine_root(sf, kk), short[kk], queries20, 10),
     )
+
+    # IVF-PQ retrain under the default (capped) fit budget: re-fit the
+    # quantizer at nlist ∝ corpus, re-encode, re-publish. Its k-means
+    # fit is the one term that grows faster than the build's linear
+    # encode (PROBES_r18.jsonl runs G/H: the uncapped fit reached 10x
+    # the build at 100x), so this exponent is the early warning that the
+    # cap stopped binding. Each scale retrains its own index (built
+    # untimed), not the refine rows' fixture; a retrain keeps nlist, rows
+    # and layout, so every run times the same work.
+    retrain_roots = {
+        kk: fixture(
+            f"{DERIVED}_ivfpq_retrain_{kk}x",
+            lambda root: build_ivf_pq_index(
+                tbl(sf, "embeddings"), root,
+                nlist=16 * kk, m=8, codebook_size=16 * kk, store_vectors=True,
+            ),
+        )
+        for sf, kk in ((base, 1), (derived, k))
+    }
+
+    def retrain(sf, kk):
+        return SIM.retrain_ivf_pq_index(spark, retrain_roots[kk], nlist=16 * kk)
+
+    retrain(base, 1)  # untimed warm-up of the k-means fit path
+    probe("ann_ivf_pq_retrain", retrain)
 
     # stream_sliding_distinct store-age curve: the sink merges ONLY the
     # batch's touched hour partitions (existence-probed per key, never a

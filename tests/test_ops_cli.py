@@ -5,7 +5,8 @@ backfill a range → list partitions → compact → vacuum."""
 import os
 import sys
 
-sys.path.insert(0, "/root/repo/scripts")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 from ops import main as ops_main  # noqa: E402
 

@@ -42,6 +42,33 @@ def test_load_table_folds_tz_aware_ns_too(spark, tmp_path):
     assert df.select(F.unix_micros("ts").alias("us")).first().us == ns // 1000
 
 
+def test_load_table_rereads_footer_after_in_place_rewrite(spark, ns_sf_dir):
+    """A file rewritten in place from timestamp[ns] to tz-aware micros
+    loads in its new flavor: no footer probe answers from the old file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    expected = [ns // 1000 for ns in NS_EVENT_TS]
+
+    def micros():
+        df = load_table(spark, ns_sf_dir, "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        rows = df.orderBy("event_id").select(F.unix_micros("ts").alias("us")).collect()
+        return [r.us for r in rows]
+
+    path = f"{ns_sf_dir}/events.parquet"
+    assert timestamp_flavor(path) == "ns"
+    assert micros() == expected
+    table = pq.read_table(path)
+    idx = table.schema.get_field_index("ts")
+    pq.write_table(
+        table.set_column(idx, "ts", pa.array(expected, pa.timestamp("us", tz="UTC"))),
+        path,
+    )
+    assert timestamp_flavor(path) == "tz"
+    assert micros() == expected
+
+
 def test_source_generic_format_reads_ns_file(spark, ns_sf_dir):
     got = {r.event_type: r.n for r in q_source_generic_format(spark, ns_sf_dir).collect()}
     assert got == {"click": 2, "view": 1}
