@@ -23,6 +23,11 @@ from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.p
     datetime_from_bq_partition,
     last_hour_partition,
 )
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators._publish import (
+    path_exists,
+    read_small_file,
+    write_small_file,
+)
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import create_partitioned_table
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.plans.ingest import (
     plan_partition_ingest,
@@ -62,24 +67,25 @@ class IngestService:
         self, dataset_id: str, table_id: str, schema: T.StructType
     ) -> str:
         """CREATE TABLE IF NOT EXISTS with hourly partitioning; the schema
-        is persisted so later loads conform positionally to it."""
+        is persisted so later loads conform positionally to it. The schema
+        file goes through the table root's own FileSystem (any Hadoop
+        URI works) with the atomic small-file write, and an existing one
+        is never overwritten."""
         root = self.table_root(dataset_id, table_id)
         create_partitioned_table(self.spark, root)
         path = os.path.join(root, SCHEMA_FILE)
-        if not os.path.exists(path):
-            with open(path, "w", encoding="utf-8") as fh:
-                json.dump(schema.jsonValue(), fh)
+        if not path_exists(self.spark, path):
+            write_small_file(self.spark, path, json.dumps(schema.jsonValue()))
         return root
 
     def _load_schema(self, dataset_id: str, table_id: str) -> T.StructType:
         path = os.path.join(self.table_root(dataset_id, table_id), SCHEMA_FILE)
-        if not os.path.exists(path):
+        if not path_exists(self.spark, path):
             raise TableNotRegisteredError(
                 f"table {dataset_id}.{table_id} does not exist "
                 "(create_disposition=CREATE_NEVER parity)"
             )
-        with open(path, encoding="utf-8") as fh:
-            return T.StructType.fromJson(json.load(fh))
+        return T.StructType.fromJson(json.loads(read_small_file(self.spark, path)))
 
     # --- probes (ingestion/app.py:52-55, 70-72, 96-104) --------------------
 

@@ -105,7 +105,6 @@ def write_partition_overwrite(
     table_root: str,
     ts_col: str = "ts",
     cluster_by: list[str] | None = None,
-    fmt: str = "parquet",
     create_never: bool = True,
     files_per_partition: int | None = None,
     partition: str | None = None,
@@ -182,8 +181,7 @@ def write_partition_overwrite(
         touched = [r[0] for r in out.select(bq_partition_from_hive_cols()).distinct().collect()]
 
     (
-        out.write.format(fmt)
-        .partitionBy(*PARTITION_COLS)
+        out.write.partitionBy(*PARTITION_COLS)
         # Self-contained dynamic overwrite: the per-write option wins over
         # whatever the ambient session sets. Under the default STATIC mode
         # an overwrite deletes EVERY partition under the root — an O(table)
@@ -193,7 +191,7 @@ def write_partition_overwrite(
         # of session conf.
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
-        .save(table_root)
+        .parquet(table_root)
     )
 
     # Refresh ONLY the hours this batch touched (set computed above) —

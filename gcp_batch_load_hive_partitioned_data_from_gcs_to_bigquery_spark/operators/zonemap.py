@@ -16,10 +16,11 @@ Spark-first design:
   parquet pass, a single groupBy (shuffle keyed on file path, ~one row
   per file out);
 * the candidate-file list is driver-side METADATA, not data: one row
-  per file, exactly like Delta's transaction-log file listing — at
-  100 TB with 128 MiB files that is ~800 k rows, small enough to
-  collect, and the zone map itself can be persisted as a table and
-  incrementally maintained per partition write;
+  per file, exactly like Delta's transaction-log file listing. The
+  persisted store is collected once and kept as a driver snapshot while
+  its on-disk files are unchanged; each scan walks the table once,
+  checks the store covers exactly the live files, and prunes the
+  snapshot in Python — no Spark job before the final read;
 * the pruned scan is a plain ``spark.read.parquet(*files)`` — Catalyst
   still applies partition pruning, predicate pushdown, and row-group
   skipping INSIDE the surviving files; the zone map only shrinks the
@@ -57,6 +58,15 @@ def zone_map_path(table_root: str) -> str:
     return f"{table_root.rstrip('/')}/{ZONEMAP_DIRNAME}"
 
 
+def _stat_aggs(cols: list[str]) -> list[Column]:
+    """Row count plus ``min_<c>`` / ``max_<c>`` for each of ``cols``."""
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for c in cols:
+        aggs.append(F.min(c).alias(f"min_{c}"))
+        aggs.append(F.max(c).alias(f"max_{c}"))
+    return aggs
+
+
 def file_zone_map(
     spark: SparkSession,
     table_root: str,
@@ -79,15 +89,11 @@ def file_zone_map(
         df = spark.read.parquet(table_root)
     else:
         df = read_landing_table(spark, table_root, *partitions)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
     key_names = ["file_path", "part_key"] if with_part_key else ["file_path"]
     keys = [F.col("_metadata.file_path").alias("file_path")]
     if with_part_key:
         keys.append(bq_partition_from_hive_cols().alias("part_key"))
-    return df.select(*keys, *cols).groupBy(*key_names).agg(*aggs)
+    return df.select(*keys, *cols).groupBy(*key_names).agg(*_stat_aggs(cols))
 
 
 def partition_zone_map(
@@ -102,11 +108,9 @@ def partition_zone_map(
     file to one row before the (tiny) shuffle.
     """
     df = spark.read.parquet(table_root)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    return df.groupBy(bq_partition_from_hive_cols().alias("hour_partition")).agg(*aggs)
+    return df.groupBy(bq_partition_from_hive_cols().alias("hour_partition")).agg(
+        *_stat_aggs(cols)
+    )
 
 
 def has_zone_map(spark: SparkSession, table_root: str) -> bool:
@@ -114,45 +118,71 @@ def has_zone_map(spark: SparkSession, table_root: str) -> bool:
     return path_exists(spark, zone_map_path(table_root))
 
 
-#: Driver-side snapshot of each persisted store's rows (the Delta-snapshot
-#: caching pattern): the store is metadata-sized, re-reading it per scan is
-#: pure overhead. Each entry is ``(fingerprint, rows)`` where the
-#: fingerprint is the store's own file listing (path, mtime, length) — a
-#: cache hit is honored only while the on-disk store is byte-identical, so
-#: a refresh from ANOTHER session/process is picked up on the next scan
-#: (this process's refresh_zone_map also invalidates eagerly). Bounded to
-#: ``_STORE_CACHE_MAX`` roots, evicted FIFO: at ~800 k files a snapshot is
-#: ~100 MB, and an unbounded process-global dict would pin one per table
-#: root forever. Keyed by store path.
-_STORE_CACHE: dict[str, tuple[frozenset, list]] = {}
-_STORE_CACHE_MAX = 8
+def _norm_file_path(p: str) -> str:
+    """Normalize a file URI/path to its plain path component so store
+    entries (``file:///x`` from ``_metadata.file_path``) compare equal
+    to the walker's keys (bare ``/x``). Strips ``scheme://authority`` or
+    ``scheme:`` by regex (NOT ``urlparse``, which would also truncate at
+    ``?``/``#`` — legal filename bytes), then decodes percent escapes
+    only (``unquote`` keeps ``+``)."""
+    import re
+    from urllib.parse import unquote
+
+    s = re.sub(r"^[a-z][a-zA-Z0-9+.-]*://[^/]*", "", p)
+    s = re.sub(r"^[a-z][a-zA-Z0-9+.-]*:", "", s)
+    return unquote(s) or p
 
 
-def _store_fingerprint(spark: SparkSession, store: str) -> frozenset:
-    """Identity of the on-disk store: frozenset of (path, mtime, length)
-    over the store's own files. Metadata-scale (one stat per stats file ≈
-    one per partition), no data read. Any refresh — incremental overwrite
-    of one hour or a full rebuild, from any process — changes it."""
+def _walk_files(spark: SparkSession, root: str) -> dict[str, tuple[int, int]]:
+    """``{path: (mtime, size)}`` for every file under ``root``, skipping
+    ``_``/``.`` entries below the root (``_zonemap``, ``_SUCCESS``,
+    checksum sidecars — Spark's own listing convention); empty when
+    ``root`` does not exist. Metadata-scale: one stat per file, no data
+    read, no job. Over a table root the keys are its live data files;
+    over a store root the items are the store's fingerprint (a refresh
+    always writes new ``part-*`` names). Local paths walk the OS
+    directly (a py4j round-trip per file would dominate the scan);
+    remote filesystems go through the Hadoop FS client."""
     import os
     from urllib.parse import urlparse
 
-    parsed = urlparse(store)
-    if parsed.scheme in ("", "file"):
-        root_path = _norm_file_path(store)
-        out = set()
-        for dirpath, _dirnames, filenames in os.walk(root_path):
+    hidden = ("_", ".")
+    out: dict[str, tuple[int, int]] = {}
+    if urlparse(root).scheme in ("", "file"):
+        for dirpath, dirnames, filenames in os.walk(_norm_file_path(root)):
+            dirnames[:] = [d for d in dirnames if not d.startswith(hidden)]
             for f in filenames:
-                p = os.path.join(dirpath, f)
-                st = os.stat(p)
-                out.add((p, st.st_mtime_ns, st.st_size))
-        return frozenset(out)
-    _, fs, root = hadoop_fs(spark, store)
-    out = set()
-    it = fs.listFiles(root, True)
+                if not f.startswith(hidden):
+                    p = os.path.join(dirpath, f)
+                    st = os.stat(p)
+                    out[p] = (st.st_mtime_ns, st.st_size)
+        return out
+    _, fs, jroot = hadoop_fs(spark, root)
+    if not fs.exists(jroot):
+        return out
+    root_path = _norm_file_path(jroot.toUri().getPath())
+    it = fs.listFiles(jroot, True)
     while it.hasNext():
         s = it.next()
-        out.add((s.getPath().toUri().getPath(), s.getModificationTime(), s.getLen()))
-    return frozenset(out)
+        p = s.getPath().toUri().getPath()
+        rel = p[len(root_path) :].lstrip("/") if p.startswith(root_path) else p
+        if not any(seg.startswith(hidden) for seg in rel.split("/")):
+            out[p] = (s.getModificationTime(), s.getLen())
+    return out
+
+
+#: Driver-side snapshot of each persisted store's rows (the Delta-snapshot
+#: caching pattern): the store is metadata-sized, re-reading it per scan is
+#: pure overhead (a 3-job store read against a job-free walk). Each entry
+#: is ``(fingerprint, rows)`` where the fingerprint is the store's own
+#: :func:`_walk_files` — a cache hit is honored only while the on-disk
+#: store is unchanged, so a refresh from ANOTHER session/process is picked
+#: up on the next scan (this process's refresh_zone_map also invalidates
+#: eagerly). Bounded to ``_STORE_CACHE_MAX`` roots, evicted FIFO: at
+#: ~800 k files a snapshot is ~100 MB, and an unbounded process-global
+#: dict would pin one per table root forever. Keyed by store path.
+_STORE_CACHE: dict[str, tuple[dict, list]] = {}
+_STORE_CACHE_MAX = 8
 
 
 def _cached_store_rows(spark: SparkSession, table_root: str) -> list | None:
@@ -160,19 +190,15 @@ def _cached_store_rows(spark: SparkSession, table_root: str) -> list | None:
     served from the driver cache while the store's on-disk fingerprint is
     unchanged; re-collected (and re-cached) after any refresh."""
     store = zone_map_path(table_root)
-    if not path_exists(spark, store):
-        _STORE_CACHE.pop(store, None)
-        return None
-    fp = _store_fingerprint(spark, store)
+    fp = _walk_files(spark, store)
     hit = _STORE_CACHE.get(store)
     if hit is not None and hit[0] == fp:
         return hit[1]
-    zm = load_zone_map(spark, table_root)
-    if zm is None:  # store vanished between the exists check and the read
-        _STORE_CACHE.pop(store, None)
+    _STORE_CACHE.pop(store, None)
+    zm = load_zone_map(spark, table_root) if fp else None
+    if zm is None:
         return None
     rows = zm.collect()
-    _STORE_CACHE.pop(store, None)
     while len(_STORE_CACHE) >= _STORE_CACHE_MAX:
         _STORE_CACHE.pop(next(iter(_STORE_CACHE)))
     _STORE_CACHE[store] = (fp, rows)
@@ -240,93 +266,6 @@ def refresh_zone_map(
     _STORE_CACHE.pop(zone_map_path(table_root), None)
 
 
-def _norm_file_path(p: str) -> str:
-    """Normalize a file URI/path to its plain path component so store
-    entries (``file:///x`` from ``_metadata.file_path``) compare equal
-    to Hadoop listing output (``file:/x`` or bare ``/x``). Scheme
-    stripping is the same regex as :func:`_norm_path_expr` (NOT
-    ``urlparse``, which would also truncate at ``?``/``#`` — legal
-    filename bytes — where the SQL twin does not), and the decode is
-    percent-only (``unquote`` keeps ``+``), so driver and executor
-    normalize identically."""
-    import re
-    from urllib.parse import unquote
-
-    s = re.sub(r"^[a-z][a-zA-Z0-9+.-]*://[^/]*", "", p)
-    s = re.sub(r"^[a-z][a-zA-Z0-9+.-]*:", "", s)
-    return unquote(s) or p
-
-
-def _data_file_paths(spark: SparkSession, table_root: str) -> set[str]:
-    """Driver-side recursive listing of the table's DATA files (hidden
-    ``_``/``.`` entries such as ``_zonemap`` and ``_SUCCESS`` excluded,
-    matching Spark's own listing convention). Metadata-scale: one string
-    per file, no data read — the same O(files) budget the skipping scan
-    already spends collecting the stats rows. Local paths walk the OS
-    directly (a py4j round-trip per file would dominate the scan);
-    remote filesystems go through the Hadoop FS client."""
-    import os
-    from urllib.parse import urlparse
-
-    parsed = urlparse(table_root)
-    if parsed.scheme in ("", "file"):
-        root_path = _norm_file_path(table_root)
-        out: set[str] = set()
-        for dirpath, dirnames, filenames in os.walk(root_path):
-            dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-            for f in filenames:
-                if not f.startswith(("_", ".")):
-                    out.add(os.path.join(dirpath, f))
-        return out
-    _, fs, root = hadoop_fs(spark, table_root)
-    root_path = _norm_file_path(root.toUri().getPath())
-    out = set()
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        p = it.next().getPath().toUri().getPath()
-        rel = p[len(root_path) :].lstrip("/") if p.startswith(root_path) else p
-        if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
-            continue
-        out.add(p)
-    return out
-
-
-#: File-count cutoff above which the candidate list is pruned on the
-#: EXECUTORS instead of collecting the whole stats store to the driver.
-#: Below it (the common case, and every test fixture in this repo — the
-#: sf0.1 clustered layout is ~11.5k files), the cached driver snapshot
-#: (:func:`_cached_store_rows`) is strictly faster: one collect amortized
-#: across scans, zero extra Spark jobs per scan. Above it the snapshot
-#: stops being metadata-cheap — at ~10^6 files (a 100 TB table at
-#: 128 MiB/file) the per-file stats rows are hundreds of MB of driver
-#: memory per table — so the interval filter runs distributed and ONLY
-#: the surviving paths are collected (output-sized, bounded by
-#: selectivity, never by table size). 10^5 files ≈ tens of MB of stats
-#: rows: comfortably inside driver budget, an order of magnitude away
-#: from the failure mode.
-DISTRIBUTED_PRUNE_FILES = 100_000
-
-def _norm_path_expr() -> Column:
-    """SQL twin of :func:`_norm_file_path` — the SAME transform (strip
-    ``scheme://authority`` or ``scheme:``, then PERCENT-ONLY decode) so
-    store URIs (``file:///x``) compare equal to driver/Hadoop listing
-    paths (``/x``) on both sides of the coverage check. ``url_decode``
-    is form decoding (``+`` → space), which the driver's ``unquote``
-    does NOT do — a path containing ``+`` would spuriously fail the
-    check and force full scans forever — so literal ``+`` is protected
-    as ``%2B`` first, making the decode percent-only. Built lazily —
-    Column construction needs an active SparkContext."""
-    return F.try_url_decode(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.regexp_replace("file_path", "^[a-z][a-zA-Z0-9+.-]*://[^/]*", ""),
-                "^[a-z][a-zA-Z0-9+.-]*:", "",
-            ),
-            r"\+", "%2B",
-        )
-    )
-
-
 def _prune_rows(rows, col: str, lo, hi) -> tuple[list, int]:
     """Interval-overlap filter over collected stats rows → (keep paths,
     total files). NULL-only files have NULL min/max and are skipped,
@@ -340,44 +279,6 @@ def _prune_rows(rows, col: str, lo, hi) -> tuple[list, int]:
         and r[f"min_{col}"] <= hi
     ]
     return keep, len(rows)
-
-
-def _distributed_prune(
-    spark: SparkSession, table_root: str, col: str, lo, hi, live_files: set[str]
-) -> tuple[list, int] | None:
-    """Executor-side candidate pruning for very-large stores: the stats
-    rows never reach the driver. Coverage check = two anti-joins between
-    the store's normalized paths and the live listing (both metadata
-    columns of strings — the listing itself is O(files) strings, the
-    same budget Spark's own file index spends); the interval filter runs
-    distributed and only SURVIVING paths are collected. Returns ``None``
-    when there is no usable/current store (caller falls back)."""
-    zm = load_zone_map(spark, table_root)
-    if zm is None or f"min_{col}" not in zm.columns:
-        return None
-    store_paths = zm.select(_norm_path_expr().alias("p"))
-    listing = spark.createDataFrame(
-        ((p,) for p in live_files), "p string"
-    )
-    stale = (
-        store_paths.exceptAll(listing).limit(1).count()
-        or listing.exceptAll(store_paths).limit(1).count()
-    )
-    if stale:
-        return None
-    files_total = zm.count()
-    keep = [
-        r["file_path"]
-        for r in zm.filter(
-            F.col(f"min_{col}").isNotNull()
-            & F.col(f"max_{col}").isNotNull()
-            & (F.col(f"max_{col}") >= F.lit(lo))
-            & (F.col(f"min_{col}") <= F.lit(hi))
-        )
-        .select("file_path")
-        .collect()
-    ]
-    return keep, files_total
 
 
 def skipping_scan(
@@ -394,50 +295,23 @@ def skipping_scan(
     skip ratio. The data itself never moves to the driver.
 
     When a persisted store (:func:`refresh_zone_map`) carries stats for
-    ``col``, the candidate list comes from the STORE — a metadata-sized
-    read, no table scan at all. The store is trusted only after a
-    COVERAGE CHECK: its file set must exactly match a live listing of
-    the table's data files (a write that bypassed the sink hook, or a
+    ``col``, the candidate list comes from its driver snapshot
+    (:func:`_cached_store_rows`: no job while the store is unchanged)
+    pruned in Python — no table scan at all. The store is trusted only
+    after a COVERAGE CHECK: its file set must equal one walk of the
+    table's live data files (a write that bypassed the sink hook, or a
     crash between the data write and the refresh, leaves the store
     missing/retaining files). On any mismatch — and when there is no
     store — the stats are computed on the fly (one full scan, the
     pre-store behavior), so a stale store can never silently drop rows.
-
-    How the store is consulted depends on table size
-    (:data:`DISTRIBUTED_PRUNE_FILES`): below the cutoff the whole store
-    is collected once and cached driver-side (:func:`_cached_store_rows`
-    — cheapest per scan at metadata scale); at or above it the coverage
-    check and interval filter run on the EXECUTORS
-    (:func:`_distributed_prune`) and only surviving paths are collected,
-    so driver memory is bounded by selectivity, not file count. Both
-    paths produce the identical candidate list.
     """
     keep: list | None = None
     files_total = 0
-    live = _data_file_paths(spark, table_root)
-    if len(live) >= DISTRIBUTED_PRUNE_FILES:
-        pruned = _distributed_prune(spark, table_root, col, lo, hi, live)
-        if pruned is not None:
-            keep, files_total = pruned
-        else:
-            # stale/unusable store at distributed scale: go STRAIGHT
-            # to on-the-fly stats — falling into the driver-snapshot
-            # branch would collect the whole store, the exact cost
-            # the cutoff exists to avoid at ~10^6 files. Pop the
-            # cache so a later refresh is re-read, not served stale.
-            _STORE_CACHE.pop(zone_map_path(table_root), None)
-            live = None
-    if keep is None and live is not None:
-        stored_rows = _cached_store_rows(spark, table_root)
-        if stored_rows and f"min_{col}" in stored_rows[0].__fields__:
-            store_files = {_norm_file_path(r["file_path"]) for r in stored_rows}
-            if store_files == live:
-                keep, files_total = _prune_rows(stored_rows, col, lo, hi)
-            else:
-                # stale store (a write bypassed the sink hook, or a
-                # crash landed between data write and refresh): drop
-                # the cached snapshot, fall through to on-the-fly.
-                _STORE_CACHE.pop(zone_map_path(table_root), None)
+    rows = _cached_store_rows(spark, table_root)
+    if rows and f"min_{col}" in rows[0].__fields__:
+        live = _walk_files(spark, table_root)
+        if {_norm_file_path(r["file_path"]) for r in rows} == live.keys():
+            keep, files_total = _prune_rows(rows, col, lo, hi)
     if keep is None:
         rows = file_zone_map(spark, table_root, [col]).select(
             "file_path", f"min_{col}", f"max_{col}"

@@ -11,6 +11,12 @@ inference, file listing) and the fill of any cache the query persists
 therefore always sit inside the timed region. Each run executes under
 its own Spark job group ``<key>#<run>``.
 
+A cold run does NOT release the zone-map store's driver snapshot
+(``operators/zonemap.py`` ``_STORE_CACHE``): while the store is
+unchanged, every run after a key's first reuses it. ``scan_file_skipping``
+therefore times a snapshot hit — 2 jobs (the final read's listing and
+schema jobs) against 5 on a miss, which adds the 3-job store read.
+
 A figure is the min over N cold runs. Keys are timed pass-major (every
 key once per pass), so a slow host interval spreads across keys instead
 of wiping out all runs of one key. ``setup`` callables run untimed

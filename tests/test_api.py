@@ -82,3 +82,24 @@ def test_unknown_job_is_404(client):
 
 def test_bad_body_is_422(client):
     assert client.put(f"/partition/{PART}/ingest", json={"bucket_name": "x"}).status_code == 422
+
+
+def test_file_uri_warehouse_ingests_and_reads_back(spark, hive_csv_root, tmp_path):
+    """A ``file://`` warehouse root: the table and its schema file are
+    made through the Hadoop FileSystem, an ingest lands SUCCESS and the
+    hour reads back with every source row."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.api.models import NewLoadJob
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import read_landing_table
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.hive_csv import read_hive_partition
+
+    service = IngestService(spark, "file://" + str(tmp_path))
+    root = service.create_landing_table("landing", "events", EVENTS_SCHEMA)
+    assert service.create_landing_table("landing", "events", EVENTS_SCHEMA) == root
+    job = service.ingest_partition(PART, NewLoadJob(**_body(hive_csv_root)))
+    deadline = time.time() + 120
+    while job.status.name == "RUNNING" and time.time() < deadline:
+        time.sleep(0.2)
+        job = service.job_status(job.job_id)
+    assert job.status.name == "SUCCESS", job.status
+    want = read_hive_partition(spark, hive_csv_root, PART, schema=EVENTS_SCHEMA).count()
+    assert read_landing_table(spark, root, PART).count() == want > 0

@@ -116,67 +116,33 @@ def test_skipping_scan_empty_range(spark):
     assert df.count() == 0
 
 
-def test_norm_path_sql_and_driver_agree(spark):
-    """The coverage check compares store paths normalized on the
-    EXECUTORS (_norm_path_expr) against a driver listing normalized by
-    _norm_file_path — any divergence makes the check spuriously stale
-    and forces full scans forever. Pin byte-equality on the tricky
-    cases: '+' (form decoding would turn it into a space), '%20',
-    '?'/'#' (urlparse would truncate), and scheme://authority forms."""
+def test_norm_path_sql_and_driver_agree():
+    """The coverage check compares store paths (``_metadata.file_path``
+    URIs) normalized by _norm_file_path against the walker's plain
+    paths — a wrong normalization makes the check spuriously stale and
+    forces full scans forever. Pin the exact output on the tricky cases:
+    '+' (form decoding would turn it into a space), '%20', '?'/'#'
+    (urlparse would truncate), and scheme://authority forms."""
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.zonemap import (
         _norm_file_path,
-        _norm_path_expr,
     )
 
-    paths = [
-        "file:///t/day=a+b/part-0.parquet",
-        "/t/day=a+b/part-1.parquet",
-        "file:///t/sp%20ace/part-2.parquet",
-        "hdfs://nn:8020/w/part-3.parquet",
-        "/t/odd?mark/part-4.parquet",
-        "/t/hash#tag/part-5.parquet",
-        "file:/t/single-slash.parquet",
-    ]
-    got = [
-        r["p"]
-        for r in spark.createDataFrame([(p,) for p in paths], "file_path string")
-        .select(_norm_path_expr().alias("p"))
-        .collect()
-    ]
-    assert got == [_norm_file_path(p) for p in paths]
-    assert got[0] == "/t/day=a+b/part-0.parquet"  # '+' survives
-    assert got[2] == "/t/sp ace/part-2.parquet"   # %20 decodes
+    cases = {
+        "file:///t/day=a+b/part-0.parquet": "/t/day=a+b/part-0.parquet",  # '+' survives
+        "/t/day=a+b/part-1.parquet": "/t/day=a+b/part-1.parquet",
+        "file:///t/sp%20ace/part-2.parquet": "/t/sp ace/part-2.parquet",  # %20 decodes
+        "hdfs://nn:8020/w/part-3.parquet": "/w/part-3.parquet",
+        "/t/odd?mark/part-4.parquet": "/t/odd?mark/part-4.parquet",
+        "/t/hash#tag/part-5.parquet": "/t/hash#tag/part-5.parquet",
+        "file:/t/single-slash.parquet": "/t/single-slash.parquet",
+    }
+    assert {p: _norm_file_path(p) for p in cases} == cases
 
 
-def test_skipping_scan_distributed_path_matches_driver_path(spark, events, monkeypatch):
-    """Above the file-count cutoff the candidate list is pruned on the
-    executors (stats rows never collected); forcing that path with a
-    cutoff of 1 must yield the IDENTICAL candidate set,
-    counts, and rows as the cached driver path."""
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import zonemap as ZM
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import (
-        write_partition_overwrite,
-    )
-
-    day1 = events.filter(F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp"))
-    root = tempfile.mkdtemp(prefix="sg_zmdist_")
-    write_partition_overwrite(day1, root, create_never=False)
-    ZM.refresh_zone_map(spark, root, cols=["user_id"])
-
-    lo, hi = 100, 5000
-    d_df, d_read, d_total = ZM.skipping_scan(spark, root, "user_id", lo, hi)
-    monkeypatch.setattr(ZM, "DISTRIBUTED_PRUNE_FILES", 1)
-    x_df, x_read, x_total = ZM.skipping_scan(spark, root, "user_id", lo, hi)
-    assert (x_read, x_total) == (d_read, d_total)
-    assert sorted(x_df.inputFiles()) == sorted(d_df.inputFiles())
-    want = day1.filter(F.col("user_id").between(lo, hi)).count()
-    assert x_df.count() == d_df.count() == want
-
-
-def test_skipping_scan_distributed_falls_back_on_stale_store(spark, events, monkeypatch):
-    """A data file that bypassed the sink hook must fail the distributed
-    coverage check (anti-join, not set equality on the driver) and fall
-    back to on-the-fly stats — every live row found, none dropped."""
+def test_skipping_scan_falls_back_on_stale_store(spark, events):
+    """A data file that bypassed the sink hook must fail the coverage
+    check (store file set vs. the live walk) and fall back to on-the-fly
+    stats — every live row found, none dropped."""
     import glob
     import shutil
 
@@ -194,11 +160,43 @@ def test_skipping_scan_distributed_falls_back_on_stale_store(spark, events, monk
     leaf = sorted(glob.glob(f"{root}/year=*/month=*/day=*/hour=*/part-*.parquet"))[0]
     shutil.copy(leaf, leaf.replace("part-", "part-rogue-"))
 
-    monkeypatch.setattr(ZM, "DISTRIBUTED_PRUNE_FILES", 1)
     df, files_read, files_total = ZM.skipping_scan(spark, root, "user_id", 0, 10**9)
     live_rows = spark.read.parquet(root).count()  # includes the rogue copy
     assert df.count() == live_rows
-    assert files_total == len(ZM._data_file_paths(spark, root))
+    assert files_total == len(ZM._walk_files(spark, root))
+
+
+def test_skipping_scan_snapshot_hit_launches_no_job(spark, events):
+    """A second scan over an unchanged store is served from the driver
+    snapshot: it launches exactly the jobs of its final
+    ``parquet(*keep)`` read built alone, so walking the table, checking
+    the fingerprint and pruning launch none."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import zonemap as ZM
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import (
+        write_partition_overwrite,
+    )
+
+    from .conftest import run_counting_jobs
+
+    day1 = events.filter(F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp"))
+    root = tempfile.mkdtemp(prefix="sg_zmhit_")
+    write_partition_overwrite(day1, root, create_never=False)
+    ZM.refresh_zone_map(spark, root, cols=["user_id"])
+
+    lo, hi = 0, 4
+    ZM.skipping_scan(spark, root, "user_id", lo, hi)  # fills the snapshot
+    snapshot = ZM._STORE_CACHE[ZM.zone_map_path(root)]
+    (df, files_read, files_total), scan_jobs = run_counting_jobs(
+        spark, lambda: ZM.skipping_scan(spark, root, "user_id", lo, hi)
+    )
+    assert ZM._STORE_CACHE[ZM.zone_map_path(root)] is snapshot  # a hit
+    assert 0 < files_read < files_total
+    keep, _ = ZM._prune_rows(snapshot[1], "user_id", lo, hi)
+    _, read_jobs = run_counting_jobs(
+        spark, lambda: spark.read.option("basePath", root).parquet(*keep)
+    )
+    assert scan_jobs == read_jobs
+    assert df.count() == day1.filter(F.col("user_id").between(lo, hi)).count()
 
 
 def test_zone_map_store_incremental_refresh(spark, events):
@@ -365,7 +363,7 @@ def test_zone_map_cache_detects_foreign_refresh(spark, events):
     df, files_read, files_total = ZM.skipping_scan(spark, root, "user_id", 10_000, 10**9)
     assert df.count() == hour_df.count()
     assert 0 < files_read < files_total
-    assert ZM._STORE_CACHE[store][0] == ZM._store_fingerprint(spark, store)
+    assert ZM._STORE_CACHE[store][0] == ZM._walk_files(spark, store)
     assert ZM._STORE_CACHE[store][0] != stale_entry[0]
 
 
