@@ -318,8 +318,11 @@ def skipping_scan(
         ).collect()
         keep, files_total = _prune_rows(rows, col, lo, hi)
     if not keep:
-        empty = spark.read.parquet(table_root).filter(F.lit(False))
-        return empty, 0, files_total
+        # zero rows with the table's schema: read one known file (basePath
+        # keeps the partition columns), not a listing of the whole table
+        first = rows[0]["file_path"] if rows else table_root
+        empty = spark.read.option("basePath", table_root).parquet(first)
+        return empty.filter(F.lit(False)), 0, files_total
     # basePath keeps Hive partition-column discovery intact even though
     # we hand the reader leaf files instead of the table root.
     df = (

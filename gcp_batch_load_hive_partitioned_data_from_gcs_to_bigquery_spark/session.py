@@ -6,13 +6,30 @@ and skew handling, dynamic partition overwrite (the reference's idempotent
 ``WRITE_TRUNCATE`` on a partition decorator — ingestion/tasks.py:24-25,
 ingestion/bigquery_interaction.py:20), UTC session time (the reference
 schedules in Etc/UTC — commands.sh:73).
+
+Local masters also swap the ``file://`` FileSystem for
+``graft.fs.NoForkLocalFileSystem`` (``jvm/graft-fs.jar``, built from
+``jvm/src`` by ``scripts/build_jvm.py``). Without libhadoop, Hadoop's
+stock local FS forks a ``chmod`` process for every file, ``.crc`` and
+directory a write creates — three per written hour; the swap sets the
+mode with one syscall and inherits everything else. It is local-only:
+cluster hosts carry libhadoop, whose NativeIO chmod is already a
+syscall, and executors on other hosts (``local-cluster`` included) would
+not have the jar on their classpath and fail every ``file://`` access
+with ``ClassNotFoundException``. A JVM launched before this call without
+the jar (a plain ``SparkSession`` built first) keeps the stock FS.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+NO_FORK_FS = "graft.fs.NoForkLocalFileSystem"
+NO_FORK_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "graft-fs.jar")
 
 DEFAULT_CONFIGS: dict[str, str] = {
     # Hourly partition replace must touch only the written partitions
@@ -73,10 +90,31 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
 
+    configs = {**DEFAULT_CONFIGS, **(extra_configs or {})}
+    if master == "local" or master.startswith("local["):
+        classpath = configs.get("spark.driver.extraClassPath")
+        configs["spark.driver.extraClassPath"] = os.pathsep.join(filter(None, [classpath, NO_FORK_FS_JAR]))
+        if _jvm_has_class(NO_FORK_FS):
+            configs.setdefault("spark.hadoop.fs.file.impl", NO_FORK_FS)
+
     builder = SparkSession.builder.appName(app_name).master(master)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for key, value in {**DEFAULT_CONFIGS, **(extra_configs or {})}.items():
+    for key, value in configs.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _jvm_has_class(name: str) -> bool:
+    """Whether the session's JVM can load ``name``: a JVM this process
+    is about to launch gets ``spark.driver.extraClassPath``; one already
+    running (or launched by a parent ``spark-submit``) is asked."""
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return "PYSPARK_GATEWAY_PORT" not in os.environ
+    try:
+        gateway.jvm.java.lang.Class.forName(name)
+    except Py4JError:
+        return False
+    return True

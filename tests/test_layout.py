@@ -116,6 +116,39 @@ def test_skipping_scan_empty_range(spark):
     assert df.count() == 0
 
 
+def test_skipping_scan_empty_result_reads_one_file(spark, events):
+    """A scan that prunes every file answers with one known file's
+    schema, not a listing of the whole table: the table's columns with
+    partition columns typed as ints, zero rows, at most one input file,
+    and (served from the store snapshot) at most one file listed."""
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators import zonemap as ZM
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.sink import (
+        write_partition_overwrite,
+    )
+
+    day1 = events.filter(F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp"))
+    root = tempfile.mkdtemp(prefix="sg_zmnone_")
+    write_partition_overwrite(day1, root, create_never=False)
+    schema = spark.read.parquet(root).schema
+    assert [f.dataType.typeName() for f in schema[-4:]] == ["integer"] * 4
+    discovered = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED()
+
+    def scan_none() -> int:
+        before = discovered.getCount()
+        df, files_read, files_total = ZM.skipping_scan(spark, root, "user_id", 10**9, 10**9 + 1)
+        listed = discovered.getCount() - before
+        assert files_read == 0 and files_total > 1
+        assert df.schema == schema
+        assert df.count() == 0
+        assert len(df.inputFiles()) <= 1
+        return listed
+
+    scan_none()  # no store: stats computed on the fly
+    ZM.refresh_zone_map(spark, root, cols=["user_id"])
+    scan_none()  # fills the store snapshot
+    assert scan_none() <= 1
+
+
 def test_norm_path_sql_and_driver_agree():
     """The coverage check compares store paths (``_metadata.file_path``
     URIs) normalized by _norm_file_path against the walker's plain
